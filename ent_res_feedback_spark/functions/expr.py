@@ -31,5 +31,9 @@ def let(col: Column, body: Callable[[Column], Column]) -> Column:
     NULL propagates exactly as without the binding: ``array(col)`` is a
     1-element array holding NULL, and ``body`` receives that NULL.
     ``col`` must have an array-storable type (any Spark SQL type is).
+
+    The result is always NULLABLE, even when ``body`` is not: ``get`` on
+    the transformed array may return NULL as far as the analyzer knows,
+    so binding a non-null expression widens its schema nullability.
     """
     return F.get(F.transform(F.array(col), body), 0)

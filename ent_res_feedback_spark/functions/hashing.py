@@ -23,6 +23,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
+from ent_res_feedback_spark.functions.expr import let
+
 # Mersenne prime 2^61-1: universal-hash modulus. Multipliers are < 2^31 and
 # token hashes < 2^32, so a*h + b < 2^63 — no int64 overflow in either engine.
 MERSENNE61 = (1 << 61) - 1
@@ -60,8 +62,6 @@ def minhash_signature(tokens: Column, num_hashes: int, seed: int = 42) -> Column
     NULL signature. Identical values are expressible in DuckDB (see
     sql_minhash_expr).
     """
-    from ent_res_feedback_spark.functions.expr import let
-
     def _perm(a: int, b: int):
         # closure factory: a single-arg lambda (PySpark dispatches
         # higher-order-function arity on the Python signature)
@@ -75,8 +75,12 @@ def minhash_signature(tokens: Column, num_hashes: int, seed: int = 42) -> Column
             ]
         )
 
-    sig = let(F.transform(F.array_distinct(tokens), token_hash32), sig_of)
-    return F.when(F.size(tokens) > 0, sig)
+    def sig_or_null(toks):
+        sig = let(F.transform(F.array_distinct(toks), token_hash32), sig_of)
+        return F.when(F.size(toks) > 0, sig)
+
+    # ``tokens`` is referenced twice (size guard + hashing): bound once
+    return let(tokens, sig_or_null)
 
 
 def sql_minhash_expr(tokens_sql: str, num_hashes: int, seed: int = 42) -> str:
@@ -163,8 +167,6 @@ def winnowing_fingerprints(
     passes per row — measured 53s for 5k docs at sf0.1); the gram array
     likewise must not be re-hashed per window. Round-6: 53s -> sub-second,
     values unchanged."""
-    from ent_res_feedback_spark.functions.expr import let
-
     empty = F.array().cast("array<long>")
 
     def select_mins(g):

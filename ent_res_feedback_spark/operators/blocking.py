@@ -12,7 +12,9 @@ is implicit and never materialized. This module adds:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from dataclasses import dataclass
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ent_res_feedback_spark.functions import hashing
@@ -27,6 +29,41 @@ def block_census(df: DataFrame, key: str = "block_key") -> DataFrame:
         F.count(F.lit(1)).alias("block_size"),
         (F.count(F.lit(1)) * (F.count(F.lit(1)) - 1) / 2).cast("long").alias("n_pairs"),
     )
+
+
+@dataclass(frozen=True)
+class BlockCensus:
+    """A block census computed once and kept: ``frame`` has the
+    ``block_census`` columns, ``max_block`` is its largest block."""
+
+    frame: DataFrame
+    max_block: int
+
+
+def materialize_census(
+    df: DataFrame, key: str = "block_key", counted: Column | None = None
+) -> BlockCensus:
+    """The census of ``df`` as ONE eager action, with the largest block
+    riding that action as an Observation (no collect of the census).
+
+    Consumers — the pair join's hot-key decision and broadcast, the
+    lineage table — read the materialized frame instead of aggregating
+    ``df`` again. ``counted`` (a predicate over the census row) limits
+    which blocks ``max_block`` considers, e.g. only blocks that pair.
+
+    Materialized with ``localCheckpoint``: local-only like the other
+    ``localCheckpoint`` sites (``cc.py``, ``similarity.py``) — a lost
+    executor loses it — and independent of any cache the caller later
+    unpersists, so the frame stays readable after the job's intermediate
+    frames are released."""
+    obs = Observation()
+    size = F.col("block_size")
+    observed = block_census(df, key).observe(
+        obs,
+        F.max(size if counted is None else F.when(counted, size)).alias("max"),
+    )
+    frame = observed.localCheckpoint()
+    return BlockCensus(frame, int(obs.get["max"] or 0))
 
 
 def filter_min_block_size(

@@ -121,6 +121,12 @@ class CheckpointStore:
     *complete* iteration, so a kill between parquet write and manifest
     commit falls back to the previous iteration — the Iceberg snapshot
     semantics this stands in for.
+
+    The manifest commit is an ``os.replace`` of a temp file, which is
+    atomic only on a POSIX filesystem (local disk, or a mount that keeps
+    POSIX rename semantics). On an object store (S3, GCS) a rename is a
+    copy plus delete, so a kill mid-commit can leave a torn or missing
+    manifest; keep ``root`` on a POSIX filesystem.
     """
 
     def __init__(self, spark: SparkSession, root: str):

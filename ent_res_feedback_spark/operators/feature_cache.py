@@ -30,26 +30,6 @@ from pyspark.sql import functions as F
 from ent_res_feedback_spark.operators.features import FEATURE_COLS
 
 
-def canonicalize_pairs(pairs: DataFrame) -> DataFrame:
-    """Enforce doc_id_1 < doc_id_2 (the cache key orientation). Pair
-    frames from operators/pairs.py are already canonical; this keeps
-    ad-hoc callers safe — swapping ids also swaps every suffixed column."""
-    swapped = F.col("doc_id_1") > F.col("doc_id_2")
-    cols = []
-    for c in pairs.columns:
-        if c.endswith("_1"):
-            cols.append(
-                F.when(swapped, F.col(c[:-2] + "_2")).otherwise(F.col(c)).alias(c)
-            )
-        elif c.endswith("_2"):
-            cols.append(
-                F.when(swapped, F.col(c[:-2] + "_1")).otherwise(F.col(c)).alias(c)
-            )
-        else:
-            cols.append(F.col(c))
-    return pairs.select(*cols)
-
-
 class PairFeatureCache:
     """Parquet-backed feature cache with the reference's semantics."""
 

@@ -20,6 +20,7 @@ north star as a bounded driver-side iteration:
 
 from __future__ import annotations
 
+import warnings
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -123,7 +124,8 @@ def run_feedback_loop(
     The EXPLICIT ``batch_labeler=`` kwarg (or a truthy ``is_batch``
     attribute on ``labeler``) is the supported way to opt into the batch
     form. A single-required-argument ``labeler`` is still routed to the
-    batch path by arity sniffing as a DEPRECATED fallback — ambiguous
+    batch path by arity sniffing as a DEPRECATED fallback (it emits a
+    ``DeprecationWarning``) — ambiguous
     for e.g. ``lambda a, b=None: ...`` scalar labelers (judge round-4
     advice #2), so new callers should pass ``batch_labeler=``.
 
@@ -247,8 +249,8 @@ def _labels_for(spark, labeler, uncertain_rows, is_batch=None) -> list:
     ``is_batch``: True/False when the caller knows (the explicit
     ``batch_labeler=`` kwarg); None falls back to, in order, the
     labeler's ``is_batch`` marker attribute, then DEPRECATED arity
-    sniffing (exactly one required positional parameter => batch),
-    which misreads scalar labelers with defaulted second params."""
+    sniffing (exactly one positional parameter => batch, with a
+    ``DeprecationWarning``)."""
     import inspect
 
     if is_batch is None:
@@ -266,6 +268,13 @@ def _labels_for(spark, labeler, uncertain_rows, is_batch=None) -> list:
             is_batch = len(positional) == 1
         except (TypeError, ValueError):
             is_batch = False
+        if is_batch:
+            warnings.warn(
+                "routing a one-argument labeler= to the batch path by its "
+                "arity is deprecated; pass batch_labeler= instead",
+                DeprecationWarning,
+                stacklevel=3,
+            )
     if not is_batch:
         return [labeler(r["doc_id_1"], r["doc_id_2"]) for r in uncertain_rows]
     pairs_df = spark.createDataFrame(

@@ -29,6 +29,8 @@ from collections import Counter
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ent_res_feedback_spark.functions.expr import let
+
 # Per-language function words (public knowledge; ~30 each). These are the
 # *profile corpora*, not match lists — classification uses their trigram
 # statistics, so inflected content words sharing trigrams still score.
@@ -96,8 +98,6 @@ def _trigrams(text: Column) -> Column:
     The padded/lowered text is let-bound (``expr.let``): referencing the
     regexp_replace chain inside the per-position lambda re-ran it per
     trigram (O(n) regexp passes per row)."""
-    from ent_res_feedback_spark.functions.expr import let
-
     def tri_of(t):
         n = F.length(t)
         return F.when(
@@ -144,8 +144,6 @@ def detect_language_profile(
     the trigrams, so an unbound array re-materialized ~10x per row
     (and each rebuild re-ran the regexp chain per element — measured 9s
     for 5k docs at sf0.1, now sub-second; values unchanged)."""
-    from ent_res_feedback_spark.functions.expr import let
-
     def classify(tris):
         scored = [
             (lang, _lang_score(tris, prof)) for lang, prof in PROFILES.items()

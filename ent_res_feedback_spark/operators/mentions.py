@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ent_res_feedback_spark.functions.expr import let
 from ent_res_feedback_spark.functions.text import (
     NAME_PREFIXES,
     compute_block_key,
@@ -49,8 +50,6 @@ def _strip_honorifics(tokens: Column, rounds: int = 2) -> Column:
     rounds, ~16 copies of the regexp normalization in one expression
     tree. Bound, each round evaluates its input once (values
     unchanged)."""
-    from ent_res_feedback_spark.functions.expr import let
-
     def strip_once(ts: Column) -> Column:
         return F.when(
             (F.size(ts) > 1) & F.element_at(ts, 1).isin(*sorted(NAME_PREFIXES)),

@@ -16,7 +16,10 @@ the classic skew bottleneck at 10^12 docs. Two defenses, both explicit
    hot blocks are hashed into ``s`` buckets; the left side replicates each
    row to bucket-pairs (b, q>=b) and the right side to (p<=b, b), so every
    unordered row pair meets in exactly one (key, p, q) task. A block of n
-   becomes s(s+1)/2 tasks of ~(n/s)^2 work instead of one n^2 task.
+   becomes s(s+1)/2 tasks of ~(n/s)^2 work instead of one n^2 task. The
+   salted join is built only when the block census (materialized once,
+   ``blocking.materialize_census``) has a block above the threshold; with
+   no hot block the plain equi-join runs.
 2. *Pair-cap policy* (optional ``max_block_size``): drop blocks whose pair
    count would exceed the budget — the reference's own giant-block policy
    (data.py:149-173, make_s2and_mini_dataset.py big_block_cutoff).
@@ -27,7 +30,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ent_res_feedback_spark.operators.blocking import block_census
+from ent_res_feedback_spark.operators.blocking import (
+    BlockCensus,
+    block_census,
+    hot_blocks,
+    materialize_census,
+)
 
 
 def _suffix(df: DataFrame, suffix: str, key: str, extra: list[str] | None = None) -> DataFrame:
@@ -37,27 +45,24 @@ def _suffix(df: DataFrame, suffix: str, key: str, extra: list[str] | None = None
     )
 
 
-def _canonical(pairs: DataFrame, id_col: str) -> DataFrame:
-    """Ensure sid1 < sid2 for every emitted pair (the reference's condensed
+def canonicalize_pairs(pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Ensure sid1 < sid2 for every pair (the reference's condensed
     upper-triangular layout, data.py:190-194, reduced to an ordering
-    convention in long format)."""
-    c1, c2 = F.col(id_col + "_1"), F.col(id_col + "_2")
-    swap = c1 > c2
-    out = pairs
-    base = [c[:-2] for c in pairs.columns if c.endswith("_1")]
-    for b in base:
-        out = out.withColumn(
-            f"__{b}_1", F.when(swap, F.col(b + "_2")).otherwise(F.col(b + "_1"))
-        ).withColumn(
-            f"__{b}_2", F.when(swap, F.col(b + "_1")).otherwise(F.col(b + "_2"))
-        )
-    for b in base:
-        out = (
-            out.drop(b + "_1", b + "_2")
-            .withColumnRenamed(f"__{b}_1", b + "_1")
-            .withColumnRenamed(f"__{b}_2", b + "_2")
-        )
-    return out
+    convention in long format). One projection: each ``<c>_1``/``<c>_2``
+    column takes its partner's value when the ids are out of order;
+    column order is unchanged."""
+    swap = F.col(id_col + "_1") > F.col(id_col + "_2")
+    partner = {"_1": "_2", "_2": "_1"}
+
+    def pick(c: str):
+        base, side = c[:-2], c[-2:]
+        if side not in partner or base + partner[side] not in pairs.columns:
+            return F.col(c)
+        return F.when(swap, F.col(base + partner[side])).otherwise(
+            F.col(c)
+        ).alias(c)
+
+    return pairs.select(*[pick(c) for c in pairs.columns])
 
 
 def within_block_pairs(
@@ -67,37 +72,45 @@ def within_block_pairs(
     salt_threshold: int | None = None,
     num_salt_buckets: int = 8,
     max_block_size: int | None = None,
+    census: BlockCensus | None = None,
 ) -> DataFrame:
     """P1 — all unordered within-block pairs, columns suffixed _1/_2.
 
     Plain path: equi-join on ``key`` + ``id_1 < id_2`` theta filter.
-    With ``salt_threshold``: blocks above it take the bucketed-salt path.
-    """
-    census = block_census(df, key)
-    if max_block_size is not None:
-        keep = census.where(F.col("block_size") <= max_block_size).select(key)
-        df = df.join(F.broadcast(keep), key, "inner")
-        census = census.where(F.col("block_size") <= max_block_size)
+    With ``salt_threshold``: if the census has a block above it, the
+    bucketed-salt path; otherwise the plain path. Both paths return the
+    same rows in the same columns.
 
-    if salt_threshold is None:
+    ``census``: the materialized census of ``df``'s blocks (it may also
+    cover keys ``df`` lacks). Without it, a ``salt_threshold`` costs one
+    eager census action here (``materialize_census``).
+    """
+    if census is None and salt_threshold is not None:
+        census = materialize_census(df, key)
+    sizes = census.frame if census is not None else block_census(df, key)
+    if max_block_size is not None:
+        sizes = sizes.where(F.col("block_size") <= max_block_size)
+        df = df.join(F.broadcast(sizes.select(key)), key, "inner")
+
+    # The hot decision reads the census maximum, taken before the cap:
+    # when a capped-out block is the only one above the threshold the
+    # salted path runs needlessly, with the same result.
+    if salt_threshold is None or census.max_block <= salt_threshold:
         left = _suffix(df, "_1", key)
         right = _suffix(df, "_2", key)
         return left.join(right, key).where(
             F.col(id_col + "_1") < F.col(id_col + "_2")
         )
 
-    # UNIFIED salt path (round-6): cold blocks are just hot blocks with
-    # ONE salt bucket, so both take the same exploded self-join — a cold
-    # row sits in bucket 0 and covers only bucket-pair (0, 0), where the
-    # (_p != _q) | (id1 < id2) predicate degenerates to the plain-path
-    # id1 < id2. The former cold/hot split built four separate join
-    # branches whose sides each re-derived the input AND the census: the
-    # physical plan scanned the source 8x and aggregated the census 4x
-    # per pair frame (plans/r06/er_pair_scores_before.txt). One branch =
-    # 2 input scans + 1 census, and at 100 TB that is 6 fewer full-table
-    # passes, not just fewer stages.
+    # Salted path, taken only when some block is hot. Cold blocks are hot
+    # blocks with ONE salt bucket, so both take the same exploded
+    # self-join — a cold row sits in bucket 0 and covers only bucket-pair
+    # (0, 0), where the (_p != _q) | (id1 < id2) predicate degenerates to
+    # the plain-path id1 < id2. Both join sides broadcast-join the hot
+    # keys of the materialized census, so the pair plan aggregates no
+    # census of its own.
     s = num_salt_buckets
-    hot_keys = census.where(F.col("block_size") > salt_threshold).select(
+    hot_keys = hot_blocks(sizes, salt_threshold, key).select(
         key, F.lit(True).alias("_hot")
     )
     flagged = df.join(F.broadcast(hot_keys), key, "left")
@@ -142,7 +155,7 @@ def within_block_pairs(
     )
     # Cross-bucket pairs may arrive id-unordered; canonicalize (a no-op
     # for same-bucket and cold pairs, which are id-ordered already).
-    pairs = _canonical(pairs, id_col)
+    pairs = canonicalize_pairs(pairs, id_col)
     # ids are unique so self-pairs cannot occur; keep a cheap guard
     return pairs.where(F.col(id_col + "_1") != F.col(id_col + "_2"))
 

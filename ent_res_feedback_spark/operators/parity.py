@@ -30,6 +30,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import IntegerType, MapType, StringType
 
 from ent_res_feedback_spark.functions import text as T
+from ent_res_feedback_spark.functions.expr import let
 from ent_res_feedback_spark.functions.strdist import name_text_features
 from ent_res_feedback_spark.functions.text import (
     AFFILIATIONS_STOP_WORDS,
@@ -130,8 +131,6 @@ def preprocess_signatures(
         split+normalize chain ~20x per row per variant (round-6; values
         unchanged). Projected as a struct then flattened from the
         attribute so the whole thing evaluates once."""
-        from ent_res_feedback_spark.functions.expr import let
-
         joined = F.concat_ws(" ", first_col, middle_n)
         raw = F.filter(F.split(joined, " "), lambda t: F.length(t) > 0)
 
@@ -387,8 +386,6 @@ def _counts_map(arr):
     i.e. a normalize chain per element) was re-normalized once per
     distinct value — O(d * n) regexp passes per row (round-6; values
     unchanged)."""
-    from ent_res_feedback_spark.functions.expr import let
-
     def of_arr(a):
         def of_distinct(d):
             return F.map_from_arrays(

@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ent_res_feedback_spark.functions import hashing
+from ent_res_feedback_spark.functions.expr import let
 from ent_res_feedback_spark.functions.text import STOPWORDS, normalize_text_ascii
 
 # high-frequency English function words used by the heuristic
@@ -52,8 +53,6 @@ def bpe_ish_token_count(text: Column) -> Column:
 def stopword_ratio(text: Column) -> Column:
     # token array let-bound: it is referenced 3x (filter + 2x size), and
     # unbound each reference re-split the text (round-6, expr.let)
-    from ent_res_feedback_spark.functions.expr import let
-
     def ratio_of(toks):
         n_stop = F.size(F.filter(toks, lambda t: t.isin(*sorted(STOPWORDS))))
         return F.when(
@@ -64,8 +63,6 @@ def stopword_ratio(text: Column) -> Column:
 
 
 def english_marker_ratio(text: Column) -> Column:
-    from ent_res_feedback_spark.functions.expr import let
-
     def ratio_of(toks):
         n = F.size(F.filter(toks, lambda t: t.isin(*_EN_MARKERS)))
         return F.when(F.size(toks) > 0, n / F.size(toks)).otherwise(F.lit(0.0))
@@ -93,8 +90,6 @@ def quality_score(text: Column) -> Column:
     """Document quality score in [0,1]: blend of length, alpha ratio,
     mean word length sanity, and stopword presence — the standard cheap
     pretraining-quality heuristics, as one column expression."""
-    from ent_res_feedback_spark.functions.expr import let
-
     n_chars = F.length(text)
     alpha_ratio = F.when(
         n_chars > 0,

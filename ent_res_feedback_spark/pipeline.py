@@ -12,7 +12,13 @@ documents(doc_id, spans) ->
 Physical shape (SURVEY.md §3.1 restatement): two wide shuffles (block
 repartition implied by the join, CC iterations), everything else narrow;
 constraint evaluation precedes the pandas UDFs so disallowed pairs never
-pay for featurization; hot keys are salted per the census.
+pay for featurization. The mention frame is extracted once and persisted;
+ONE eager action (``blocking.materialize_census``) aggregates its block
+census and observes the largest block. That census decides the pair
+path — the plain equi-join unless a block exceeds ``salt_threshold``,
+then the salted self-join with the census's hot keys broadcast — and is
+the lineage table, so neither the pair plan nor the lineage write
+aggregates the census again or re-extracts mentions.
 
 Emits a per-block *lineage* table (block -> sizes, pair counts, salt
 decision) — the partition-level lineage metadata the feedback loop uses
@@ -27,7 +33,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ent_res_feedback_spark.operators.blocking import block_census
+from ent_res_feedback_spark.operators.blocking import BlockCensus, materialize_census
 from ent_res_feedback_spark.operators.cc import (
     components_with_singletons,
     connected_components,
@@ -58,28 +64,49 @@ class ERConfig:
     feature_cache_dir: str | None = None
 
 
+def _mentions_and_census(
+    docs: DataFrame, cfg: ERConfig
+) -> tuple[DataFrame, BlockCensus]:
+    """The persisted mention frame (``MENTION_COLS``) and its block
+    census, materialized by one eager action that also fills the cache.
+    Persist: the frame feeds the census and both join sides — without it
+    the unicode-fold UDF subtree re-executes for every consumer (measured
+    2-3x pipeline wall). The caller releases it (``release_persisted``)."""
+    mentions = extract_mentions(
+        docs, ascii_fast_path=cfg.ascii_fast_path
+    ).select(*MENTION_COLS).persist()
+    # nameless documents share block "": it is in the census (and the
+    # lineage) but never pairs, so it does not count toward the hot
+    # decision
+    census = materialize_census(
+        mentions, "block_key", counted=F.length("block_key") > 0
+    )
+    return mentions, census
+
+
 def scored_pair_distances(
     docs: DataFrame,
     config: ERConfig | None = None,
     seeds: DataFrame | None = None,
-    mentions: DataFrame | None = None,
 ) -> DataFrame:
     """documents -> (doc_id_1, doc_id_2, block_key, score, constraint_dist,
     dist). The reusable first half of the pipeline (feedback re-scores it
-    per affected block)."""
+    per affected block). Eager: the block census is materialized here."""
     cfg = config or ERConfig()
-    if mentions is None:
-        mentions = extract_mentions(docs, ascii_fast_path=cfg.ascii_fast_path)
+    mentions, census = _mentions_and_census(docs, cfg)
+    return _scored(mentions, census, docs, cfg, seeds)
+
+
+def _scored(
+    mentions: DataFrame,
+    census: BlockCensus,
+    docs: DataFrame,
+    cfg: ERConfig,
+    seeds: DataFrame | None,
+) -> DataFrame:
     # nameless (e.g. media-only) documents carry no match evidence: exclude
     # from pairing — they'd otherwise all collide in block "" (quadratic).
-    # Persist: this narrow UDF-derived frame feeds the census, the hot/cold
-    # split, AND both join sides — without persistence the unicode-fold UDF
-    # subtree re-executes for every consumer (measured 2-3x pipeline wall).
-    slim = (
-        mentions.select(*MENTION_COLS)
-        .where(F.length("block_key") > 0)
-        .persist()
-    )
+    slim = mentions.where(F.length("block_key") > 0)
     pairs = within_block_pairs(
         slim,
         key="block_key",
@@ -87,6 +114,7 @@ def scored_pair_distances(
         salt_threshold=cfg.salt_threshold,
         num_salt_buckets=cfg.num_salt_buckets,
         max_block_size=cfg.max_block_size,
+        census=census,
     )
     pairs = apply_constraints(pairs, seeds)
 
@@ -121,7 +149,7 @@ def scored_pair_distances(
     # scored frame (checkpoint / sink write), call release_persisted(out)
     # so iterating callers (the feedback loop) don't accumulate cached
     # partitions for the driver lifetime.
-    out._persisted_deps = [slim]  # type: ignore[attr-defined]
+    out._persisted_deps = [mentions]  # type: ignore[attr-defined]
     return out
 
 
@@ -145,8 +173,11 @@ def run_pipeline(
     clusters: (doc_id, cluster_id, spans) — spans are the SOURCE column,
               selected not rebuilt (span-sequence equality by construction)
     scored:   the pair-distance frame
-    lineage:  per-block lineage/metrics table (lazy — costs nothing unless
-              consumed)
+    lineage:  per-block lineage/metrics table: the job's one block census
+              (materialized eagerly, ``localCheckpoint``) plus the salt
+              flag. Writing it reads that census only — no mention
+              re-extraction, no Python — and it stays readable after the
+              job's persisted frames are released.
     metrics:  driver-side dict. Row/cluster counts are OPT-IN
               (``compute_metrics=True``): each is a full extra job, and a
               mandatory stage barrier per run is exactly the fixed cost
@@ -159,8 +190,8 @@ def run_pipeline(
     # scored is consumed ONCE on the main path (edge filter) — persisting it
     # would spill the full pair frame (O(pairs) bytes) for no reuse; callers
     # that iterate (the feedback loop) checkpoint it themselves.
-    mentions = extract_mentions(docs, ascii_fast_path=cfg.ascii_fast_path)
-    scored = scored_pair_distances(docs, cfg, seeds, mentions=mentions)
+    mentions, census = _mentions_and_census(docs, cfg)
+    scored = _scored(mentions, census, docs, cfg, seeds)
     edges = scored.where(F.col("dist") <= (1.0 - cfg.tau)).select(
         F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst")
     )
@@ -173,8 +204,7 @@ def run_pipeline(
         assignments, docs, "doc_id"
     ).withColumnRenamed("component", "cluster_id")
 
-    census = block_census(mentions.select(*MENTION_COLS))
-    lineage = census.withColumn(
+    lineage = census.frame.withColumn(
         "salted",
         (F.col("block_size") > cfg.salt_threshold)
         if cfg.salt_threshold is not None

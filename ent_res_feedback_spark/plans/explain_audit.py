@@ -6,8 +6,12 @@ Usage:  python -m ent_res_feedback_spark.plans.explain_audit [sf_dir]
 
 Checks (grep over the formatted plan):
   - parquet scans carry PushedFilters / narrow ReadSchema (column pruning)
-  - the block-census join on the pair path is a BroadcastHashJoin
-  - the pair self-join is a shuffle join keyed on block_key (+salt cols)
+  - the pair path reads the block census the job materialized once: no
+    pair plan aggregates a census of its own
+  - where a block is hot, the census's hot keys are broadcast-joined and
+    the salted explode runs; a no-skew pair plan has no Generate
+  - the lineage plan reads only the materialized census: no Python node,
+    no aggregate, no exchange
   - constraint evaluation sits BELOW the ArrowEvalPython (pandas UDF)
     node, i.e. constrained pairs never reach the featurizer
   - WholeStageCodegen spans cover the scalar feature expressions
@@ -36,7 +40,12 @@ def audit(spark, sf_dir: str = "/root/testdata/sf0.01") -> dict[str, str]:
         corpus_to_spark,
         generate_corpus,
     )
-    from ent_res_feedback_spark.pipeline import ERConfig, scored_pair_distances
+    from ent_res_feedback_spark.pipeline import (
+        ERConfig,
+        release_persisted,
+        run_pipeline,
+        scored_pair_distances,
+    )
 
     plans: dict[str, str] = {}
 
@@ -46,10 +55,19 @@ def audit(spark, sf_dir: str = "/root/testdata/sf0.01") -> dict[str, str]:
 
     plans["pair_features"] = _formatted(em._er_pair_features(spark, sf_dir))
 
+    # the corpus plants a hot block far above 30 docs and none near 2000,
+    # so these are the hot and the no-skew shapes of the ER chain
     documents, _, _ = generate_corpus(CorpusConfig(n_entities=40, seed=42))
     cdocs = corpus_to_spark(spark, documents)
-    plans["scored_pairs"] = _formatted(
-        scored_pair_distances(cdocs, ERConfig(salt_threshold=30))
+    for name, cfg in (
+        ("scored_pairs", ERConfig(salt_threshold=30)),
+        ("scored_pairs_no_skew", ERConfig()),
+    ):
+        scored = scored_pair_distances(cdocs, cfg)
+        plans[name] = _formatted(scored)
+        release_persisted(scored)
+    plans["lineage"] = _formatted(
+        run_pipeline(cdocs, ERConfig(salt_threshold=30))["lineage"]
     )
 
     from ent_res_feedback_spark.operators.dedup import minhash_lsh_duplicates
@@ -189,9 +207,14 @@ def check(plans: dict[str, str]) -> list[str]:
     if "lang" in scan.split("ReadSchema")[-1]:
         problems.append("scan_pruning: ReadSchema reads unprojected column")
 
+    # Pair plans read the census materialized once per job (a scan of
+    # its localCheckpoint), so none holds a census aggregate — an
+    # in-plan census is aggregated once per join side.
     pf = plans["pair_features"]
-    if "BroadcastHashJoin" not in pf:
-        problems.append("pair_features: census join not broadcast")
+    if "HashAggregate" in pf:
+        problems.append("pair_features: pair plan re-aggregates the census")
+    if "Generate" in pf and "BroadcastHashJoin" not in pf:
+        problems.append("pair_features: salted but census join not broadcast")
     if "ArrowEvalPython" not in pf and "pythonUDF" not in pf:
         problems.append("pair_features: pandas UDF not Arrow-evaluated")
 
@@ -201,6 +224,26 @@ def check(plans: dict[str, str]) -> list[str]:
     # Spark 4 formatted plans mark codegen membership as "[codegen id : N]"
     if "codegen id" not in sp and "AdaptiveSparkPlan" not in sp:
         problems.append("scored_pairs: no codegen spans")
+    # a hot block: the salted explode runs and the census's hot keys are
+    # a broadcast join read from the materialized census
+    if "Generate" not in sp:
+        problems.append("scored_pairs: hot block but no salted explode")
+    if "BroadcastHashJoin LeftOuter" not in sp:
+        problems.append("scored_pairs: census join not broadcast")
+    if "HashAggregate" in sp:
+        problems.append("scored_pairs: pair plan re-aggregates the census")
+    if "at localCheckpoint" not in sp:
+        problems.append("scored_pairs: census not read from its checkpoint")
+    ns = plans["scored_pairs_no_skew"]
+    if "Generate" in ns:
+        problems.append("scored_pairs_no_skew: no-skew pair plan has a Generate")
+    if "HashAggregate" in ns:
+        problems.append("scored_pairs_no_skew: pair plan aggregates a census")
+    lin = plans["lineage"]
+    if "EvalPython" in lin or "MapInPandas" in lin or "PythonUDF" in lin:
+        problems.append("lineage: Python node in the lineage plan")
+    if "HashAggregate" in lin or "Exchange" in lin:
+        problems.append("lineage: lineage re-aggregates the census")
     # The C2 constraint gate (filter unconstrained before the UDF) is
     # rewritten by Catalyst from `isnull(CASE ...)` into the negated CASE
     # conditions, so it can't be string-matched; its effect is asserted

@@ -29,13 +29,10 @@ def test_let_preserves_values(spark):
     assert rows[2].bound is None
 
 
-def test_let_evaluates_once():
+def test_let_evaluates_once(spark):
     # rand() is non-deterministic, so Catalyst cannot merge two separate
     # references; x - x == 0 for every row proves the binding evaluated
     # the input exactly once and reused the value.
-    from ent_res_feedback_spark.session import get_spark
-
-    spark = get_spark("test-expr-let")
     df = spark.range(1000).select(
         let(F.rand(), lambda x: x - x).alias("bound_diff"),
         (F.rand() - F.rand()).alias("unbound_diff"),

@@ -4,14 +4,12 @@ cache + both-orientation lookup semantics)."""
 
 from pyspark.sql import functions as F
 
-from ent_res_feedback_spark.operators.feature_cache import (
-    PairFeatureCache,
-    canonicalize_pairs,
-)
+from ent_res_feedback_spark.operators.feature_cache import PairFeatureCache
 from ent_res_feedback_spark.operators.features import (
     FEATURE_COLS,
     mention_pair_features,
 )
+from ent_res_feedback_spark.operators.pairs import canonicalize_pairs
 
 
 def _pairs(spark, rows):

@@ -240,3 +240,29 @@ def test_scalar_labeler_with_defaulted_param_not_misrouted(spark):
         run_feedback_loop(
             docs, defaulted_scalar, batch_labeler=lambda df: df, max_rounds=1
         )  # both given
+
+
+def test_arity_routed_batch_labeler_warns(spark):
+    """The arity-sniffing route to the batch path is deprecated: a
+    one-argument ``labeler`` still works but warns; a two-argument
+    scalar labeler and an explicit ``is_batch`` route do not warn."""
+    import warnings
+
+    from pyspark.sql import Row
+
+    from ent_res_feedback_spark.operators.feedback import _labels_for
+
+    rows = [Row(doc_id_1="a", doc_id_2="b"), Row(doc_id_1="a", doc_id_2="c")]
+
+    def batch(pairs_df):
+        return pairs_df.select(
+            "doc_id_1", "doc_id_2",
+            (F.col("doc_id_2") == "b").cast("int").alias("label"),
+        )
+
+    with pytest.warns(DeprecationWarning, match="batch_labeler="):
+        assert _labels_for(spark, batch, rows) == [1, 0]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", DeprecationWarning)
+        assert _labels_for(spark, batch, rows, is_batch=True) == [1, 0]
+        assert _labels_for(spark, lambda a, b: int(b == "b"), rows) == [1, 0]

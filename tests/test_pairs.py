@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from ent_res_feedback_spark.operators.blocking import (
     block_census,
     filter_min_block_size,
+    materialize_census,
 )
 from ent_res_feedback_spark.operators.pairs import within_block_pairs
 
@@ -90,3 +91,49 @@ def test_max_block_size_cap(spark):
     }
     sizes = {r["block_key"]: r["block_size"] for r in block_census(df).collect()}
     assert all(sizes[b] <= 20 for b in blocks_in_out)
+
+
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_no_hot_block_takes_plain_join(spark):
+    """A threshold above the largest block builds the plain equi-join:
+    the same rows and columns as ``salt_threshold=None``, no explode."""
+    df = _mkdocs(spark, n=200)
+    plain = within_block_pairs(df)
+    cold = within_block_pairs(df, salt_threshold=10_000, num_salt_buckets=4)
+    assert cold.columns == plain.columns
+    assert sorted(map(tuple, cold.collect())) == sorted(
+        map(tuple, plain.collect())
+    )
+    assert "Generate" not in _optimized_plan(cold)
+
+
+def test_hot_block_reads_census_once(spark):
+    """With a hot block the salted path runs, and the census is aggregated
+    once — by the eager census action — not once per join side: both
+    sides read the materialized census, so the pair plan holds no
+    aggregate. The salted rows and columns equal the plain path's."""
+    df = _mkdocs(spark, n=200)
+    census = materialize_census(df)
+    sizes = {r["block_key"]: r["block_size"] for r in census.frame.collect()}
+    assert sizes == {
+        r["block_key"]: r["block_size"] for r in block_census(df).collect()
+    }
+    assert census.max_block == max(sizes.values()) > 20
+    salted = within_block_pairs(
+        df, salt_threshold=20, num_salt_buckets=4, census=census
+    )
+    plan = _optimized_plan(salted)
+    assert "Generate" in plan
+    assert "Aggregate" not in plan
+    plain = within_block_pairs(df)
+    assert salted.columns == plain.columns
+    assert sorted(map(tuple, salted.collect())) == sorted(
+        map(tuple, plain.collect())
+    )
+    # without a census argument the call materializes its own, once
+    assert "Aggregate" not in _optimized_plan(
+        within_block_pairs(df, salt_threshold=20, num_salt_buckets=4)
+    )

@@ -8,6 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from ent_res_feedback_spark.corpus import CorpusConfig, corpus_to_spark, generate_corpus
+from ent_res_feedback_spark.operators.blocking import block_census
+from ent_res_feedback_spark.operators.mentions import extract_mentions
 from ent_res_feedback_spark.operators.metrics import b3, pairwise_prf
 from ent_res_feedback_spark.oracle import cluster_documents_py, pairwise_f1_py
 from ent_res_feedback_spark.pipeline import ERConfig, run_pipeline
@@ -81,6 +83,25 @@ def test_lineage_marks_hot_block(spark_result):
     assert len(salted) >= 1  # the planted hot block
     hot = max(lin.values(), key=lambda r: r["block_size"])
     assert hot["salted"]
+
+
+def test_lineage_is_the_job_census(spark, corpus, spark_result):
+    """The lineage is the job's one materialized census plus the salt
+    flag: the same rows as a fresh census of the mentions, read without
+    re-extracting mentions (no Python node, no aggregate in its plan)."""
+    documents, _, _ = corpus
+    docs = corpus_to_spark(spark, documents)
+    lineage = spark_result["lineage"]
+    expected = block_census(extract_mentions(docs)).withColumn(
+        "salted", F.col("block_size") > 30
+    )
+    assert lineage.columns == expected.columns
+    assert sorted(map(tuple, lineage.collect())) == sorted(
+        map(tuple, expected.collect())
+    )
+    plan = lineage._jdf.queryExecution().toString()
+    assert "EvalPython" not in plan
+    assert "Aggregate" not in plan
 
 
 def test_constraints_gate_before_udf(spark, corpus):
