@@ -34,36 +34,50 @@ def block_census(df: DataFrame, key: str = "block_key") -> DataFrame:
 @dataclass(frozen=True)
 class BlockCensus:
     """A block census computed once and kept: ``frame`` has the
-    ``block_census`` columns, ``max_block`` is its largest block."""
+    ``block_census`` columns, ``max_block`` is its largest block and
+    ``pairs`` the total within-block pair count of its blocks — an upper
+    bound on the pairs (and so on the edges) a within-block join of the
+    counted blocks can produce."""
 
     frame: DataFrame
     max_block: int
+    pairs: int
 
 
 def materialize_census(
     df: DataFrame, key: str = "block_key", counted: Column | None = None
 ) -> BlockCensus:
     """The census of ``df`` as ONE eager action, with the largest block
-    riding that action as an Observation (no collect of the census).
+    and the total pair count riding that action as an Observation (no
+    collect of the census).
 
     Consumers — the pair join's hot-key decision and broadcast, the
-    lineage table — read the materialized frame instead of aggregating
-    ``df`` again. ``counted`` (a predicate over the census row) limits
-    which blocks ``max_block`` considers, e.g. only blocks that pair.
+    lineage table, the CC edge bound — read the materialized frame or
+    the observed figures instead of aggregating ``df`` again.
+    ``counted`` (a predicate over the census row) limits which blocks
+    ``max_block`` and ``pairs`` consider, e.g. only blocks that pair.
 
     Materialized with ``localCheckpoint``: local-only like the other
     ``localCheckpoint`` sites (``cc.py``, ``similarity.py``) — a lost
     executor loses it — and independent of any cache the caller later
     unpersists, so the frame stays readable after the job's intermediate
     frames are released."""
+
+    def only_counted(c: Column) -> Column:
+        return c if counted is None else F.when(counted, c)
+
     obs = Observation()
-    size = F.col("block_size")
     observed = block_census(df, key).observe(
         obs,
-        F.max(size if counted is None else F.when(counted, size)).alias("max"),
+        F.max(only_counted(F.col("block_size"))).alias("max"),
+        # decimal: a long sum of pair counts overflows under ANSI first
+        F.sum(only_counted(F.col("n_pairs")).cast("decimal(38,0)")).alias(
+            "pairs"
+        ),
     )
     frame = observed.localCheckpoint()
-    return BlockCensus(frame, int(obs.get["max"] or 0))
+    vals = obs.get
+    return BlockCensus(frame, int(vals["max"] or 0), int(vals["pairs"] or 0))
 
 
 def filter_min_block_size(

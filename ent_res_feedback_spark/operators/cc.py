@@ -19,6 +19,19 @@ DataFrame lineage (no exponential plan growth) and provides exact resume:
 killing the job mid-iteration and re-running reproduces identical
 clusters, which tests/test_cc.py asserts.
 
+Once an edge set is bounded — at most ``finish_edge_threshold`` edges
+(5M by default) — the components are finished on the driver instead:
+the edges are collected with ``toArrow()``, solved by a vectorized
+union-find, and returned as local data (``createDataFrame``), with no
+Python worker task. The bound comes either from a count (the input or a
+star-round survivor, after it is materialized) or, before any action,
+from the caller's ``edge_bound``: ``run_pipeline`` passes the block
+census's within-block pair count, which no edge set can exceed. A bounded
+input skips the store entirely (no iteration -1 write, no resume); the
+store is written only for edge sets above the threshold, which are the
+ones worth resuming. The finish's driver memory is bounded by the
+threshold: ~130 bytes per long-id edge at peak (``_finish_on_driver``).
+
 Cluster ids are the component-minimum node id — deterministic, no
 monotonically_increasing_id anywhere.
 """
@@ -182,66 +195,84 @@ class CheckpointStore:
                 shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
 
 
-def _finish_components(edges: DataFrame) -> DataFrame:
-    """Exact CC of a SMALL (census-bounded) edge frame in ONE task: the
-    round-6 'per-block finish' — once the surviving edge set is below
-    ``finish_edge_threshold`` the iterative large/small-star loop costs
-    more in fixed per-super-step driver planning + stage barriers than
-    the whole remaining graph costs to solve outright (measured ~60s of
-    fixed driver tail in the scaling protocol, BENCH/ANALYSIS.md).
+def _min_label(a, b, n: int):
+    """Component labels of ``n`` nodes joined by the code edges
+    ``a[i] -- b[i]``: a vectorized Shiloach-Vishkin union-find (numpy
+    min-hooking plus full pointer shortcutting, O(E log V), no per-edge
+    Python loop). Each node ends pointing at the SMALLEST code of its
+    component: a root only ever hooks under a smaller code of its own
+    component, so the component minimum stays a root and, once every
+    edge has equal ends, is the only one."""
+    import numpy as np
 
-    ``coalesce(1)`` (narrow — the input is already materialized) streams
-    every edge into one ``mapInPandas`` task; components are solved with
-    a vectorized Shiloach-Vishkin union-find (numpy min-hooking +
-    pointer shortcutting, O(E log V) with no per-edge Python loop), and
-    labels are the per-component MIN id — identical to the star loop's
-    fixpoint labeling. Memory is bounded by the threshold (~16 bytes per
-    edge at the 5M default).
+    parent = np.arange(n, dtype=a.dtype)
+    while True:
+        pa, pb = parent[a], parent[b]
+        np.minimum.at(parent, np.maximum(pa, pb), np.minimum(pa, pb))
+        del pa, pb
+        while True:  # full pointer shortcut
+            pp = parent[parent]
+            if np.array_equal(pp, parent):
+                break
+            parent = pp
+        if np.array_equal(parent[a], parent[b]):
+            return parent
+
+
+def _finish_on_driver(edges: DataFrame) -> DataFrame:
+    """Exact CC of an edge frame known to be SMALL (at most
+    ``finish_edge_threshold`` edges), solved on the driver.
+
+    The edges are collected with ``toArrow()``. Both id columns are
+    dictionary-encoded together and the dictionary is sorted, so the
+    codes order like the ids (Arrow orders strings by bytes, as Spark
+    does) and a component's minimum code is its minimum id: the labels
+    equal the star loop's fixpoint labels for long and string ids alike.
+    ``_min_label`` solves the codes; the ``(id, component)`` assignments
+    go back as local data with ``createDataFrame`` — no Python worker
+    task, and no executor holds them, so a lost executor loses nothing.
+
+    Driver (Python process) memory, measured on 2M random long-id edges
+    over 1.8M nodes: live buffers peak at ~50 bytes per edge (16 of
+    collected ids, a 16-byte combined copy, 8 of int32 codes, ~16 of
+    kernel temporaries, plus the per-node dictionary and labels), and
+    resident memory grows by ~130 bytes per edge once the allocator's
+    slack is counted — ~0.65 GB at the 5M-edge default threshold. String
+    ids add their bytes twice (collected and combined).
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import StructField, StructType
 
-    src_t = edges.schema["src"].dataType.simpleString()
-    out_schema = f"id {src_t}, component {src_t}"
-
-    def kernel(batches):
-        srcs, dsts = [], []
-        for pdf in batches:
-            if len(pdf):
-                srcs.append(pdf["src"])
-                dsts.append(pdf["dst"])
-        if not srcs:
-            return
-        src = pd.concat(srcs, ignore_index=True)
-        dst = pd.concat(dsts, ignore_index=True)
-        codes, uniques = pd.factorize(
-            pd.concat([src, dst], ignore_index=True)
-        )
-        m = len(src)
-        n = len(uniques)
-        a, b = codes[:m], codes[m:]
-        parent = np.arange(n, dtype=np.int64)
-        while True:
-            pa, pb = parent[a], parent[b]
-            hi = np.maximum(pa, pb)
-            lo = np.minimum(pa, pb)
-            np.minimum.at(parent, hi, lo)
-            while True:  # full pointer shortcut
-                pp = parent[parent]
-                if np.array_equal(pp, parent):
-                    break
-                parent = pp
-            if np.array_equal(parent[a], parent[b]):
-                break
-        # component label = min member id (uniques is appearance-ordered,
-        # so group the actual ids by root and take the min)
-        vals = pd.Series(uniques)
-        comp = vals.groupby(parent).transform("min")
-        yield pd.DataFrame({"id": vals, "component": comp})
-
-    return edges.select("src", "dst").coalesce(1).mapInPandas(
-        kernel, out_schema
+    spark = edges.sparkSession
+    id_type = edges.schema["src"].dataType
+    schema = StructType(
+        [StructField("id", id_type), StructField("component", id_type)]
     )
+    table = edges.select("src", "dst").toArrow()
+    m = table.num_rows
+    if m == 0:
+        return spark.createDataFrame([], schema)
+    ids = pa.chunked_array(
+        table.column("src").chunks + table.column("dst").chunks
+    ).combine_chunks()
+    del table
+    encoded = ids.dictionary_encode()
+    del ids
+    order = pc.sort_indices(encoded.dictionary).to_numpy()
+    n = len(order)
+    dtype = np.int32 if n < 2**31 else np.int64
+    rank = np.empty(n, dtype=dtype)
+    rank[order] = np.arange(n, dtype=dtype)
+    codes = rank[encoded.indices.to_numpy()]
+    uniques = encoded.dictionary.take(pa.array(order))
+    del encoded, rank, order
+    parent = _min_label(codes[:m], codes[m:], n)
+    out = pa.table(
+        {"id": uniques, "component": uniques.take(pa.array(parent))}
+    )
+    return spark.createDataFrame(out, schema)
 
 
 def connected_components(
@@ -250,6 +281,7 @@ def connected_components(
     max_iterations: int = 50,
     checkpoint_interval: int = 1,
     finish_edge_threshold: int | None = 5_000_000,
+    edge_bound: int | None = None,
 ) -> DataFrame:
     """Compute connected components of an undirected edge list
     (columns ``src``, ``dst``) -> assignments ``(id, component)`` where
@@ -282,25 +314,53 @@ def connected_components(
 
     ``finish_edge_threshold`` (round-6): once the current edge set —
     input or any super-step survivor — is at or below this count, the
-    remaining components are solved exactly in ONE task
-    (``_finish_components``) instead of iterating more star rounds.
-    Star rounds preserve the node set and component structure, so the
-    result is identical at whatever point the switch happens
-    (property-tested); what changes is the cost model — the star loop's
-    per-super-step driver planning + ~10 AQE stage jobs are a FIXED tail
-    that dominates once the data no longer does (the measured ~60s
-    scaling-protocol tail, BENCH/ANALYSIS.md). The default (5M edges ~
-    80 MB of task state) is data-sized, not cluster-sized: a 10^12-edge
-    graph still iterates star rounds until the survivor set is bounded,
-    then finishes. ``None`` disables.
+    remaining components are solved exactly on the driver
+    (``_finish_on_driver``: the edges are collected with ``toArrow()``;
+    ~130 bytes of driver memory per long-id edge at peak, ~0.65 GB at the
+    5M default) instead of iterating more star rounds. Star rounds
+    preserve the node set and component structure, so the result is
+    identical at whatever point the switch happens (property-tested);
+    what changes is the cost model — the star loop's per-super-step
+    driver planning + ~10 AQE stage jobs are a FIXED tail that dominates
+    once the data no longer does (the measured ~60s scaling-protocol
+    tail, BENCH/ANALYSIS.md). The threshold is data-sized, not
+    cluster-sized: a 10^12-edge graph still iterates star rounds until
+    the survivor set is bounded, then finishes. ``None`` disables.
+
+    ``edge_bound``: an upper bound on the edge count known before any
+    action — ``run_pipeline`` passes its block census's within-block
+    pair count, since every edge is a within-block pair. At or below
+    ``finish_edge_threshold`` the input is neither materialized nor
+    deduplicated, and the store is neither read nor written: the edges
+    go straight to the driver finish, so a re-run recomputes them. Above
+    it (or without a bound) the input is materialized first — written to
+    the store as iteration -1 with ``checkpoint_dir``, else a
+    ``localCheckpoint`` — and finished there when its counted size is
+    small enough, or iterated with fingerprint resume otherwise.
     """
     spark = edges.sparkSession
-    store = CheckpointStore(spark, checkpoint_dir) if checkpoint_dir else None
     k = max(1, checkpoint_interval)
+
+    # Early finish: star rounds preserve the node set and the component
+    # structure, so an exact union-find over the CURRENT edge set yields
+    # the identical (id, min-id component) assignment at any point — take
+    # it as soon as the edge count is bounded instead of paying
+    # per-super-step fixed driver costs (threshold-invariance is
+    # property-tested in tests/test_cc.py).
+    def _small_enough(n: int | None) -> bool:
+        return (
+            finish_edge_threshold is not None
+            and n is not None
+            and n <= finish_edge_threshold
+        )
 
     # id type is generic (string or numeric) — the algorithm only needs a
     # total order; component id = the minimum under that order.
-    cur = edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
+    cur = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
+    if _small_enough(edge_bound):
+        return _finish_on_driver(cur)
+    cur = cur.distinct()
+    store = CheckpointStore(spark, checkpoint_dir) if checkpoint_dir else None
 
     start_iter = 0
     prev_sum: tuple[int, int] | None = None
@@ -337,21 +397,8 @@ def connected_components(
         cur = observed.localCheckpoint()
         n_cur = int(obs.get["n"])
 
-    # Early finish: star rounds preserve the node set and the component
-    # structure, so an exact one-task union-find over the CURRENT edge
-    # set yields the identical (id, min-id component) assignment at any
-    # point — take it as soon as the edge count is bounded instead of
-    # paying per-super-step fixed driver costs (threshold-invariance is
-    # property-tested in tests/test_cc.py).
-    def _small_enough(n: int | None) -> bool:
-        return (
-            finish_edge_threshold is not None
-            and n is not None
-            and n <= finish_edge_threshold
-        )
-
     if _small_enough(n_cur):
-        return _finish_components(cur)
+        return _finish_on_driver(cur)
 
     for i in range(start_iter, max_iterations):
         nxt = cur
@@ -370,7 +417,7 @@ def connected_components(
         prev_sum = (n, h)
         cur = nxt
         if _small_enough(n):
-            return _finish_components(cur)
+            return _finish_on_driver(cur)
     else:
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} iterations"

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ent_res_feedback_spark.functions.expr import once_per_context
 from ent_res_feedback_spark.operators.features import middle_compatible
 
 LOW_DISTANCE = 0.0        # 'require'  (reference consts.py:43)
@@ -35,9 +36,10 @@ def join_seed_constraints(pairs: DataFrame, seeds: DataFrame | None) -> DataFram
     cross-seed disallow: both sides seeded into DIFFERENT require-groups
     (reference data.py:837-842)."""
     if seeds is None:
-        return pairs.withColumn("seed_require", F.lit(False)).withColumn(
-            "seed_disallow", F.lit(False)
-        ).withColumn("cross_seed_disallow", F.lit(False))
+        false = _false()
+        return pairs.withColumn("seed_require", false).withColumn(
+            "seed_disallow", false
+        ).withColumn("cross_seed_disallow", false)
 
     canon = seeds.select(
         F.least("doc_id_1", "doc_id_2").alias("doc_id_1"),
@@ -153,7 +155,7 @@ def join_alias_flags(pairs: DataFrame, alias_pairs: DataFrame | None) -> DataFra
     ``known_alias`` boolean over (first_1, first_2), both orientations
     (the reference probes the tuple set both ways, data.py:854-862)."""
     if alias_pairs is None:
-        return pairs.withColumn("known_alias", F.lit(False))
+        return pairs.withColumn("known_alias", _false())
     canon = (
         alias_pairs.select(F.col("name_1").alias("fa"), F.col("name_2").alias("fb"))
         .unionByName(
@@ -172,11 +174,19 @@ def join_alias_flags(pairs: DataFrame, alias_pairs: DataFrame | None) -> DataFra
     return out.fillna({"known_alias": False})
 
 
+@once_per_context
+def _false() -> Column:
+    """The no-seed / no-alias flag value, built once per SparkContext."""
+    return F.lit(False)
+
+
 def constraint_distance(
     alias_pairs: DataFrame | None = None,
 ) -> Column:
     """The C1 precedence chain as one column expression over a pair frame
     that already has seed flags and mention fields (_1/_2 suffixed).
+    Built once per SparkContext for each of the two shapes it has: with
+    and without an alias table (``_constraint_chain``).
 
     Order (reference data.py:827-891):
       seed disallow -> 1e4
@@ -188,11 +198,16 @@ def constraint_distance(
       conflicting middle initials -> 1e4
       else NULL (model decides)
     """
+    return _constraint_chain(alias_pairs is not None)
+
+
+@once_per_context
+def _constraint_chain(with_alias: bool) -> Column:
     f1, f2 = F.col("first_1"), F.col("first_2")
     l1, l2 = F.col("last_1"), F.col("last_2")
     known_alias = (
         F.coalesce(F.col("known_alias"), F.lit(False))
-        if alias_pairs is not None
+        if with_alias
         else F.lit(False)
     )
     return (

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ent_res_feedback_spark.functions.expr import once_per_context
 from ent_res_feedback_spark.functions.strdist import (
     jaro_winkler,
     levenshtein_norm,
@@ -61,17 +62,10 @@ def _tokens(col: Column) -> Column:
     return F.filter(F.split(col, " "), lambda t: F.length(t) > 0)
 
 
-def mention_pair_features(
-    pairs: DataFrame,
-    fill_neutral: bool = True,
-    with_embedding: bool = False,
-) -> DataFrame:
-    """Adds FEATURE_COLS (+ ``emb_cosine`` when requested) to a pair frame
-    with first/middle/affil_norm columns suffixed _1/_2.
-
-    String-distance features gate on len>1 (reference text.py:363:
-    initial-only names carry no distance evidence) and fill NULL->0.5.
-    """
+@once_per_context
+def _pair_feature_columns(fill_neutral: bool, with_embedding: bool) -> tuple:
+    """FEATURE_COLS as aliased columns, plus the ``emb_cosine`` column
+    (None without ``with_embedding``) — built once per SparkContext."""
     f1, f2 = F.col("first_1"), F.col("first_2")
     gate = (F.length(f1) > 1) & (F.length(f2) > 1)
 
@@ -86,20 +80,37 @@ def mention_pair_features(
         pref = F.coalesce(pref, F.lit(NEUTRAL))
         affil = F.coalesce(affil, F.lit(NEUTRAL))
 
-    out = pairs.select(
-        "*",
+    features = (
         jw.alias("jw_first"),
         lev.alias("lev_first"),
         pref.alias("prefix_first"),
         middle_compatible(F.col("middle_1"), F.col("middle_2")).alias("middle_compat"),
         affil.alias("affil_jaccard"),
     )
+    emb = None
     if with_embedding:
-        out = out.withColumn(
-            "emb_cosine",
-            F.when(
-                F.col("embedding_1").isNotNull() & F.col("embedding_2").isNotNull(),
-                cosine_sim(F.col("embedding_1"), F.col("embedding_2")),
-            ),
+        emb = F.when(
+            F.col("embedding_1").isNotNull() & F.col("embedding_2").isNotNull(),
+            cosine_sim(F.col("embedding_1"), F.col("embedding_2")),
         )
+    return features, emb
+
+
+def mention_pair_features(
+    pairs: DataFrame,
+    fill_neutral: bool = True,
+    with_embedding: bool = False,
+) -> DataFrame:
+    """Adds FEATURE_COLS (+ ``emb_cosine`` when requested) to a pair frame
+    with first/middle/affil_norm columns suffixed _1/_2.
+
+    String-distance features gate on len>1 (reference text.py:363:
+    initial-only names carry no distance evidence) and fill NULL->0.5.
+    The expression trees are built once per SparkContext
+    (``_pair_feature_columns``).
+    """
+    features, emb = _pair_feature_columns(fill_neutral, with_embedding)
+    out = pairs.select("*", *features)
+    if with_embedding:
+        out = out.withColumn("emb_cosine", emb)
     return out

@@ -23,7 +23,7 @@ from __future__ import annotations
 import warnings
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ent_res_feedback_spark.operators.cc import (
@@ -34,6 +34,7 @@ from ent_res_feedback_spark.pipeline import (
     ERConfig,
     release_persisted,
     scored_pair_distances,
+    tau_edges,
 )
 
 
@@ -156,9 +157,9 @@ def run_feedback_loop(
     state = FeedbackState()
 
     raw = scored_pair_distances(docs, cfg, seeds=None)
-    scored = raw.localCheckpoint()
+    scored, n_scored = _checkpointed(raw)
     release_persisted(raw)  # checkpoint done — drop the cached mentions
-    clusters = _cluster_from(scored, docs, cfg)
+    clusters = _cluster_from(scored, docs, cfg, n_scored)
     state.history.append({"round": 0, "metric": metric_fn(clusters) if metric_fn else None})
 
     for rnd in range(1, max_rounds + 1):
@@ -193,10 +194,10 @@ def run_feedback_loop(
             cfg = _refit_weights(docs, cfg, state)
             # weights moved globally: full re-score this round
             raw = scored_pair_distances(docs, cfg, seeds=seeds_df)
-            scored = raw.localCheckpoint()
+            scored, n_scored = _checkpointed(raw)
             release_persisted(raw)
             state.touched_blocks.clear()  # lineage restarts from the refit
-            clusters = _cluster_from(scored, docs, cfg)
+            clusters = _cluster_from(scored, docs, cfg, n_scored)
             m = metric_fn(clusters) if metric_fn else None
             state.rounds = rnd
             state.history.append(
@@ -216,9 +217,8 @@ def run_feedback_loop(
         touched_df = spark.createDataFrame(
             [(b,) for b in touched], "block_key string"
         )
-        affected_docs = docs.join(
-            _docs_in_blocks(docs, cfg, touched_df), "doc_id", "left_semi"
-        )
+        affected = F.broadcast(_docs_in_blocks(scored, touched_df))
+        affected_docs = docs.join(affected, "doc_id", "left_semi")
         rescored = scored_pair_distances(affected_docs, cfg, seeds=seeds_df)
         untouched = scored.join(
             F.broadcast(touched_df), "block_key", "left_anti"
@@ -226,10 +226,10 @@ def run_feedback_loop(
         # localCheckpoint() each round flattens the union lineage: the
         # checkpointed RDD is the new root, so plan depth stays O(1) in
         # the number of rounds rather than rounds-linear
-        scored = untouched.unionByName(rescored).localCheckpoint()
+        scored, n_scored = _checkpointed(untouched.unionByName(rescored))
         release_persisted(rescored)  # per-round: no cache accumulation
 
-        clusters = _cluster_from(scored, docs, cfg)
+        clusters = _cluster_from(scored, docs, cfg, n_scored)
         m = metric_fn(clusters) if metric_fn else None
         state.rounds = rnd
         state.history.append(
@@ -290,22 +290,39 @@ def _labels_for(spark, labeler, uncertain_rows, is_batch=None) -> list:
     return [out.get((r["doc_id_1"], r["doc_id_2"])) for r in uncertain_rows]
 
 
-def _docs_in_blocks(
-    docs: DataFrame, cfg: ERConfig, blocks_df: DataFrame
+def _docs_in_blocks(scored: DataFrame, blocks_df: DataFrame) -> DataFrame:
+    """The doc ids (repeated) of ``blocks_df``'s blocks, read from the
+    round's checkpointed pair frame in one scan instead of re-extracting
+    every document's mentions: every doc of a block with two or more docs
+    is in one of that block's pairs, and a block without pairs is never
+    touched (its pairs are where labels come from). No Python node.
+
+    The caller broadcasts it into a semi-join: it holds the docs of the
+    touched blocks only (feedback-bounded), and a shuffled semi-join
+    would hand the docs' shuffle partitioning to every frame of the
+    re-score."""
+    hit = scored.join(F.broadcast(blocks_df), "block_key", "left_semi")
+    return hit.select(F.explode(F.array("doc_id_1", "doc_id_2")).alias("doc_id"))
+
+
+def _checkpointed(scored: DataFrame) -> tuple[DataFrame, int]:
+    """``scored`` materialized with ``localCheckpoint``, and its row count
+    riding that action as an Observation (no extra job): a bound on the
+    edges ``_cluster_from`` can see."""
+    obs = Observation()
+    out = scored.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    return out, int(obs.get["n"])
+
+
+def _cluster_from(
+    scored: DataFrame, docs: DataFrame, cfg: ERConfig, n_scored: int
 ) -> DataFrame:
-    from ent_res_feedback_spark.operators.mentions import extract_mentions
-
-    m = extract_mentions(docs, ascii_fast_path=cfg.ascii_fast_path)
-    return m.join(F.broadcast(blocks_df), "block_key", "left_semi").select(
-        "doc_id"
+    # the edges are a subset of the scored pairs, so their count bounds
+    # the edges: at or below CC's threshold it finishes on the driver
+    # without materializing them first
+    assignments = connected_components(
+        tau_edges(scored, cfg.tau), edge_bound=n_scored
     )
-
-
-def _cluster_from(scored: DataFrame, docs: DataFrame, cfg: ERConfig) -> DataFrame:
-    edges = scored.where(F.col("dist") <= (1.0 - cfg.tau)).select(
-        F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst")
-    )
-    assignments = connected_components(edges)
     return components_with_singletons(assignments, docs.select("doc_id"), "doc_id").withColumnRenamed(
         "component", "cluster_id"
     )

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ent_res_feedback_spark.functions.expr import let
+from ent_res_feedback_spark.functions.expr import let, once_per_context
 from ent_res_feedback_spark.functions.text import (
     NAME_PREFIXES,
     compute_block_key,
@@ -62,58 +62,67 @@ def _strip_honorifics(tokens: Column, rounds: int = 2) -> Column:
     return out
 
 
-def extract_mentions(docs: DataFrame, ascii_fast_path: bool = False) -> DataFrame:
-    """documents -> mentions frame with derived name fields + block key.
-
-    ``ascii_fast_path=True`` skips the unicode-fold pandas UDF (pure JVM
-    plan) — used by oracle-checked queries and safe whenever the corpus is
-    known-ASCII.
-    """
+@once_per_context
+def _mention_columns(ascii_fast_path: bool) -> tuple:
+    """The extraction's static expression trees, in the order
+    ``extract_mentions`` applies them: the sorted text spans, the three
+    raw fields read from them, the name tokens, the five derived fields
+    and the block key."""
     norm = normalize_text_ascii if ascii_fast_path else normalize_text
-    ts = _text_spans(F.col("spans"))
-    df = docs.withColumn("_ts", ts)
-    df = df.select(
-        "*",
+    ts = F.col("_ts")
+    raw = (
         # try-semantics: media-only documents (no text span) yield NULL
         # name -> empty block key -> excluded from pairing (singletons)
-        F.when(F.size("_ts") > 0, F.element_at(F.col("_ts"), 1)["text"]).alias(
-            "name_raw"
-        ),
-        F.when(F.size("_ts") > 1, F.element_at(F.col("_ts"), 2)["text"]).alias(
-            "affil_raw"
-        ),
+        F.when(F.size(ts) > 0, F.element_at(ts, 1)["text"]).alias("name_raw"),
+        F.when(F.size(ts) > 1, F.element_at(ts, 2)["text"]).alias("affil_raw"),
         F.when(
-            F.size("_ts") > 2,
+            F.size(ts) > 2,
             F.concat_ws(
                 " ",
                 F.transform(
-                    F.slice(F.col("_ts"), 3, F.greatest(F.size("_ts") - 2, F.lit(0))),
+                    F.slice(ts, 3, F.greatest(F.size(ts) - 2, F.lit(0))),
                     lambda s: s["text"],
                 ),
             ),
         ).alias("context_raw"),
-    ).drop("_ts")
+    )
 
     name_norm = norm(F.col("name_raw"), special_case_apostrophes=True)
     toks = _strip_honorifics(
         F.filter(F.split(name_norm, " "), lambda t: F.length(t) > 0)
     )
-    df = df.withColumn("_toks", toks)
-    df = df.select(
-        "*",
-        F.concat_ws(" ", F.col("_toks")).alias("name_norm"),
-        F.when(F.size("_toks") > 0, F.element_at(F.col("_toks"), 1))
+    t = F.col("_toks")
+    fields = (
+        F.concat_ws(" ", t).alias("name_norm"),
+        F.when(F.size(t) > 0, F.element_at(t, 1))
         .otherwise(F.lit(""))
         .alias("first"),
         F.when(
-            F.size("_toks") > 2,
-            F.concat_ws(" ", F.slice(F.col("_toks"), 2, F.size("_toks") - 2)),
+            F.size(t) > 2,
+            F.concat_ws(" ", F.slice(t, 2, F.size(t) - 2)),
         )
         .otherwise(F.lit(""))
         .alias("middle"),
-        F.when(F.size("_toks") > 1, F.element_at(F.col("_toks"), -1))
+        F.when(F.size(t) > 1, F.element_at(t, -1))
         .otherwise(F.lit(""))
         .alias("last"),
         norm(F.col("affil_raw")).alias("affil_norm"),
-    ).drop("_toks")
-    return df.withColumn("block_key", compute_block_key(F.col("name_norm")))
+    )
+    block_key = compute_block_key(F.col("name_norm"))
+    return _text_spans(F.col("spans")), raw, toks, fields, block_key
+
+
+def extract_mentions(docs: DataFrame, ascii_fast_path: bool = False) -> DataFrame:
+    """documents -> mentions frame with derived name fields + block key.
+
+    ``ascii_fast_path=True`` skips the unicode-fold pandas UDF (pure JVM
+    plan) — used by oracle-checked queries and safe whenever the corpus is
+    known-ASCII. The expression trees are built once per SparkContext
+    (``_mention_columns``); only the DataFrame steps run per call.
+    """
+    ts, raw, toks, fields, block_key = _mention_columns(ascii_fast_path)
+    df = docs.withColumn("_ts", ts)
+    df = df.select("*", *raw).drop("_ts")
+    df = df.withColumn("_toks", toks)
+    df = df.select("*", *fields).drop("_toks")
+    return df.withColumn("block_key", block_key)

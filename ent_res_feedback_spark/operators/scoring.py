@@ -21,17 +21,26 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ent_res_feedback_spark.functions.expr import once_per_context
 from ent_res_feedback_spark.oracle import DEFAULT_WEIGHTS
 from ent_res_feedback_spark.operators.features import FEATURE_COLS
 
 
 def logistic_score_col(weights: dict | None = None, feature_cols=None) -> Column:
-    """score = sigmoid(bias + sum_i w_i * f_i) as a column expression."""
+    """score = sigmoid(bias + sum_i w_i * f_i) as a column expression,
+    built once per SparkContext and weight vector."""
     w = weights or DEFAULT_WEIGHTS
     cols = feature_cols or FEATURE_COLS
-    z = F.lit(float(w["bias"]))
-    for c in cols:
-        z = z + F.lit(float(w[c])) * F.col(c)
+    return _logistic_score(
+        float(w["bias"]), tuple((c, float(w[c])) for c in cols)
+    )
+
+
+@once_per_context
+def _logistic_score(bias: float, terms: tuple) -> Column:
+    z = F.lit(bias)
+    for c, wc in terms:
+        z = z + F.lit(wc) * F.col(c)
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
 
 

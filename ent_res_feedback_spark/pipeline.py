@@ -6,19 +6,29 @@ documents(doc_id, spans) ->
   constraint gate (cheap column chain BEFORE the UDFs — C2) ->
   featurize unconstrained pairs (Arrow-batched UDF + JVM exprs) ->
   logistic score -> dist = coalesce(constraint, 1-score) ->
-  tau-filter edges -> large-star/small-star CC (checkpointed) ->
+  tau-filter edges -> connected components (driver finish when the
+  census bounds the edges, else checkpointed star rounds) ->
   clusters joined back onto source rows (spans carried untouched).
 
-Physical shape (SURVEY.md §3.1 restatement): two wide shuffles (block
-repartition implied by the join, CC iterations), everything else narrow;
-constraint evaluation precedes the pandas UDFs so disallowed pairs never
-pay for featurization. The mention frame is extracted once and persisted;
-ONE eager action (``blocking.materialize_census``) aggregates its block
-census and observes the largest block. That census decides the pair
-path — the plain equi-join unless a block exceeds ``salt_threshold``,
-then the salted self-join with the census's hot keys broadcast — and is
-the lineage table, so neither the pair plan nor the lineage write
-aggregates the census again or re-extracts mentions.
+Physical shape (SURVEY.md §3.1 restatement): the wide shuffles are the
+block census aggregate, the pair join (block repartition implied by the
+join) and the singleton join-back of the clusters, plus the CC star
+rounds only when the census does not bound the edges; everything else is
+narrow. Constraint evaluation precedes the pandas UDFs so disallowed
+pairs never pay for featurization. The mention frame is extracted once
+and persisted; ONE eager action (``blocking.materialize_census``)
+aggregates its block census and observes the largest block and the total
+within-block pair count. That census decides the pair path — the plain
+equi-join unless a block exceeds ``salt_threshold``, then the salted
+self-join with the census's hot keys broadcast — and is the lineage
+table, so neither the pair plan nor the lineage write aggregates the
+census again or re-extracts mentions. Its pair count bounds the edges:
+at or below CC's ``finish_edge_threshold`` (5M) the edge plan runs once,
+as a ``toArrow()`` collect into the driver-side union-find, and the
+assignments come back as local data — no edge checkpoint, no ``distinct``
+shuffle, and no Python task in the clusters write. Only a job whose
+census allows more edges writes the CC checkpoint store and runs the
+star-round shuffles.
 
 Emits a per-block *lineage* table (block -> sizes, pair counts, salt
 decision) — the partition-level lineage metadata the feedback loop uses
@@ -153,6 +163,14 @@ def _scored(
     return out
 
 
+def tau_edges(scored: DataFrame, tau: float) -> DataFrame:
+    """The CC input of a scored pair frame: pairs within distance
+    ``1 - tau`` as ``(src, dst)``."""
+    return scored.where(F.col("dist") <= (1.0 - tau)).select(
+        F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst")
+    )
+
+
 def release_persisted(df: DataFrame) -> None:
     """Unpersist the intermediate frames a pipeline function persisted on
     behalf of ``df`` (recorded in ``_persisted_deps``). Call once ``df``
@@ -171,7 +189,13 @@ def run_pipeline(
     """Full pipeline. Returns dict with:
 
     clusters: (doc_id, cluster_id, spans) — spans are the SOURCE column,
-              selected not rebuilt (span-sequence equality by construction)
+              selected not rebuilt (span-sequence equality by construction).
+              CC is eager: when the census pair count is at or below CC's
+              ``finish_edge_threshold`` the edges are collected and solved
+              on the driver and the assignments are local data, so the
+              clusters plan is the docs joined to them (no Python node)
+              and ``checkpoint_dir`` is left untouched; otherwise CC
+              writes and resumes from the checkpoint store.
     scored:   the pair-distance frame
     lineage:  per-block lineage/metrics table: the job's one block census
               (materialized eagerly, ``localCheckpoint``) plus the salt
@@ -192,13 +216,17 @@ def run_pipeline(
     # that iterate (the feedback loop) checkpoint it themselves.
     mentions, census = _mentions_and_census(docs, cfg)
     scored = _scored(mentions, census, docs, cfg, seeds)
-    edges = scored.where(F.col("dist") <= (1.0 - cfg.tau)).select(
-        F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst")
+    # every edge is a within-block pair of a counted block, so the census
+    # pair count bounds the edge count before any edge is computed
+    assignments = connected_components(
+        tau_edges(scored, cfg.tau),
+        checkpoint_dir=cfg.checkpoint_dir,
+        edge_bound=census.pairs,
     )
-    assignments = connected_components(edges, checkpoint_dir=cfg.checkpoint_dir)
-    # connected_components materialized the edge set (checkpoint), so the
-    # persisted mentions frame has served its purpose — release it now
-    # rather than leaking cached partitions for the driver lifetime.
+    # connected_components materialized the edge set (collected for the
+    # driver finish, or checkpointed), so the persisted mentions frame has
+    # served its purpose — release it now rather than leaking cached
+    # partitions for the driver lifetime.
     release_persisted(scored)
     clusters = components_with_singletons(
         assignments, docs, "doc_id"

@@ -12,6 +12,9 @@ Checks (grep over the formatted plan):
     the salted explode runs; a no-skew pair plan has no Generate
   - the lineage plan reads only the materialized census: no Python node,
     no aggregate, no exchange
+  - an unseeded job's edge plan has exactly one pair join and no Union
+  - a census-bounded job's clusters plan has no Python node (CC finished
+    on the driver)
   - constraint evaluation sits BELOW the ArrowEvalPython (pandas UDF)
     node, i.e. constrained pairs never reach the featurizer
   - WholeStageCodegen spans cover the scalar feature expressions
@@ -20,6 +23,7 @@ Checks (grep over the formatted plan):
 from __future__ import annotations
 
 import io
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -45,6 +49,7 @@ def audit(spark, sf_dir: str = "/root/testdata/sf0.01") -> dict[str, str]:
         release_persisted,
         run_pipeline,
         scored_pair_distances,
+        tau_edges,
     )
 
     plans: dict[str, str] = {}
@@ -65,10 +70,13 @@ def audit(spark, sf_dir: str = "/root/testdata/sf0.01") -> dict[str, str]:
     ):
         scored = scored_pair_distances(cdocs, cfg)
         plans[name] = _formatted(scored)
+        if name == "scored_pairs_no_skew":
+            # the CC input of an unseeded run_pipeline job
+            plans["edges_no_seed"] = _formatted(tau_edges(scored, cfg.tau))
         release_persisted(scored)
-    plans["lineage"] = _formatted(
-        run_pipeline(cdocs, ERConfig(salt_threshold=30))["lineage"]
-    )
+    job = run_pipeline(cdocs, ERConfig(salt_threshold=30))
+    plans["lineage"] = _formatted(job["lineage"])
+    plans["clusters"] = _formatted(job["clusters"])
 
     from ent_res_feedback_spark.operators.dedup import minhash_lsh_duplicates
     from ent_res_feedback_spark.operators.langid import detect_language_profile
@@ -197,6 +205,19 @@ def audit(spark, sf_dir: str = "/root/testdata/sf0.01") -> dict[str, str]:
     return plans
 
 
+_JOIN_NODE = (
+    "(?:BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin"
+    "|BroadcastNestedLoopJoin|CartesianProduct)"
+)
+
+
+def _node_ids(plan: str, node: str) -> set[str]:
+    """Ids of the plan nodes named by the regex ``node``. Formatted plans
+    list each node twice (tree + detail section), so nodes are counted
+    by their distinct ids from the detail headers ``(id) Name``."""
+    return set(re.findall(rf"^\((\d+)\) {node}\b", plan, re.MULTILINE))
+
+
 def check(plans: dict[str, str]) -> list[str]:
     problems = []
     scan = plans["scan_pruning"]
@@ -239,11 +260,25 @@ def check(plans: dict[str, str]) -> list[str]:
         problems.append("scored_pairs_no_skew: no-skew pair plan has a Generate")
     if "HashAggregate" in ns:
         problems.append("scored_pairs_no_skew: pair plan aggregates a census")
+    # An unseeded job's edge plan holds ONE pair join and no Union: the
+    # optimizer folds the constrained branch away, since without seeds no
+    # constraint distance passes the tau filter.
+    ed = plans["edges_no_seed"]
+    n_joins = len(_node_ids(ed, _JOIN_NODE))
+    if n_joins != 1:
+        problems.append(f"edges_no_seed: expected 1 pair join, saw {n_joins}")
+    if "Union" in ed:
+        problems.append("edges_no_seed: constrained branch not pruned (Union)")
     lin = plans["lineage"]
     if "EvalPython" in lin or "MapInPandas" in lin or "PythonUDF" in lin:
         problems.append("lineage: Python node in the lineage plan")
     if "HashAggregate" in lin or "Exchange" in lin:
         problems.append("lineage: lineage re-aggregates the census")
+    # the census bounds the corpus job's edges, so CC finishes on the
+    # driver: the clusters plan joins the docs to local assignments
+    cl = plans["clusters"]
+    if "EvalPython" in cl or "MapInPandas" in cl:
+        problems.append("clusters: Python node in a census-bounded clusters plan")
     # The C2 constraint gate (filter unconstrained before the UDF) is
     # rewritten by Catalyst from `isnull(CASE ...)` into the negated CASE
     # conditions, so it can't be string-matched; its effect is asserted
@@ -316,14 +351,7 @@ def check(plans: dict[str, str]) -> list[str]:
     # round-5: the threshold sweep must be ONE grouped-pandas pass —
     # k cuts from one union-find, not k clustering jobs
     ts = plans["threshold_sweep"]
-    # formatted plans list each node twice (tree + detail section) —
-    # count distinct node ids
-    import re as _re
-
-    n_fmg = len(
-        set(_re.findall(r"FlatMapGroupsInPandas \((\d+)\)", ts))
-        | set(_re.findall(r"\((\d+)\) FlatMapGroupsInPandas", ts))
-    )
+    n_fmg = len(_node_ids(ts, "FlatMapGroupsInPandas"))
     if n_fmg != 1:
         problems.append(
             f"threshold_sweep: expected 1 grouped-pandas pass, saw {n_fmg}"

@@ -37,10 +37,18 @@ def get_spark(
 
     # NOTE (round-6, measured): a custom preloading Python-worker daemon
     # (spark.python.daemon.module importing numpy/pandas pre-fork) was
-    # probed and REVERTED — the session's first Arrow stage costs ~4s
-    # even with a single task (JVM-side runner/daemon init, and module
-    # imports amortize through the OS page cache across workers), so the
-    # preload bought nothing while adding a failure surface.
+    # probed and REVERTED — module imports amortize through the OS page
+    # cache across workers, so the preload bought nothing while adding a
+    # failure surface. The per-task Python cost it did not touch has a
+    # measured cause: pyspark's worker calls importlib.invalidate_caches()
+    # once per task (setup_spark_files), and on CPython 3.11 each of a
+    # warm worker's ~16 zipimporters then re-reads the pyspark.zip
+    # directory — 137-253 ms per task, timed inside the worker (a trivial
+    # pandas UDF over 8k rows: 291 ms; the same query without Python:
+    # 41 ms). That is pyspark's worker, not a setting here, so the engine
+    # cuts Python tasks per job (CC's driver finish, no Python in the
+    # lineage or the feedback round's doc lookup) instead of tuning the
+    # worker.
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -14,8 +14,11 @@ Reads documents(doc_id, spans), writes:
   <metrics-dir>/lineage   per-block lineage (block_key, sizes, salt flag)
   <metrics-dir>/metrics.json  throughput + run config
 
-Re-running with the same --checkpoint-dir resumes connected components
-from the last completed iteration (exact resume).
+Connected components checkpoints to --checkpoint-dir only when the block
+census allows more edges than its driver-finish threshold (5M); then a
+re-run with the same --checkpoint-dir resumes from the last completed
+iteration (exact resume). A job under that bound finishes CC on the
+driver without writing the directory, and a re-run recomputes it.
 """
 
 from __future__ import annotations

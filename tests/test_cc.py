@@ -2,6 +2,7 @@
 graphs, determinism, and exact checkpoint resume (the north rule's
 resumability requirement)."""
 
+import os
 import random
 
 import pytest
@@ -31,14 +32,7 @@ def _oracle_components(edges, nodes):
     return {n: min(g) for c, g in groups.items() for n in g}
 
 
-@pytest.mark.parametrize("seed,n,m", [(1, 50, 40), (2, 200, 150), (3, 120, 300)])
-@pytest.mark.parametrize("threshold", [None, 5_000_000, 60])
-def test_cc_matches_union_find(spark, seed, n, m, threshold):
-    """All three cost regimes must agree with the union-find oracle:
-    threshold=None (pure star loop), 5M (immediate one-task finish), and
-    60 (star rounds first, early finish once the survivor set shrinks
-    below 60 mid-loop) — the early-finish switch point must never change
-    the assignment."""
+def _assert_matches_union_find(spark, seed, n, m, **cc_kwargs):
     rng = random.Random(seed)
     nodes = list(range(n))
     edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
@@ -46,13 +40,36 @@ def test_cc_matches_union_find(spark, seed, n, m, threshold):
     edf = spark.createDataFrame(edges, "src long, dst long")
     got = {
         r["id"]: r["component"]
-        for r in connected_components(
-            edf, finish_edge_threshold=threshold
-        ).collect()
+        for r in connected_components(edf, **cc_kwargs).collect()
     }
     want = _oracle_components(edges, nodes)
     touched = {x for e in edges for x in e}
     assert {k: want[k] for k in touched} == got
+
+
+@pytest.mark.parametrize("seed,n,m", [(1, 50, 40), (2, 200, 150), (3, 120, 300)])
+@pytest.mark.parametrize("threshold", [None, 5_000_000, 60])
+def test_cc_matches_union_find(spark, seed, n, m, threshold):
+    """All three cost regimes must agree with the union-find oracle:
+    threshold=None (pure star loop), 5M (immediate driver finish), and
+    60 (star rounds first, early finish once the survivor set shrinks
+    below 60 mid-loop) — the early-finish switch point must never change
+    the assignment."""
+    _assert_matches_union_find(
+        spark, seed, n, m, finish_edge_threshold=threshold
+    )
+
+
+@pytest.mark.parametrize("seed,n,m", [(1, 50, 40), (2, 200, 150), (3, 120, 300)])
+@pytest.mark.parametrize("slack", [0, 1000])
+def test_cc_bounded_matches_union_find(spark, seed, n, m, slack):
+    """An ``edge_bound`` at or below the threshold finishes on the driver
+    without materializing the input; the bound may be loose (``slack``)
+    or exact, and the threshold may equal it."""
+    _assert_matches_union_find(
+        spark, seed, n, m, edge_bound=m + slack,
+        finish_edge_threshold=m + slack,
+    )
 
 
 def test_cc_string_ids(spark):
@@ -60,6 +77,49 @@ def test_cc_string_ids(spark):
     edf = spark.createDataFrame(edges, "src string, dst string")
     got = {r["id"]: r["component"] for r in connected_components(edf).collect()}
     assert got == {"d1": "d1", "d2": "d1", "d3": "d1", "d8": "d8", "d9": "d8"}
+
+
+def test_cc_bounded_string_ids(spark):
+    """String ids finish on the driver with the star loop's min-id labels,
+    i.e. Spark's string order (bytewise: "Z" < "a" < "z" < "é")."""
+    edges = [("d3", "d1"), ("d1", "d2"), ("d9", "d8"), ("é", "z"), ("a", "Z")]
+    edf = spark.createDataFrame(edges, "src string, dst string")
+    out = connected_components(edf, edge_bound=len(edges))
+    assert out.schema["component"].dataType.simpleString() == "string"
+    got = {r["id"]: r["component"] for r in out.collect()}
+    star = connected_components(edf, finish_edge_threshold=None)
+    assert got == {r["id"]: r["component"] for r in star.collect()}
+    assert got == {
+        "d1": "d1", "d2": "d1", "d3": "d1", "d8": "d8", "d9": "d8",
+        "z": "z", "é": "z", "a": "Z", "Z": "Z",
+    }
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+@pytest.mark.parametrize("edge_bound", [None, 0])
+def test_cc_empty_edges(spark, id_type, edge_bound):
+    """No edges: empty assignments, typed like the edge ids."""
+    edf = spark.createDataFrame([], f"src {id_type}, dst {id_type}")
+    out = connected_components(edf, edge_bound=edge_bound)
+    assert out.collect() == []
+    assert [f.dataType for f in out.schema] == [edf.schema["src"].dataType] * 2
+
+
+def test_bounded_edges_skip_the_store(spark, tmp_path):
+    """A bounded edge set finishes on the driver before the checkpoint
+    store is touched: no iteration entry, no iteration directory."""
+    edf = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "src long, dst long")
+    ckpt = str(tmp_path / "ckpt")
+    got = {
+        r["id"]: r["component"]
+        for r in connected_components(
+            edf, checkpoint_dir=ckpt, edge_bound=3
+        ).collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+    store = CheckpointStore(spark, ckpt)
+    assert store.latest() is None
+    assert not [d for d in os.listdir(ckpt) if d.startswith("iter=")]
 
 
 def test_singletons(spark):

@@ -7,11 +7,17 @@ from pyspark.sql import functions as F
 
 from ent_res_feedback_spark.corpus import CorpusConfig, corpus_to_spark, generate_corpus
 from ent_res_feedback_spark.operators.feedback import (
+    _docs_in_blocks,
     run_feedback_loop,
     select_uncertain_pairs,
 )
+from ent_res_feedback_spark.operators.mentions import extract_mentions
 from ent_res_feedback_spark.operators.metrics import pairwise_prf
-from ent_res_feedback_spark.pipeline import ERConfig, scored_pair_distances
+from ent_res_feedback_spark.pipeline import (
+    ERConfig,
+    release_persisted,
+    scored_pair_distances,
+)
 
 
 @pytest.fixture(scope="module")
@@ -37,6 +43,28 @@ def test_uncertainty_selection_near_tau(spark, corpus):
     assert max_picked_dist <= statistics.median(
         abs(s - 0.5) for s in all_scores
     )
+
+
+def test_affected_docs_read_the_scored_checkpoint(spark, corpus):
+    """A round's affected docs come from its checkpointed pair frame: the
+    same docs as mention extraction puts in the touched blocks, with no
+    Python node in the plan."""
+    documents, _, _ = corpus
+    docs = corpus_to_spark(spark, documents)
+    raw = scored_pair_distances(docs, ERConfig())
+    scored = raw.localCheckpoint()
+    release_persisted(raw)
+    blocks = sorted(
+        r["block_key"] for r in scored.select("block_key").distinct().collect()
+    )[::3]
+    touched = spark.createDataFrame([(b,) for b in blocks], "block_key string")
+    affected = _docs_in_blocks(scored, touched)
+    plan = affected._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan and "MapInPandas" not in plan
+    want = extract_mentions(docs).where(F.col("block_key").isin(blocks))
+    assert {r["doc_id"] for r in affected.collect()} == {
+        r["doc_id"] for r in want.select("doc_id").collect()
+    }
 
 
 def test_feedback_improves_f1(spark, corpus):

@@ -67,6 +67,28 @@ def test_quality_vs_gold(spark, corpus, spark_result):
     assert b3m["f1"] >= 0.95, b3m
 
 
+def test_census_bounded_cc_matches_star_loop(spark_result):
+    """run_pipeline finishes CC on the driver under its census bound; the
+    clusters equal the star loop's (no bound, no early finish) over the
+    same edges."""
+    from ent_res_feedback_spark.operators.cc import (
+        components_with_singletons,
+        connected_components,
+    )
+    from ent_res_feedback_spark.pipeline import tau_edges
+
+    edges = tau_edges(spark_result["scored"], ERConfig().tau)
+    clusters = spark_result["clusters"].select("doc_id", "cluster_id")
+    star = components_with_singletons(
+        connected_components(edges, finish_edge_threshold=None),
+        clusters.select("doc_id"),
+        "doc_id",
+    )
+    got = {(r["doc_id"], r["cluster_id"]) for r in clusters.collect()}
+    want = {(r["doc_id"], r["component"]) for r in star.collect()}
+    assert got == want
+
+
 def test_salting_does_not_change_results(spark, corpus):
     documents, _, _ = corpus
     docs = corpus_to_spark(spark, documents)
