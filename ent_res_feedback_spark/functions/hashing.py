@@ -31,11 +31,6 @@ MERSENNE61 = (1 << 61) - 1
 _MULT_BITS = 31
 
 
-def token_hash64(col: Column) -> Column:
-    """Portable 60-bit hash of a string column (md5-derived)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def token_hash32(col: Column) -> Column:
     """Portable 32-bit hash (first 8 md5 hex digits)."""
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
@@ -51,41 +46,10 @@ def minhash_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signature(tokens: Column, num_hashes: int, seed: int = 42) -> Column:
-    """MinHash signature (array<long>) over a distinct-token array column.
-
-    100% JVM-side: one md5 per token (computed once — the hashed-token
-    array is let-bound, round-6; referencing the transform directly in
-    the ``num_hashes`` array_min passes re-ran every token md5 per
-    permutation, a 16x overhash at the default width), then
-    ``num_hashes`` transform+array_min passes. Empty token arrays ->
-    NULL signature. Identical values are expressible in DuckDB (see
-    sql_minhash_expr).
-    """
-    def _perm(a: int, b: int):
-        # closure factory: a single-arg lambda (PySpark dispatches
-        # higher-order-function arity on the Python signature)
-        return lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(MERSENNE61))
-
-    def sig_of(hashed):
-        return F.array(
-            *[
-                F.array_min(F.transform(hashed, _perm(a, b)))
-                for a, b in minhash_params(num_hashes, seed)
-            ]
-        )
-
-    def sig_or_null(toks):
-        sig = let(F.transform(F.array_distinct(toks), token_hash32), sig_of)
-        return F.when(F.size(toks) > 0, sig)
-
-    # ``tokens`` is referenced twice (size guard + hashing): bound once
-    return let(tokens, sig_or_null)
-
-
 def sql_minhash_expr(tokens_sql: str, num_hashes: int, seed: int = 42) -> str:
     """DuckDB SQL fragment computing the identical MinHash signature over a
-    list-of-varchar expression — the oracle side of ``minhash_signature``."""
+    list-of-varchar expression — the oracle side of
+    ``blocking.minhash_signatures_df``."""
     h = (
         f"list_transform(list_distinct({tokens_sql}), "
         "t -> ('0x' || substr(md5(t), 1, 8))::BIGINT)"

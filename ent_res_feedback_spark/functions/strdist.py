@@ -2,15 +2,14 @@
 
 The reference computes jellyfish Jaro-Winkler / Levenshtein / MetricLCS /
 prefix distance per pair in Python workers (s2and/text.py:246-263,
-341-371). Here each kernel runs inside a pandas UDF over Arrow batches;
-Levenshtein additionally has a 100% JVM-side form (``levenshtein_norm``)
+341-371). Here Jaro-Winkler and prefix distance run inside a pandas UDF
+over Arrow batches; Levenshtein is 100% JVM-side (``levenshtein_norm``)
 via the Spark builtin. Jaro-Winkler semantics are pinned to the standard
 definition (prefix weight 0.1, boost threshold 0.7, max prefix 4) and are
 bit-identical to DuckDB's ``jaro_winkler_similarity`` (property-tested in
 tests/test_strdist.py), which is what makes the DuckDB oracle usable.
 
-If ``rapidfuzz`` is importable its batched C kernels are used. Without
-it the hot path is the WIDTH-BUCKETED NUMPY kernels (``_vectorized_udf``
+The hot path is the WIDTH-BUCKETED NUMPY kernels (``_vectorized_udf``
 below): each Arrow batch is grouped by string width and each bucket runs
 the whole dynamic program as vectorized numpy array ops over the padded
 codepoint matrix; the scalar per-pair Python kernels only catch
@@ -111,33 +110,9 @@ def lcs_len(s1: str, s2: str) -> int:
     return prev[-1]
 
 
-def metric_lcs_kernel(s1: str, s2: str) -> float:
-    """F7 'lcs' — strsimpy MetricLCS semantics (reference
-    s2and/text.py:257-261): 1 - lcs_len / max_len; 0.0 for two equal
-    (incl. empty) strings."""
-    if s1 == s2:
-        return 0.0
-    m = max(len(s1), len(s2))
-    if m == 0:
-        return 0.0
-    return 1.0 - lcs_len(s1, s2) / m
-
-
 # ---------------------------------------------------------------------------
 # Arrow-batched column functions
 # ---------------------------------------------------------------------------
-
-def _pairwise_udf(kernel):
-    @pandas_udf(DoubleType())
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = [
-            None if (x is None or y is None) else kernel(x, y)
-            for x, y in zip(a, b)
-        ]
-        return pd.Series(out, dtype="float64")
-
-    return _udf
-
 
 # ---------------------------------------------------------------------------
 # numpy-vectorized batch kernels (the north-star "batched Jaro-Winkler ...
@@ -253,32 +228,6 @@ def js_ge(lengths, W):
     return np.arange(W)[None, :] >= lengths[:, None]
 
 
-def _metric_lcs_numpy(a_list, b_list):
-    import numpy as np
-
-    n = len(a_list)
-    la = np.fromiter((len(s) for s in a_list), dtype=np.int64, count=n)
-    lb = np.fromiter((len(s) for s in b_list), dtype=np.int64, count=n)
-    W = int(max(la.max(initial=1), lb.max(initial=1), 1))
-    A = _to_char_matrix(a_list, W, fill=0xFFFFFFFE)
-    B = _to_char_matrix(b_list, W, fill=0xFFFFFFFD)
-    prev = np.zeros((n, W + 1), dtype=np.int32)
-    for i in range(1, W + 1):
-        cur = np.zeros((n, W + 1), dtype=np.int32)
-        ai = A[:, i - 1]
-        for j in range(1, W + 1):
-            match = ai == B[:, j - 1]
-            cur[:, j] = np.where(
-                match, prev[:, j - 1] + 1, np.maximum(cur[:, j - 1], prev[:, j])
-            )
-        prev = cur
-    lcs = prev[:, W]
-    mx = np.maximum(la, lb)
-    out = np.where(mx > 0, 1.0 - lcs / np.maximum(mx, 1), 0.0)
-    equal = (la == lb) & ((A == B) | (js_ge(la, W))).all(axis=1)
-    return np.where(equal, 0.0, out)
-
-
 def _vectorized_udf(np_kernel, scalar_kernel):
     """pandas UDF: numpy-vectorized path for short strings, scalar
     fallback for oversize rows, NULL propagation."""
@@ -301,7 +250,7 @@ def _vectorized_udf(np_kernel, scalar_kernel):
         )
         idx = np.where(ok)[0]
         if len(idx):
-            # width-bucketing: batch cost is O(W * n) (W^2 for LCS), so
+            # width-bucketing: batch cost is O(W * n), so
             # processing short-name rows separately from the occasional
             # long row keeps W small for the bulk of the batch
             widths = np.fromiter(
@@ -327,25 +276,9 @@ def _vectorized_udf(np_kernel, scalar_kernel):
 
 jaro_winkler = _vectorized_udf(_jaro_winkler_numpy, jaro_winkler_similarity)
 prefix_dist = _vectorized_udf(_prefix_dist_numpy, prefix_dist_kernel)
-metric_lcs = _vectorized_udf(_metric_lcs_numpy, metric_lcs_kernel)
 
 
 def levenshtein_norm(c1: Column, c2: Column) -> Column:
     """F7 'levenshtein' — edit distance normalized by max length
     (reference s2and/text.py:366-370). JVM builtin: stays in codegen."""
     return F.levenshtein(c1, c2) / F.greatest(F.length(c1), F.length(c2))
-
-
-def name_text_features(c1: Column, c2: Column) -> list[Column]:
-    """F7 bundle — reference ``name_text_features`` (s2and/text.py:341-371):
-    [levenshtein_norm, prefix_dist, metric_lcs, jaro_winkler], each NULL
-    when either name is NULL or length <= 1."""
-    gate = (
-        c1.isNotNull() & c2.isNotNull() & (F.length(c1) > 1) & (F.length(c2) > 1)
-    )
-    return [
-        F.when(gate, levenshtein_norm(c1, c2)).alias("levenshtein"),
-        F.when(gate, prefix_dist(c1, c2)).alias("prefix"),
-        F.when(gate, metric_lcs(c1, c2)).alias("lcs"),
-        F.when(gate, jaro_winkler(c1, c2)).alias("jaro"),
-    ]

@@ -35,13 +35,3 @@ def cosine_sim(a: Column, b: Column) -> Column:
     s2and/text.py:389-394 returns 0, not NaN, for zero vectors)."""
     denom = F.sqrt(sq_norm(a)) * F.sqrt(sq_norm(b))
     return F.when(denom == 0, F.lit(0.0)).otherwise(_dot(a, b) / denom)
-
-
-def specter_sim(a: Column, b: Column, english_gate: Column | None = None) -> Column:
-    """The SPECTER embedding feature (featurizer.py:486-503): cosine + 1,
-    NULL unless both sides exist, are non-zero, and the English/unknown
-    gate holds."""
-    ok = a.isNotNull() & b.isNotNull() & (sq_norm(a) > 0) & (sq_norm(b) > 0)
-    if english_gate is not None:
-        ok = ok & english_gate
-    return F.when(ok, cosine_sim(a, b) + 1.0)

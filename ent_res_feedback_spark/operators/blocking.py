@@ -80,16 +80,6 @@ def materialize_census(
     return BlockCensus(frame, int(vals["max"] or 0), int(vals["pairs"] or 0))
 
 
-def filter_min_block_size(
-    df: DataFrame, key: str = "block_key", min_size: int = 2
-) -> DataFrame:
-    """B3 — drop blocks smaller than ``min_size`` (singleton blocks produce
-    no pairs; reference model.py:115-142). Census is broadcast back so the
-    big side is filtered without a second wide shuffle."""
-    census = block_census(df, key).where(F.col("block_size") >= min_size)
-    return df.join(F.broadcast(census.select(key)), key, "inner")
-
-
 def tokenize(col, pattern: str = r"\s+"):
     """Distinct non-empty tokens of a text column (JVM-side)."""
     return F.array_distinct(
@@ -154,8 +144,8 @@ def minhash_signatures_df(
     form hashes each (id, unit) row exactly ONCE and computes the k
     minima as ordinary aggregates with map-side partial aggregation: one
     shuffle keyed by id, linear work, scales to arbitrary corpus size.
-    Values are identical to functions/hashing.minhash_signature and to
-    the DuckDB mirror (sql_minhash_expr).
+    Values are identical to the DuckDB mirror
+    (hashing.sql_minhash_expr).
     """
     params = hashing.minhash_params(num_hashes, seed)
     ex = df.select(F.col(id_col), F.explode(F.array_distinct(units_col)).alias("_u"))

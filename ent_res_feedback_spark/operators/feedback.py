@@ -20,7 +20,6 @@ north star as a bounded driver-side iteration:
 
 from __future__ import annotations
 
-import warnings
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation
@@ -122,13 +121,8 @@ def run_feedback_loop(
       round-trip per round instead of a Python call per pair, so rounds
       carrying thousands of labels skip the per-pair driver loop.
 
-    The EXPLICIT ``batch_labeler=`` kwarg (or a truthy ``is_batch``
-    attribute on ``labeler``) is the supported way to opt into the batch
-    form. A single-required-argument ``labeler`` is still routed to the
-    batch path by arity sniffing as a DEPRECATED fallback (it emits a
-    ``DeprecationWarning``) — ambiguous
-    for e.g. ``lambda a, b=None: ...`` scalar labelers (judge round-4
-    advice #2), so new callers should pass ``batch_labeler=``.
+    The keyword decides the form: ``labeler=`` is always called per
+    pair, ``batch_labeler=`` always with the round's pair frame.
 
     A round where every selected pair is abstained ends the loop (no new
     information).
@@ -159,6 +153,10 @@ def run_feedback_loop(
     raw = scored_pair_distances(docs, cfg, seeds=None)
     scored, n_scored = _checkpointed(raw)
     release_persisted(raw)  # checkpoint done — drop the cached mentions
+    # every round's frame keeps round 0's partition count: the union of
+    # the untouched pairs and the re-score would otherwise add the
+    # re-score's partitions every round, widening every later stage
+    n_parts = scored.rdd.getNumPartitions()
     clusters = _cluster_from(scored, docs, cfg, n_scored)
     state.history.append({"round": 0, "metric": metric_fn(clusters) if metric_fn else None})
 
@@ -170,7 +168,7 @@ def run_feedback_loop(
             break
         labels = _labels_for(
             spark, batch_labeler or labeler, uncertain,
-            is_batch=True if batch_labeler is not None else None,
+            is_batch=batch_labeler is not None,
         )
         new_seeds = []
         for r, label in zip(uncertain, labels):
@@ -226,7 +224,9 @@ def run_feedback_loop(
         # localCheckpoint() each round flattens the union lineage: the
         # checkpointed RDD is the new root, so plan depth stays O(1) in
         # the number of rounds rather than rounds-linear
-        scored, n_scored = _checkpointed(untouched.unionByName(rescored))
+        scored, n_scored = _checkpointed(
+            untouched.unionByName(rescored).coalesce(n_parts)
+        )
         release_persisted(rescored)  # per-round: no cache accumulation
 
         clusters = _cluster_from(scored, docs, cfg, n_scored)
@@ -242,39 +242,9 @@ def run_feedback_loop(
     return {"clusters": clusters, "state": state, "scored": scored}
 
 
-def _labels_for(spark, labeler, uncertain_rows, is_batch=None) -> list:
-    """Resolve labels for the round's selected pairs through either
-    labeler form (see run_feedback_loop docstring).
-
-    ``is_batch``: True/False when the caller knows (the explicit
-    ``batch_labeler=`` kwarg); None falls back to, in order, the
-    labeler's ``is_batch`` marker attribute, then DEPRECATED arity
-    sniffing (exactly one positional parameter => batch, with a
-    ``DeprecationWarning``)."""
-    import inspect
-
-    if is_batch is None:
-        is_batch = getattr(labeler, "is_batch", None)
-    if is_batch is None:
-        try:
-            positional = [
-                p
-                for p in inspect.signature(labeler).parameters.values()
-                if p.kind in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD)
-            ]
-            # one positional parameter TOTAL (defaults included): a
-            # scalar labeler like (a, b=None) has two, so it is not
-            # misrouted to the batch path
-            is_batch = len(positional) == 1
-        except (TypeError, ValueError):
-            is_batch = False
-        if is_batch:
-            warnings.warn(
-                "routing a one-argument labeler= to the batch path by its "
-                "arity is deprecated; pass batch_labeler= instead",
-                DeprecationWarning,
-                stacklevel=3,
-            )
+def _labels_for(spark, labeler, uncertain_rows, is_batch: bool) -> list:
+    """Resolve labels for the round's selected pairs through the labeler
+    form the caller's keyword chose (see run_feedback_loop docstring)."""
     if not is_batch:
         return [labeler(r["doc_id_1"], r["doc_id_2"]) for r in uncertain_rows]
     pairs_df = spark.createDataFrame(

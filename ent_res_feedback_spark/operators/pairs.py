@@ -158,18 +158,3 @@ def within_block_pairs(
     pairs = canonicalize_pairs(pairs, id_col)
     # ids are unique so self-pairs cannot occur; keep a cheap guard
     return pairs.where(F.col(id_col + "_1") != F.col(id_col + "_2"))
-
-
-def candidate_pairs_from_band_keys(
-    df: DataFrame,
-    band_key: str = "band_key",
-    id_col: str = "doc_id",
-    carry: list[str] | None = None,
-) -> DataFrame:
-    """LSH candidate pairs: all-pairs within each band bucket, deduped
-    across bands (a near-dup pair typically collides in several bands).
-    ``carry`` columns are kept (suffixed) for downstream verification."""
-    cols = [id_col] + (carry or [])
-    slim = df.select(band_key, *cols)
-    pairs = within_block_pairs(slim, key=band_key, id_col=id_col)
-    return pairs.drop(band_key).distinct()

@@ -15,8 +15,6 @@ Distance semantics: distance = 1 - match_probability
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -51,14 +49,6 @@ def score_pairs(
     out: str = "score",
 ) -> DataFrame:
     return features_df.withColumn(out, logistic_score_col(weights, feature_cols))
-
-
-def final_distance(df: DataFrame, out: str = "dist") -> DataFrame:
-    """coalesce(constraint, 1 - score): constraints override the model
-    (reference model.py:297-298)."""
-    return df.withColumn(
-        out, F.coalesce(F.col("constraint_dist"), 1.0 - F.col("score"))
-    )
 
 
 def fit_logistic(
@@ -124,46 +114,6 @@ def collect_training_sample(
     return X, y
 
 
-def sigmoid(x: float) -> float:
-    return 1.0 / (1.0 + math.exp(-x))
-
-
-# ---------------------------------------------------------------------------
-# FE6 — StandardScaler (reference s2and/data.py:138-143 fits sklearn's
-# StandardScaler on the pair features before the linear model). Fit is one
-# distributed aggregation; transform is pure column arithmetic.
-# ---------------------------------------------------------------------------
-
-def fit_standard_scaler(
-    features_df: DataFrame, feature_cols=None
-) -> dict[str, tuple[float, float]]:
-    """Population mean/std per feature (ddof=0, like sklearn). Returns
-    {col: (mean, std)}; std 0 -> 1.0 (sklearn's constant-feature guard)."""
-    cols = list(feature_cols or FEATURE_COLS)
-    aggs = []
-    for c in cols:
-        aggs.append(F.avg(c).alias(f"{c}__mean"))
-        aggs.append(F.var_pop(c).alias(f"{c}__var"))
-    row = features_df.agg(*aggs).collect()[0]
-    out = {}
-    for c in cols:
-        mean = float(row[f"{c}__mean"] or 0.0)
-        var = float(row[f"{c}__var"] or 0.0)
-        std = var ** 0.5
-        out[c] = (mean, std if std > 0 else 1.0)
-    return out
-
-
-def apply_standard_scaler(
-    features_df: DataFrame, scaler: dict[str, tuple[float, float]]
-) -> DataFrame:
-    """(x - mean) / std, JVM-side, weights inlined as literals."""
-    out = features_df
-    for c, (mean, std) in scaler.items():
-        out = out.withColumn(c, (F.col(c) - F.lit(mean)) / F.lit(std))
-    return out
-
-
 # ---------------------------------------------------------------------------
 # M2 — general N-way voting (reference VotingClassifier, model.py:879-981)
 # ---------------------------------------------------------------------------
@@ -171,9 +121,9 @@ def apply_standard_scaler(
 def vote_soft_col(score_cols: list[Column], weights: list[float] | None = None) -> Column:
     """Soft-voting P(match): the weighted average of the per-model match
     probabilities (reference predict_proba, model.py:936-952:
-    np.average(probas, axis=0, weights=weights)). With two models and no
-    weights this degenerates to the production blend
-    (parity.blended_score_col)."""
+    np.average(probas, axis=0, weights=weights)). The soft class label
+    is ``vote_soft_col(...) > 0.5``: np.argmax breaks the exact tie
+    toward class 0 (model.py:919-920)."""
     if weights is None:
         weights = [1.0] * len(score_cols)
     if len(weights) != len(score_cols):
@@ -184,15 +134,6 @@ def vote_soft_col(score_cols: list[Column], weights: list[float] | None = None) 
         term = F.lit(float(w)) * s
         num = term if num is None else num + term
     return num / F.lit(total)
-
-
-def vote_soft_predict_col(
-    score_cols: list[Column], weights: list[float] | None = None
-) -> Column:
-    """Soft-voting class label: argmax over [P(0), P(1)] of the averaged
-    probabilities (model.py:919-920). np.argmax breaks the exact tie
-    toward class 0, so the label is 1 iff the averaged P(1) > 0.5."""
-    return (vote_soft_col(score_cols, weights) > 0.5).cast("int")
 
 
 def vote_hard_col(
@@ -213,75 +154,3 @@ def vote_hard_col(
         w1 = term if w1 is None else w1 + term
     total = F.lit(float(sum(weights)))
     return (w1 > total - w1).cast("int")
-
-
-# ---------------------------------------------------------------------------
-# M1 hyperparameter search (reference PairwiseModeler: 25-iteration
-# hyperopt TPE over the classifier's space, model.py:80 + 744-876,
-# scored on a validation split). Restated as a seeded random search over
-# the logistic's (l2, lr, iters), scored by the DISTRIBUTED val AUROC —
-# trials are driver-side (training sets are small by design), scoring
-# never collects the val pairs.
-# ---------------------------------------------------------------------------
-
-DEFAULT_SEARCH_SPACE = {
-    "l2": (1e-5, 1e-1),     # log-uniform
-    "lr": (0.05, 1.0),      # log-uniform
-    "iters": (100, 200, 400, 800),
-}
-
-
-def tune_logistic(
-    train_df: DataFrame,
-    val_df: DataFrame,
-    label_col: str = "label",
-    feature_cols=None,
-    n_iter: int = 25,
-    seed: int = 42,
-    space: dict | None = None,
-    max_train_rows: int = 100_000,
-) -> dict:
-    """Seeded random hyper search for the pairwise logistic (M1).
-
-    Draws ``n_iter`` configs from ``space`` (log-uniform floats, uniform
-    choice for iters), fits each on a collected training sample, scores
-    each on ``val_df`` with the distributed ``metrics.auroc_ap``, and
-    returns the config/weights with the best validation AUROC (first
-    trial wins exact ties — deterministic under ``seed``).
-
-    Returns {"weights", "params", "val_auroc", "trials"} where trials is
-    the full (params, auroc) history, like hyperopt's trial log.
-    """
-    from ent_res_feedback_spark.operators.metrics import auroc_ap
-
-    cols = list(feature_cols or FEATURE_COLS)
-    sp = dict(DEFAULT_SEARCH_SPACE, **(space or {}))
-    X, y = collect_training_sample(
-        train_df, label_col, cols, max_rows=max_train_rows, seed=seed
-    )
-    rng = np.random.default_rng(seed)
-    best = None
-    trials = []
-    for t in range(n_iter):
-        if t == 0:
-            # warm-start trial: the fit_logistic defaults. Guarantees the
-            # selected config is never worse than the un-tuned baseline
-            # on val (the search result dominates the default by
-            # construction).
-            params = {"l2": 1e-3, "lr": 0.5, "iters": 400}
-        else:
-            lo, hi = sp["l2"]
-            l2 = float(np.exp(rng.uniform(np.log(lo), np.log(hi))))
-            lo, hi = sp["lr"]
-            lr = float(np.exp(rng.uniform(np.log(lo), np.log(hi))))
-            iters = int(sp["iters"][rng.integers(len(sp["iters"]))])
-            params = {"l2": l2, "lr": lr, "iters": iters}
-        l2, lr, iters = params["l2"], params["lr"], params["iters"]
-        weights = fit_logistic(X, y, cols, l2=l2, lr=lr, iters=iters, seed=seed)
-        scored = val_df.withColumn("__score", logistic_score_col(weights, cols))
-        auc = auroc_ap(scored, label_col=label_col, score_col="__score")["auroc"]
-        trials.append({"params": params, "auroc": auc})
-        if best is None or auc > best["val_auroc"]:
-            best = {"weights": weights, "params": params, "val_auroc": auc}
-    best["trials"] = trials
-    return best

@@ -1,5 +1,5 @@
 """Text-analysis operators for the training-data pipeline layer:
-language-ID heuristic, quality scoring, token counting, fingerprinting.
+language-ID heuristic, quality scoring, token counting.
 All pure column expressions (JVM-side, codegen'd) so they run at scan
 speed over 100 TB — no UDFs anywhere in this module.
 
@@ -11,12 +11,11 @@ output shape (is_reliable, is_english, lang).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ent_res_feedback_spark.functions import hashing
 from ent_res_feedback_spark.functions.expr import let
-from ent_res_feedback_spark.functions.text import STOPWORDS, normalize_text_ascii
+from ent_res_feedback_spark.functions.text import STOPWORDS
 
 # high-frequency English function words used by the heuristic
 _EN_MARKERS = [
@@ -32,22 +31,6 @@ def tokens_col(text: Column) -> Column:
 def token_count(text: Column) -> Column:
     """Whitespace token count."""
     return F.size(tokens_col(text))
-
-
-def bpe_ish_token_count(text: Column) -> Column:
-    """BPE-ish token estimate: word-piece regex split (letters runs,
-    digit runs, punctuation singles), the standard ~4-chars-per-token
-    approximation pipeline heuristic."""
-    pieces = F.filter(
-        F.split(text, r"(?<=[^a-zA-Z0-9])|(?=[^a-zA-Z0-9])"),
-        lambda t: F.length(F.trim(t)) > 0,
-    )
-    # long alphabetic runs count as ceil(len/4) subword pieces
-    return F.aggregate(
-        pieces,
-        F.lit(0),
-        lambda acc, p: acc + F.ceil(F.length(p) / 4.0).cast("int"),
-    )
 
 
 def stopword_ratio(text: Column) -> Column:
@@ -120,20 +103,4 @@ def quality_score(text: Column) -> Column:
         + F.lit(0.3) * alpha_ratio
         + F.lit(0.2) * wl_ok
         + F.lit(0.2) * stop_ok
-    )
-
-
-def document_profile(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """One-pass profile: token counts, language, quality, fingerprint."""
-    t = F.col(text_col)
-    return docs.select(
-        F.col(id_col),
-        token_count(t).alias("n_tokens"),
-        bpe_ish_token_count(t).alias("n_bpe_tokens"),
-        F.round(stopword_ratio(t), 6).alias("stopword_ratio"),
-        language_id(t).alias("language"),
-        F.round(quality_score(t), 6).alias("quality"),
-        hashing.doc_fingerprint(normalize_text_ascii(t)).alias("fingerprint"),
     )

@@ -67,11 +67,6 @@ class ERConfig:
     max_block_size: int | None = None
     checkpoint_dir: str | None = None
     ascii_fast_path: bool = False
-    #: parquet pair-feature cache (S6/FE3) — when set, featurization runs
-    #: ONLY for pairs not already in the cache (reference
-    #: featurizer.py:585-628 semantics); NB this makes scoring eager (the
-    #: cache append is an action).
-    feature_cache_dir: str | None = None
 
 
 def _mentions_and_census(
@@ -104,13 +99,12 @@ def scored_pair_distances(
     per affected block). Eager: the block census is materialized here."""
     cfg = config or ERConfig()
     mentions, census = _mentions_and_census(docs, cfg)
-    return _scored(mentions, census, docs, cfg, seeds)
+    return _scored(mentions, census, cfg, seeds)
 
 
 def _scored(
     mentions: DataFrame,
     census: BlockCensus,
-    docs: DataFrame,
     cfg: ERConfig,
     seeds: DataFrame | None,
 ) -> DataFrame:
@@ -130,14 +124,7 @@ def _scored(
 
     # C2 gate: the expensive featurization UDFs only see unconstrained pairs.
     unconstrained = pairs.where(F.col("constraint_dist").isNull())
-    if cfg.feature_cache_dir:
-        from ent_res_feedback_spark.operators.feature_cache import PairFeatureCache
-
-        cache = PairFeatureCache(docs.sparkSession, cfg.feature_cache_dir)
-        feats, _ = cache.featurize_with_cache(unconstrained, mention_pair_features)
-    else:
-        feats = mention_pair_features(unconstrained)
-    featurized = score_pairs(feats, cfg.weights)
+    featurized = score_pairs(mention_pair_features(unconstrained), cfg.weights)
     scored_u = featurized.select(
         "doc_id_1",
         "doc_id_2",
@@ -184,7 +171,6 @@ def run_pipeline(
     docs: DataFrame,
     config: ERConfig | None = None,
     seeds: DataFrame | None = None,
-    compute_metrics: bool = False,
 ) -> dict:
     """Full pipeline. Returns dict with:
 
@@ -202,11 +188,11 @@ def run_pipeline(
               flag. Writing it reads that census only — no mention
               re-extraction, no Python — and it stays readable after the
               job's persisted frames are released.
-    metrics:  driver-side dict. Row/cluster counts are OPT-IN
-              (``compute_metrics=True``): each is a full extra job, and a
+    metrics:  driver-side dict: ``wall_sec`` and ``tau``. No row or
+              cluster counts: each would be a full extra job, and a
               mandatory stage barrier per run is exactly the fixed cost
-              that caps scaling efficiency — production derives counts
-              from the sink write instead.
+              that caps scaling efficiency — callers count from the sink
+              write instead.
     """
     cfg = config or ERConfig()
     t0 = time.time()
@@ -215,7 +201,7 @@ def run_pipeline(
     # would spill the full pair frame (O(pairs) bytes) for no reuse; callers
     # that iterate (the feedback loop) checkpoint it themselves.
     mentions, census = _mentions_and_census(docs, cfg)
-    scored = _scored(mentions, census, docs, cfg, seeds)
+    scored = _scored(mentions, census, cfg, seeds)
     # every edge is a within-block pair of a counted block, so the census
     # pair count bounds the edge count before any edge is computed
     assignments = connected_components(
@@ -239,21 +225,9 @@ def run_pipeline(
         else F.lit(False),
     )
 
-    wall = time.time() - t0
-    metrics: dict = {"wall_sec": wall, "tau": cfg.tau}
-    if compute_metrics:
-        n_docs = docs.count()
-        n_clusters = clusters.select("cluster_id").distinct().count()
-        metrics.update(
-            {
-                "n_docs": n_docs,
-                "n_clusters": n_clusters,
-                "docs_per_sec": n_docs / wall if wall > 0 else None,
-            }
-        )
     return {
         "clusters": clusters,
         "scored": scored,
         "lineage": lineage,
-        "metrics": metrics,
+        "metrics": {"wall_sec": time.time() - t0, "tau": cfg.tau},
     }

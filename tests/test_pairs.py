@@ -1,15 +1,12 @@
 """Within-block pair generation: the salted path must emit exactly the
 same pair set as the plain self-join (every unordered pair once), and the
-census/min-size filters must match brute force."""
+block census must match brute force."""
 
 import itertools
 import random
 
-from pyspark.sql import functions as F
-
 from ent_res_feedback_spark.operators.blocking import (
     block_census,
-    filter_min_block_size,
     materialize_census,
 )
 from ent_res_feedback_spark.operators.pairs import within_block_pairs
@@ -79,8 +76,6 @@ def test_block_census_and_min_size(spark):
     )
     census = {r["block_key"]: (r["block_size"], r["n_pairs"]) for r in block_census(df).collect()}
     assert census == {"x": (3, 3), "y": (1, 0), "z": (2, 1)}
-    kept = {r["doc_id"] for r in filter_min_block_size(df, min_size=2).collect()}
-    assert kept == {"a", "b", "c", "e", "f"}
 
 
 def test_max_block_size_cap(spark):

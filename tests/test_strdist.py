@@ -7,7 +7,6 @@ import duckdb
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from ent_res_feedback_spark.functions import strdist as S
 
@@ -18,13 +17,6 @@ def test_prefix_dist_golden():
     assert S.prefix_dist_kernel("abc", "abd") == pytest.approx(1 - 2 / 3)
     assert S.prefix_dist_kernel("abc", "xyz") == 1.0
     assert S.prefix_dist_kernel("ab", "abcd") == 0.0
-
-
-def test_metric_lcs_golden():
-    assert S.metric_lcs_kernel("text", "text") == 0.0
-    # lcs('textual','txt')=3 -> 1 - 3/7
-    assert S.metric_lcs_kernel("textual", "txt") == pytest.approx(1 - 3 / 7)
-    assert S.metric_lcs_kernel("", "") == 0.0
 
 
 def test_jaro_winkler_golden():
@@ -63,11 +55,9 @@ def test_numpy_kernels_match_scalar(pairs):
     b = [y for _, y in pairs]
     jw = S._jaro_winkler_numpy(a, b)
     pf = S._prefix_dist_numpy(a, b)
-    lc = S._metric_lcs_numpy(a, b)
     for i, (x, y) in enumerate(pairs):
         assert jw[i] == pytest.approx(S.jaro_winkler_similarity(x, y), abs=1e-12)
         assert pf[i] == pytest.approx(S.prefix_dist_kernel(x, y), abs=1e-12)
-        assert lc[i] == pytest.approx(S.metric_lcs_kernel(x, y), abs=1e-12)
 
 
 @settings(max_examples=200, deadline=None)
@@ -90,17 +80,3 @@ def test_levenshtein_kernel_matches_duckdb(a, b):
         for j in range(1, n + 1):
             dp[j] = min(prev[j] + 1, dp[j - 1] + 1, prev[j - 1] + (a[i - 1] != b[j - 1]))
     assert dp[n] == d
-
-
-def test_name_text_features_frame(spark):
-    # reference tests/test_text.py:21-26: equal names -> [0,0,0,1];
-    # short/empty names -> all NULL (reference: NaN)
-    df = spark.createDataFrame(
-        [("text", "text"), ("", None), ("textual", "txt"), ("a", "ab")],
-        ["n1", "n2"],
-    )
-    rows = df.select(*S.name_text_features(F.col("n1"), F.col("n2"))).collect()
-    assert list(rows[0]) == [0.0, 0.0, 0.0, 1.0]
-    assert list(rows[1]) == [None] * 4
-    assert all(v is not None and 0.0 <= v <= 1.0 for v in rows[2])
-    assert list(rows[3]) == [None] * 4  # len<=1 gate (text.py:363)

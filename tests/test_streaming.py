@@ -49,82 +49,3 @@ def test_streaming_incremental_assigner(spark, tmp_path):
         clusters.setdefault(c, set()).add(gold_map[doc_id])
     pure = sum(1 for ents in clusters.values() if len(ents) == 1)
     assert pure / len(clusters) >= 0.85
-
-
-def test_windowed_block_counts_watermark_drops_late_rows(spark, tmp_path):
-    """Event-time windowed ingest stats: append-mode emission happens only
-    once the watermark passes a window's end, and rows later than the
-    allowance are dropped rather than reopening finalized state."""
-    import os
-    import time
-
-    from pyspark.sql import functions as F, types as T
-
-    from ent_res_feedback_spark.streaming.windowed_stats import (
-        windowed_block_counts,
-    )
-
-    src_dir = os.path.join(str(tmp_path), "src")
-    ckpt = os.path.join(str(tmp_path), "ckpt")
-    os.makedirs(src_dir)
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType()),
-            T.StructField("block_key", T.StringType()),
-            T.StructField("event_time", T.TimestampType()),
-        ]
-    )
-
-    def write_batch(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(src_dir, name))
-
-    t0 = "2026-01-01 00:0{m}:00"
-
-    def ts(m):
-        import datetime
-
-        return datetime.datetime(2026, 1, 1, 0, m, 0)
-
-    # batch 1: two docs in window [0,10), one in [10,20)
-    write_batch("b1", [("d1", "a b", ts(1)), ("d2", "a b", ts(2)), ("d3", "c d", ts(11))])
-
-    stream = spark.readStream.schema(schema).parquet(src_dir + "/*")
-    out = windowed_block_counts(
-        stream, window_duration="10 minutes", late_allowance="5 minutes"
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # nothing finalized yet: watermark = 00:11 - 5min = 00:06 < 00:10
-        assert spark.sql("SELECT * FROM win_counts").count() == 0
-
-        # batch 2: advance event time far enough to close window [0,10);
-        # also a LATE row for [0,10) that must be dropped (event 00:03 is
-        # behind the 00:06 watermark -> state for [0,10) may still absorb
-        # it pre-finalization, so send it AFTER the window closes)
-        write_batch("b2", [("d4", "a b", ts(21))])
-        q.processAllAvailable()
-        rows = {
-            (r["window_start"].minute, r["block_key"]): r["n_docs"]
-            for r in spark.sql("SELECT * FROM win_counts").collect()
-        }
-        assert rows.get((0, "a b")) == 2  # [00:00,00:10) finalized
-
-        # batch 3: late arrival for the finalized window -> dropped
-        write_batch("b3", [("d5", "a b", ts(3)), ("d6", "a b", ts(22))])
-        q.processAllAvailable()
-        rows = {
-            (r["window_start"].minute, r["block_key"]): r["n_docs"]
-            for r in spark.sql("SELECT * FROM win_counts").collect()
-        }
-        assert rows.get((0, "a b")) == 2  # unchanged: late row dropped
-    finally:
-        q.stop()

@@ -3,7 +3,6 @@ tests/test_text.py (values asserted there are the spec; our missing-value
 convention is NULL where the reference returns NaN)."""
 
 import math
-from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -30,84 +29,6 @@ def test_normalize_text(spark):
     assert out2[3] == "text"  # apostrophe special case (reference test line 19)
 
 
-def test_char_ngrams_counter_golden():
-    # reference tests/test_text.py:37-45
-    assert Counter() == T.char_ngrams_counter(None)
-    assert Counter() == T.char_ngrams_counter("the")
-    assert Counter(
-        ["hell", "ello", "hel", "ell", "llo", "he", "el", "ll", "lo", "wor", "wo", "or"]
-    ) == T.char_ngrams_counter("hello wor")
-    assert Counter(
-        ["hell", "ello", "hel", "ell", "llo", "he", "el", "ll", "lo", "wor",
-         "wo", "or", "h", "e", "l", "l", "o", "w", "o", "r"]
-    ) == T.char_ngrams_counter("hello wor", use_unigrams=True)
-
-
-def test_word_ngrams_counter_golden():
-    # reference tests/test_text.py:47-50
-    assert Counter() == T.word_ngrams_counter(None)
-    assert Counter() == T.word_ngrams_counter("the")
-    assert Counter(
-        ["quick green fox", "green fox jumped", "quick green", "green fox",
-         "fox jumped", "quick", "green", "fox", "jumped"]
-    ) == T.word_ngrams_counter("the quick green fox jumped")
-
-
-def test_ngram_counter_max_union_not_sum():
-    # Counter | is element-wise max (reference s2and/text.py:443): 'aaaa'
-    # yields bigram 'aa' x3, trigram 'aaa' x2 — union keeps maxima.
-    c = T.char_ngrams_counter("aaaa", stopwords=None)
-    assert c["aa"] == 3 and c["aaa"] == 2 and c["aaaa"] == 1
-
-
-def test_equal(spark):
-    lit = F.lit
-    assert one(spark, T.equal(lit(None), lit(None))) is None
-    assert one(spark, T.equal(lit(""), lit(""))) is None
-    assert one(spark, T.equal(lit("-"), lit("text"))) is None
-    assert one(spark, T.equal(lit("text"), lit("text"))) == 1
-    assert one(spark, T.equal(lit("text"), lit("hi"))) == 0
-
-
-def test_equal_middle(spark):
-    lit = F.lit
-    assert one(spark, T.equal_middle(lit(None), lit(None))) is None
-    assert one(spark, T.equal_middle(lit(""), lit(""))) is None
-    assert one(spark, T.equal_middle(lit("a"), lit(""))) is None
-    assert one(spark, T.equal_middle(lit("a"), lit("b"))) == 0
-    assert one(spark, T.equal_middle(lit("a"), lit("a"))) == 1
-    assert one(spark, T.equal_middle(lit("a"), lit("as"))) == 1
-    assert one(spark, T.equal_middle(lit("as"), lit("af"))) == 0
-    assert one(spark, T.equal_middle(lit("as"), lit("as"))) == 1
-
-
-def test_equal_initial(spark):
-    lit = F.lit
-    assert one(spark, T.equal_initial(lit(None), lit(None))) is None
-    assert one(spark, T.equal_initial(lit(""), lit(""))) is None
-    assert one(spark, T.equal_initial(lit("a"), lit("b"))) == 0
-    assert one(spark, T.equal_initial(lit("a"), lit("a"))) == 1
-    assert one(spark, T.equal_initial(lit("a"), lit("as"))) == 1
-
-
-def test_counter_jaccard(spark):
-    def cj(d1, d2, **kw):
-        df = spark.createDataFrame([(d1, d2)], "m1 map<string,int>, m2 map<string,int>")
-        return df.select(
-            T.counter_jaccard(F.col("m1"), F.col("m2"), **kw).alias("v")
-        ).collect()[0]["v"]
-
-    assert cj({}, {}) is None
-    # reference tests/test_text.py:79-80
-    c1 = dict(Counter(["1", "2", "3", "4", "5"]))
-    c2 = dict(Counter(["1", "2", "3", "4", "6"]))
-    assert cj(c1, c2) == pytest.approx(4 / 6)
-    c1b = dict(Counter(["1", "2", "3", "4", "5", "5"]))
-    assert cj(c1b, c2) == pytest.approx(4 / 7)
-    # denominator_max clamp + min(score, 1) (reference s2and/text.py:598-601)
-    assert cj(c1, c1, denominator_max=3) == 1.0
-
-
 def test_set_jaccard(spark):
     def sj(a, b):
         df = spark.createDataFrame([(a, b)], "a1 array<string>, a2 array<string>")
@@ -124,33 +45,6 @@ def test_compute_block(spark):
     out = [r["b"] for r in df.select(T.compute_block_key(F.col("n")).alias("b")).collect()]
     # reference tests/test_text.py:88-91
     assert out == ["", "text", "t text"]
-
-
-def test_diff(spark):
-    lit = F.lit
-    assert one(spark, T.abs_diff(lit(None), lit(None))) is None
-    assert one(spark, T.abs_diff(lit(10), lit(5))) == 5
-    assert one(spark, T.abs_diff(lit(5), lit(10))) == 5
-    assert one(spark, T.abs_diff(lit(0), lit(99), cap=50)) == 50
-
-
-def test_name_counts_min_max(spark):
-    # reference tests/test_text.py:98-101
-    df = spark.createDataFrame(
-        [((5, 100, 10, 200), (4, 99, 11, 201))],
-        "nc1 struct<first:int,first_last:int,last:int,last_first_initial:int>, "
-        "nc2 struct<first:int,first_last:int,last:int,last_first_initial:int>",
-    )
-    row = df.select(*T.name_counts_min_max(F.col("nc1"), F.col("nc2"))).collect()[0]
-    assert list(row) == [4, 99, 10, 200, 5, 100]
-    # nanmin skips NULL, max propagates NULL (reference s2and/text.py:716-719)
-    df2 = spark.createDataFrame(
-        [((None, 100, 10, 200), (4, None, 11, 201))],
-        "nc1 struct<first:int,first_last:int,last:int,last_first_initial:int>, "
-        "nc2 struct<first:int,first_last:int,last:int,last_first_initial:int>",
-    )
-    row2 = df2.select(*T.name_counts_min_max(F.col("nc1"), F.col("nc2"))).collect()[0]
-    assert list(row2) == [4, 100, 10, 200, None, None]
 
 
 def test_cosine_sim(spark):
