@@ -8,8 +8,9 @@ Layout
 ------
 functions/   scalar function library (reference: s2and/text.py)
 operators/   blocking, pair generation, featurization, constraints,
-             scoring, connected components, metrics, feedback,
-             incremental, dedup, similarity, text analysis
+             scoring, connected components, clustering, metrics,
+             feedback, incremental, dedup, similarity, text analysis
+sources/     labeled-pair CSV loader
 plans/       physical-plan audit
 streaming/   foreachBatch incremental-assignment driver
 corpus.py    deterministic synthetic interleaved-document corpus

@@ -2,10 +2,9 @@
 
 The reference's ``facet_eval`` does not just consume facets — it derives
 them: per-signature block size, gold-cluster size, within-block
-homonymity / synonymity fractions, and 0/1 feature-availability flags
-(the flags are not rebuilt: no job or query derives them). The repo's
-``metrics.facet_eval`` buckets B3 by any facet column; this module
-produces the structural ones.
+homonymity / synonymity fractions, and 0/1 feature-availability flags.
+The repo's ``metrics.facet_eval`` buckets B3 by any facet column; this
+module produces those columns.
 
 The reference derives homonymity/synonymity with an O(n^2) loop over all
 signature pairs (eval.py:264-287). The counts only depend on group
@@ -96,3 +95,49 @@ def derive_facets(
         frac(h_cnt, denom).alias("homonymity"),
         frac(s_cnt, denom).alias("synonymity"),
     )
+
+
+def availability_facets(
+    signatures: DataFrame,
+    first_col: str | None = "first",
+    affiliations_col: str | None = "affiliations",
+    email_col: str | None = "email",
+    coauthors_col: str | None = "coauthors",
+) -> DataFrame:
+    """Adds the reference's per-signature 0/1 feature-availability flags
+    (eval.py:331-380). Pass None to skip a column the frame lacks.
+
+    - ``has_first_name``: first name with >= 2 chars after removing dots
+    - ``has_affiliation``: non-empty affiliations array
+    - ``has_email``: email not in {'', NULL}
+    - ``has_coauthors``: non-empty coauthors array
+    """
+    out = signatures
+    if first_col is not None:
+        out = out.withColumn(
+            "has_first_name",
+            (
+                F.length(
+                    F.regexp_replace(F.coalesce(F.col(first_col), F.lit("")), r"\.", "")
+                )
+                >= 2
+            ).cast("int"),
+        )
+    if affiliations_col is not None:
+        out = out.withColumn(
+            "has_affiliation",
+            (F.size(F.coalesce(F.col(affiliations_col), F.array())) > 0).cast("int"),
+        )
+    if email_col is not None:
+        out = out.withColumn(
+            "has_email",
+            (
+                F.col(email_col).isNotNull() & (F.col(email_col) != "")
+            ).cast("int"),
+        )
+    if coauthors_col is not None:
+        out = out.withColumn(
+            "has_coauthors",
+            (F.size(F.coalesce(F.col(coauthors_col), F.array())) > 0).cast("int"),
+        )
+    return out

@@ -1,7 +1,7 @@
 """Similarity search over embedding columns (array<float>).
 
 - brute-force cosine top-k: exact baseline, JVM-side dot products for
-  oracle parity
+  oracle parity, or a numpy applyInPandas kernel for throughput
 - LSH-bucketed ANN (random-hyperplane signatures): the scale path — at
   10^9+ vectors the cross join is infeasible; hyperplane buckets bound
   candidates, then exact cosine re-ranks.
@@ -51,6 +51,54 @@ def brute_force_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("id", "neighbor_id", "cosine", "rank")
+    )
+
+
+def brute_force_topk_numpy(
+    embeddings: DataFrame,
+    query: DataFrame,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Throughput variant: broadcast the (small) query set into an Arrow-
+    batched kernel; each partition of the corpus does ONE numpy matmul
+    against all queries. Output: (query_id, neighbor_id, cosine) candidates
+    — top-k finalized by a groupBy window (merges per-partition top-ks)."""
+    q = query.select(id_col, vec_col).toPandas()
+    q_ids = q[id_col].to_numpy()
+    Q = np.stack(q[vec_col].to_numpy()).astype(np.float64)
+    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
+    spark = embeddings.sparkSession
+    bq = spark.sparkContext.broadcast((q_ids, Qn))
+    out_schema = "query_id long, neighbor_id long, cosine double"
+
+    def kernel(pdfs):
+        q_ids_l, Qn_l = bq.value
+        for pdf in pdfs:
+            if len(pdf) == 0:
+                continue
+            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+            S = Qn_l @ Xn.T  # [n_query, n_rows]
+            ids = pdf[id_col].to_numpy()
+            kk = min(k, S.shape[1])
+            idx = np.argpartition(-S, kth=kk - 1, axis=1)[:, :kk]
+            rows = {
+                "query_id": np.repeat(q_ids_l, kk),
+                "neighbor_id": ids[idx].ravel(),
+                "cosine": np.take_along_axis(S, idx, axis=1).ravel(),
+            }
+            yield pd.DataFrame(rows)
+
+    cands = embeddings.select(id_col, vec_col).mapInPandas(kernel, out_schema)
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        cands.where(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
     )
 
 
@@ -286,6 +334,58 @@ def ivf_centroids(
     return [[float(x) for x in r[vec_col]] for r in rows]
 
 
+def ivf_centroids_kmeans(
+    embeddings: DataFrame,
+    n_centroids: int = 16,
+    iters: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> list[list[float]]:
+    """Trained coarse-quantizer codebook: distributed Lloyd iterations
+    seeded from the deterministic md5 pick (``ivf_centroids``), so the
+    whole training is seed-stable with no RNG.
+
+    Each iteration is ONE aggregation job with the same shape the probe
+    join already has: assign every vector to its nearest centroid by
+    cosine (the same `_centroid_ranking` JVM expression ``ivf_topk``
+    uses for cell assignment — trainer and index can never disagree),
+    then per-cell component sums via ``groupBy(_cell)`` over fixed-width
+    sum expressions (map-side combinable, k groups in the shuffle, k*dim
+    scalars to the driver). Empty cells keep their previous centroid.
+    At 100 TB this is iters scans with a k-row shuffle each — scale-safe.
+    """
+    cents = ivf_centroids(embeddings, n_centroids, id_col, vec_col)
+    if not cents:
+        return cents
+    dim = len(cents[0])
+    for _ in range(iters):
+        assigned = embeddings.select(
+            F.col(vec_col),
+            _centroid_ranking(F.col(vec_col), cents)[0].alias("_cell"),
+        )
+        agg = (
+            assigned.groupBy("_cell")
+            .agg(
+                F.count("*").alias("_n"),
+                *[
+                    F.sum(F.col(vec_col)[i]).alias(f"_s{i}")
+                    for i in range(dim)
+                ],
+            )
+            .collect()  # bounded: n_centroids rows of dim+1 scalars
+        )
+        new = list(cents)
+        for r in agg:
+            if r["_n"]:
+                new[r["_cell"]] = [
+                    float(r[f"_s{i}"]) / r["_n"] for i in range(dim)
+                ]
+        if new == cents:
+            break  # Lloyd fixpoint
+        cents = new
+    return cents
+
+
 def _centroid_ranking(vec: Column, centroids: list[list[float]]) -> Column:
     """Array of centroid indices ordered by cosine desc (ties: index asc),
     as one JVM expression (struct sort, no UDF)."""
@@ -308,6 +408,7 @@ def ivf_topk(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF approximate k-NN: every vector lives in its nearest-centroid
     cell (the inverted file); every query probes its ``n_probe`` nearest
@@ -317,7 +418,7 @@ def ivf_topk(
 
     -> (id, neighbor_id, cosine, rank), rank 1..k per id.
     """
-    cents = ivf_centroids(embeddings, n_centroids, id_col, vec_col)
+    cents = centroids or ivf_centroids(embeddings, n_centroids, id_col, vec_col)
     ranked = _centroid_ranking(F.col(vec_col), cents)
     base = embeddings.select(F.col(id_col), F.col(vec_col), ranked.alias("_cells"))
     index_side = base.select(

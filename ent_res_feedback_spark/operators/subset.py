@@ -14,15 +14,17 @@ experiments. Its semantics (make_s2and_mini_dataset.py:25-26, 84-105):
 4. re-derive the signature set from the kept clusters — this re-adds
    the odd signature whose own block name is corrupted ("g miller" vs
    "g mller") but whose cluster survived;
-5. filter the side tables (papers / SPECTER embeddings) to the kept ids
-   (not rebuilt: no job or query filters a side table; it would be one
-   ``left_semi`` join on the kept ids).
+5. filter the side tables (papers / SPECTER embeddings) to the kept ids.
 
 Spark-first restatement: the census is one aggregate (tiny vs the doc
 table), the top-N selection is a window over that census only, and every
 "keep" is a semi-join — nothing quadratic, nothing collected. When the
 reference processes several datasets it applies the cutoff per dataset;
 pass ``dataset_col`` to reproduce that (census and rank partition by it).
+
+The reference's step 5 also keeps *references of all papers*; this
+engine's document model has no citation graph, so the side-table hook is
+the generic :func:`filter_side_table` semi-join (used for embeddings).
 """
 
 from __future__ import annotations
@@ -111,3 +113,12 @@ def mini_corpus(
         id_col
     )
     return docs.join(kept_ids, id_col, "left_semi")
+
+
+def filter_side_table(
+    side: DataFrame, kept_docs: DataFrame, side_id: str, doc_id: str = "doc_id"
+) -> DataFrame:
+    """Step 5 — keep a side table's rows (embeddings, payloads) whose id
+    appears among kept docs. A semi-join; ids-only on the build side."""
+    ids = kept_docs.select(F.col(doc_id).alias(side_id)).distinct()
+    return side.join(ids, side_id, "left_semi")

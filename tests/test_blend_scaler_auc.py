@@ -1,65 +1,17 @@
-"""FE4/M2/M3 (nameless view + blend), FE6 (StandardScaler), A5 (AUROC/AP).
+"""FE6 (StandardScaler), A5 (AUROC/AP).
 
-Goldens are computed independently in-test: numpy for the scaler, a pure-
-Python replica of sklearn's roc_auc_score / average_precision_score for
-the metrics (pairwise counting + step integral on ~10 rows), and manual
-sigmoid averages for the blend."""
-
-import math
+Goldens are computed independently in-test: numpy for the scaler, and a
+pure-Python replica of sklearn's roc_auc_score / average_precision_score
+for the metrics (pairwise counting + step integral on ~10 rows)."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from ent_res_feedback_spark.operators.metrics import auroc_ap
-from ent_res_feedback_spark.operators.parity import (
-    FEATURE_NAMES_39,
-    NAMELESS_FEATURE_NAMES,
-    nameless_feature_view,
-    score_pairs_blended,
-)
 from ent_res_feedback_spark.operators.scoring import (
     apply_standard_scaler,
     fit_standard_scaler,
 )
-
-
-def test_nameless_view_drops_exactly_the_name_groups():
-    # reference featurizer.py:76-90 feature_group_to_index with
-    # name_similarity [0-5], name_counts [27-32], advanced_name [35-38]
-    # removed -> [6..26, 33, 34]
-    expected = [FEATURE_NAMES_39[i] for i in list(range(6, 27)) + [33, 34]]
-    assert NAMELESS_FEATURE_NAMES == expected
-
-
-def test_nameless_view_projection(spark):
-    df = spark.createDataFrame(
-        [tuple(["a", "b"] + [float(i) for i in range(39)])],
-        ["doc_id_1", "doc_id_2"] + FEATURE_NAMES_39,
-    )
-    view = nameless_feature_view(df)
-    assert view.columns == ["doc_id_1", "doc_id_2"] + NAMELESS_FEATURE_NAMES
-    row = view.collect()[0]
-    assert row["affiliation_overlap"] == 6.0  # index 6 survives
-    assert "jaro" not in view.columns  # index 38 dropped
-
-
-def test_blended_score_is_mean_of_two_logistics(spark):
-    df = spark.createDataFrame(
-        [(0.8, 0.2), (0.1, 0.9)], "f_main double, f_nameless double"
-    )
-    out = score_pairs_blended(
-        df,
-        weights_main={"f_main": 2.0, "bias": -1.0},
-        weights_nameless={"f_nameless": 3.0, "bias": -0.5},
-    ).collect()
-
-    def sig(z):
-        return 1.0 / (1.0 + math.exp(-z))
-
-    for r in out:
-        want = (sig(-1.0 + 2.0 * r["f_main"]) + sig(-0.5 + 3.0 * r["f_nameless"])) / 2
-        assert r["score"] == pytest.approx(want)
 
 
 def test_standard_scaler_matches_numpy(spark):

@@ -1,18 +1,8 @@
 """Metric aggregations: B3 goldens ported from the reference
 tests/test_eval.py:7-38 (its b3 returns 3-decimal-rounded values — we
-round for comparison) plus pairwise-PRF sanity, v-measure, macro F1,
-facet buckets and AUROC/AP (goldens from a pure-Python replica of
-sklearn's roc_auc_score / average_precision_score on ~10 rows)."""
+round for comparison) plus pairwise-PRF sanity."""
 
-import numpy as np
 import pytest
-
-from ent_res_feedback_spark.operators.metrics import (
-    auroc_ap,
-    cmacro_pairwise_f1,
-    facet_eval,
-    v_measure,
-)
 
 
 def _clusters_df(spark, clusters: dict):
@@ -135,65 +125,3 @@ def test_pairwise_cluster_prf_values_and_single_job(spark):
     f1 = 2 * want_p * want_r / (want_p + want_r)
     assert got["f1"] == pytest.approx(f1)
     assert n_jobs == 1, f"expected 1 job, saw {n_jobs}"
-
-
-def test_v_measure_identity_and_bounds(spark):
-    gold = _clusters_df(spark, {"a": [1, 2, 3], "b": [4, 5]})
-    assert v_measure(gold, gold) == pytest.approx(1.0)
-    pred = _clusters_df(spark, {"x": [1, 2, 3, 4, 5]})
-    v = v_measure(pred, gold)
-    assert 0.0 <= v < 1.0
-
-
-def test_cmacro_and_facets(spark):
-    gold = _clusters_df(spark, {"g1": [1, 2], "g2": [3], "g3": [4, 5]})
-    pred = _clusters_df(spark, {"p1": [1, 2], "p2": [3], "p3": [4], "p4": [5]})
-    blocks = spark.createDataFrame(
-        [(str(i), "blk1" if i <= 3 else "blk2") for i in range(1, 6)],
-        "doc_id string, block_key string",
-    )
-    m = cmacro_pairwise_f1(pred, gold, blocks)
-    # blk1 is perfectly clustered; blk2 splits a gold pair
-    assert m["precision"] == pytest.approx(1.0)
-    assert 0.5 < m["recall"] < 1.0
-    facets = blocks.withColumnRenamed("block_key", "grp")
-    fe = {r["facet"]: r for r in facet_eval(pred, gold, facets, "grp").collect()}
-    assert fe["blk1"]["f1"] == pytest.approx(1.0)
-    assert fe["blk2"]["f1"] < 1.0
-
-
-def _roc_auc_py(y, s):
-    pos = [si for yi, si in zip(y, s) if yi == 1]
-    neg = [si for yi, si in zip(y, s) if yi == 0]
-    u = sum((p > n) + 0.5 * (p == n) for p in pos for n in neg)
-    return u / (len(pos) * len(neg))
-
-
-def _ap_py(y, s):
-    order = sorted(range(len(s)), key=lambda i: -s[i])
-    thresholds = sorted(set(s), reverse=True)
-    P = sum(y)
-    ap, prev_r = 0.0, 0.0
-    for t in thresholds:
-        tp = sum(1 for i in order if s[i] >= t and y[i] == 1)
-        fp = sum(1 for i in order if s[i] >= t and y[i] == 0)
-        r = tp / P
-        ap += (r - prev_r) * (tp / (tp + fp))
-        prev_r = r
-    return ap
-
-
-@pytest.mark.parametrize("seed", [1, 2])
-def test_auroc_ap_match_reference_impl(spark, seed):
-    rng = np.random.default_rng(seed)
-    y = [int(v) for v in rng.integers(0, 2, 12)]
-    if sum(y) in (0, 12):
-        y[0] = 1 - y[0]
-    # include ties to exercise the tie-correction
-    s = [round(float(v), 1) for v in rng.uniform(0, 1, 12)]
-    df = spark.createDataFrame(
-        list(zip(y, s)), "label int, score double"
-    )
-    got = auroc_ap(df)
-    assert got["auroc"] == pytest.approx(_roc_auc_py(y, s))
-    assert got["average_precision"] == pytest.approx(_ap_py(y, s))

@@ -19,6 +19,13 @@ EXCEPTIONS = {
     # the paper's incremental mode: whether a job runs the streaming
     # assigner or it is deleted is an open ROADMAP item
     f"{PKG}.streaming.incremental_stream",
+    # reference-parity operators kept with their tests (average-linkage
+    # HAC and its eps sweep, pair sampling, the labelled-pairs CSV
+    # loader): wiring them into a job or deleting them is an open
+    # ROADMAP item
+    f"{PKG}.operators.hac",
+    f"{PKG}.operators.sampling",
+    f"{PKG}.sources.pairs_csv",
 }
 
 

@@ -1,5 +1,5 @@
-"""Similarity search: brute-force top-k vs numpy oracle; LSH and IVF ANN
-recall."""
+"""Similarity search: brute-force top-k vs numpy oracle; LSH ANN recall;
+numpy mapInPandas variant agrees with the column-expression variant."""
 
 import numpy as np
 import pytest
@@ -40,6 +40,20 @@ def test_brute_force_topk_matches_numpy(spark, emb_df):
         assert got_i == want_i, f"id {i}"
         for (_, n, c), (wn, wc) in zip(sorted(got[i]), want[i]):
             assert c == pytest.approx(wc, abs=1e-9)
+
+
+def test_numpy_variant_matches_column_variant(spark, emb_df):
+    df, X = emb_df
+    k = 3
+    a = {
+        (r["id"], r["rank"]): r["neighbor_id"]
+        for r in similarity.brute_force_topk(df, k=k).collect()
+    }
+    b = {
+        (r["query_id"], r["rank"]): r["neighbor_id"]
+        for r in similarity.brute_force_topk_numpy(df, df, k=k).collect()
+    }
+    assert a == b
 
 
 def test_ann_lsh_recall_reasonable(spark, emb_df):
@@ -133,3 +147,45 @@ def test_ivf_topk_recall_and_exactness(spark, emb_df):
         if got.get(i) and sorted(got[i])[0][1] == top1:
             hits += 1
     assert hits / total >= 0.5, f"IVF recall@1 too low: {hits}/{total}"
+
+
+@pytest.fixture(scope="module")
+def clustered_emb_df(spark):
+    """Seeded corpus WITH cluster structure (4 gaussian lobes): the shape
+    where a trained codebook should beat the md5 pick."""
+    rng = np.random.default_rng(1234)
+    centers = rng.standard_normal((4, 16)) * 4.0
+    X = np.vstack(
+        [centers[i % 4] + rng.standard_normal(16) * 0.6 for i in range(80)]
+    ).astype(np.float32)
+    rows = [(i, X[i].tolist()) for i in range(len(X))]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    return df, X
+
+
+def test_ivf_kmeans_codebook_deterministic(spark, clustered_emb_df):
+    df, _ = clustered_emb_df
+    c1 = similarity.ivf_centroids_kmeans(df, n_centroids=4, iters=3)
+    c2 = similarity.ivf_centroids_kmeans(df, n_centroids=4, iters=3)
+    assert c1 == c2
+    assert len(c1) == 4 and len(c1[0]) == 16
+
+
+def test_ivf_kmeans_recall_at_least_md5(spark, clustered_emb_df):
+    """Round-4 acceptance: the trained codebook's recall@1 must be >=
+    the md5 stand-in's at identical n_centroids/n_probe."""
+    df, X = clustered_emb_df
+    exact = {i: v[0][0] for i, v in _numpy_topk(X, 1).items()}
+
+    def recall(centroids):
+        got = similarity.ivf_topk(
+            df, k=1, n_centroids=8, n_probe=1, centroids=centroids
+        ).collect()
+        top = {r["id"]: r["neighbor_id"] for r in got if r["rank"] == 1}
+        return sum(top.get(i) == exact[i] for i in exact) / len(exact)
+
+    md5_cents = similarity.ivf_centroids(df, n_centroids=8)
+    km_cents = similarity.ivf_centroids_kmeans(df, n_centroids=8, iters=5)
+    r_md5, r_km = recall(md5_cents), recall(km_cents)
+    assert r_km >= r_md5, (r_km, r_md5)
+    assert r_km >= 0.6, r_km

@@ -10,7 +10,10 @@ the reference script's semantics (scripts/make_s2and_mini_dataset.py:84-105):
 
 import collections
 
+from pyspark.sql import functions as F
+
 from ent_res_feedback_spark.operators.subset import (
+    filter_side_table,
     kept_blocks,
     mini_corpus,
 )
@@ -134,6 +137,16 @@ def test_per_dataset_partitioning(spark):
         ).collect()
     }
     assert got == {4}
+
+
+def test_filter_side_table(spark):
+    docs, clusters = _frames(spark, ROWS)
+    kept = mini_corpus(docs, clusters, big_block_cutoff=2)
+    side = spark.createDataFrame(
+        [(d, float(d)) for d, _, _ in ROWS], "vec_id long, v double"
+    )
+    out = filter_side_table(side, kept, side_id="vec_id")
+    assert {r.vec_id for r in out.collect()} == {1, 2, 8, 9, 10}
 
 
 def test_kept_blocks_plan_is_broadcastable(spark):

@@ -1,17 +1,12 @@
-"""Scoring: the M2 N-way voting goldens (the column expressions must
-reproduce the reference VotingClassifier, model.py:879-981, as replayed
-with numpy, including argmax's tie-toward-class-0) and the driver-side
-logistic fit the feedback refit uses."""
+"""M2 N-way voting goldens: the column expressions must reproduce the
+reference VotingClassifier (model.py:879-981) as replayed with numpy,
+including argmax's tie-toward-class-0."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from ent_res_feedback_spark.operators.metrics import auroc_ap
 from ent_res_feedback_spark.operators.scoring import (
-    collect_training_sample,
-    fit_logistic,
-    logistic_score_col,
     vote_hard_col,
     vote_soft_col,
 )
@@ -82,34 +77,3 @@ def test_weight_length_mismatch_raises():
         vote_soft_col([F.lit(0.5)], [1.0, 2.0])
     with pytest.raises(ValueError):
         vote_hard_col([F.lit(0.5)], [1.0, 2.0])
-
-
-COLS = ["f1", "f2"]
-
-
-def _frames(spark, n=400, seed=5):
-    """Noisily separable 2-feature pair data, split train/val."""
-    rng = np.random.default_rng(seed)
-    y = rng.integers(0, 2, n)
-    f1 = y * 0.8 + rng.normal(0, 0.45, n)
-    f2 = y * 0.3 + rng.normal(0, 0.6, n)
-    rows = [(float(a), float(b), int(c)) for a, b, c in zip(f1, f2, y)]
-    df = spark.createDataFrame(rows, "f1 double, f2 double, label int")
-    train, val = df.randomSplit([0.6, 0.4], seed=seed)
-    return train, val
-
-
-def test_fit_logistic_deterministic_and_learns(spark):
-    """The default-hyper fit on a collected training sample: the same
-    seed gives the same weights, and the fitted score ranks the held-out
-    pairs better than chance."""
-    train, val = _frames(spark)
-    X, y = collect_training_sample(train, "label", COLS, seed=42)
-    w = fit_logistic(X, y, COLS)
-    assert w == fit_logistic(X, y, COLS)
-    assert set(w) == {*COLS, "bias"}
-    auroc = auroc_ap(
-        val.withColumn("__score", logistic_score_col(w, COLS)),
-        label_col="label", score_col="__score",
-    )["auroc"]
-    assert auroc > 0.5
