@@ -425,36 +425,30 @@ def _score_col() -> F.Column:
     return F.round(_score_col_raw(), 6).alias("score")
 
 
-def _er_pair_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _er_pair_features(d: DataFrame) -> DataFrame:
+    """Within-block pairs of a ``_doc_feats`` frame with their features."""
     from ent_res_feedback_spark.operators.pairs import within_block_pairs
 
-    d = _doc_feats(spark, sf_dir)
     pairs = within_block_pairs(
         d, key="block_key", id_col="doc_id", salt_threshold=500, num_salt_buckets=4
     )
     return pairs.select("doc_id_1", "doc_id_2", "block_key", *_feature_cols())
 
 
-def _er_pair_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    feats = _er_pair_features(spark, sf_dir)
+def _er_pair_scores(d: DataFrame) -> DataFrame:
+    feats = _er_pair_features(d)
     return feats.select("doc_id_1", "doc_id_2", "block_key", _score_col())
 
 
-def _er_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ent_res_feedback_spark.operators.cc import (
-        components_with_singletons,
-        connected_components,
-    )
+def _er_clusters(d: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id) of a ``_doc_feats`` frame: CC over the pairs
+    scoring at least TAU, every doc of ``d`` a node."""
+    from ent_res_feedback_spark.pipeline import clusters_from_edges
 
-    scores = _er_pair_scores(spark, sf_dir)
-    edges = scores.where(F.col("score") >= TAU).select(
+    edges = _er_pair_scores(d).where(F.col("score") >= TAU).select(
         F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst")
     )
-    assignments = connected_components(edges)
-    docs = _read_table(spark, sf_dir, "documents").select("doc_id")
-    return components_with_singletons(assignments, docs, "doc_id").withColumnRenamed(
-        "component", "cluster_id"
-    )
+    return clusters_from_edges(edges, d.select("doc_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -494,25 +488,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def q_pairs(spark, sf_dir):
-        return _er_pair_features(spark, sf_dir).select(
+        return _er_pair_features(_doc_feats(spark, sf_dir)).select(
             "doc_id_1", "doc_id_2", "block_key"
         )
 
     def q_pair_features(spark, sf_dir):
-        return _er_pair_features(spark, sf_dir)
+        return _er_pair_features(_doc_feats(spark, sf_dir))
 
     def q_pair_scores(spark, sf_dir):
-        return _er_pair_scores(spark, sf_dir)
+        return _er_pair_scores(_doc_feats(spark, sf_dir))
 
     def q_edges(spark, sf_dir):
-        return _er_pair_scores(spark, sf_dir).where(F.col("score") >= TAU)
+        return _er_pair_scores(_doc_feats(spark, sf_dir)).where(F.col("score") >= TAU)
 
     def q_clusters(spark, sf_dir):
-        return _er_clusters(spark, sf_dir)
+        return _er_clusters(_doc_feats(spark, sf_dir))
 
     def q_cluster_sizes(spark, sf_dir):
         return (
-            _er_clusters(spark, sf_dir)
+            _er_clusters(_doc_feats(spark, sf_dir))
             .groupBy("cluster_id")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
         )
@@ -597,7 +591,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         reaches the driver; the final two scalars do."""
         from ent_res_feedback_spark.operators.metrics import auroc_ap
 
-        scored = _er_pair_scores(spark, sf_dir)
+        scored = _er_pair_scores(_doc_feats(spark, sf_dir))
         lab = (
             F.conv(
                 F.substring(
@@ -843,60 +837,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         themselves. Same simple feature stack as er_pair_scores, so DuckDB
         replays every step (incl. the recursive-CTE connected components).
         """
-        from ent_res_feedback_spark.operators.cc import (
-            components_with_singletons,
-            connected_components,
-        )
         from ent_res_feedback_spark.operators.incremental import argmin_assign
 
         d = _doc_feats(spark, sf_dir)
         old_d = d.where(F.col("doc_id") % 5 != 0)
         new_d = d.where(F.col("doc_id") % 5 == 0)
+        base = _er_clusters(old_d)
 
-        def self_scores(sub):
-            a = sub.select(
-                F.col("doc_id").alias("doc_id_1"),
-                F.col("first_tok").alias("first_tok_1"),
-                F.col("tokens").alias("tokens_1"),
+        def side(sub, sfx):
+            return sub.select(
+                *[F.col(c).alias(c + sfx) for c in ("doc_id", "first_tok", "tokens")],
                 "block_key",
             )
-            b = sub.select(
-                F.col("doc_id").alias("doc_id_2"),
-                F.col("first_tok").alias("first_tok_2"),
-                F.col("tokens").alias("tokens_2"),
-                "block_key",
-            )
-            pairs = a.join(b, "block_key").where(F.col("doc_id_1") < F.col("doc_id_2"))
-            return pairs.select("doc_id_1", "doc_id_2", *_feature_cols()).select(
-                "doc_id_1", "doc_id_2", _score_col()
-            )
-
-        def cluster(sub):
-            edges = self_scores(sub).where(F.col("score") >= TAU).select(
-                F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst")
-            )
-            return components_with_singletons(
-                connected_components(edges), sub.select("doc_id"), "doc_id"
-            ).withColumnRenamed("component", "cluster_id")
-
-        base = cluster(old_d)
 
         cross = (
-            new_d.select(
-                F.col("doc_id").alias("doc_id_1"),
-                F.col("first_tok").alias("first_tok_1"),
-                F.col("tokens").alias("tokens_1"),
-                "block_key",
-            )
-            .join(
-                old_d.select(
-                    F.col("doc_id").alias("doc_id_2"),
-                    F.col("first_tok").alias("first_tok_2"),
-                    F.col("tokens").alias("tokens_2"),
-                    "block_key",
-                ),
-                "block_key",
-            )
+            side(new_d, "_1")
+            .join(side(old_d, "_2"), "block_key")
             .select("doc_id_1", "doc_id_2", *_feature_cols())
             .select("doc_id_1", "doc_id_2", _score_col())
             .join(
@@ -909,7 +865,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         best = argmin_assign(cross, eps=1.0 - TAU)
         leftover_d = new_d.join(best, "doc_id", "left_anti")
-        leftover_clusters = cluster(leftover_d)
+        leftover_clusters = _er_clusters(leftover_d)
         return (
             base.unionByName(best)
             .unionByName(leftover_clusters)
@@ -951,7 +907,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "block_key",
             F.split(F.col("norm_text"), " ").getItem(0).alias("full_name"),
         )
-        clusters = _er_clusters(spark, sf_dir)
+        clusters = _er_clusters(_doc_feats(spark, sf_dir))
         sig = mentions.join(clusters, "doc_id")
         out = derive_facets(
             sig, id_col="doc_id", block_col="block_key",
@@ -979,7 +935,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             vote_soft_col,
         )
 
-        feats = _er_pair_features(spark, sf_dir)
+        feats = _er_pair_features(_doc_feats(spark, sf_dir))
 
         def r6(c):
             # portable round-half-up: F.round/duckdb round() disagree on
@@ -1029,7 +985,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         exactly these rows)."""
         from ent_res_feedback_spark.operators.metrics import b3_per_item
 
-        pred = _er_clusters(spark, sf_dir)
+        pred = _er_clusters(_doc_feats(spark, sf_dir))
         gold = _gold_block_clusters(spark, sf_dir)
         out = b3_per_item(pred, gold)
         r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
@@ -1047,7 +1003,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         both engines."""
         from ent_res_feedback_spark.operators.metrics import pairwise_cluster_prf
 
-        pred = _er_clusters(spark, sf_dir)
+        pred = _er_clusters(_doc_feats(spark, sf_dir))
         gold = _gold_block_clusters(spark, sf_dir)
         res = pairwise_cluster_prf(pred, gold)
 
@@ -1095,7 +1051,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             threshold_sweep_components,
         )
 
-        scores = _er_pair_scores(spark, sf_dir)
+        scores = _er_pair_scores(_doc_feats(spark, sf_dir))
         docs = _read_table(spark, sf_dir, "documents").select("doc_id")
         pred = threshold_sweep_components(scores, SWEEP_TAUS, docs)
         gold = _gold_block_clusters(spark, sf_dir)

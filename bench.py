@@ -149,7 +149,8 @@ def _shared_intermediate_timings(spark, sf_dir: str) -> dict:
 
     out: dict[str, float] = {}
     t0 = time.time()
-    clusters = entry_mod._er_clusters(spark, sf_dir).localCheckpoint()
+    feats = entry_mod._doc_feats(spark, sf_dir)
+    clusters = entry_mod._er_clusters(feats).localCheckpoint()
     clusters.count()
     out["er_clusters_checkpoint"] = round(time.time() - t0, 3)
 
@@ -226,20 +227,15 @@ spark = get_spark("er-scaling", cores=cores, shuffle_partitions=shuffle_parts,
 docs, _gold = spark_corpus(spark, n_entities)
 docs = docs.repartition(cores * 2).cache()
 n = docs.count()
-from pyspark.sql import functions as F
-from ent_res_feedback_spark.operators.cc import (
-    components_with_singletons, connected_components)
-from ent_res_feedback_spark.pipeline import scored_pair_distances
+from ent_res_feedback_spark.pipeline import (
+    clusters_from_edges, scored_pair_distances, tau_edges)
 
 def er_job(d, out_path):
     # the realistic job shape: documents -> clusters table written to
     # parquet (ONE sink action), exactly what jobs/run_er_job.py ships
     cfg = ERConfig(salt_threshold=800, num_salt_buckets=8)
     scored = scored_pair_distances(d, cfg)
-    edges = scored.where(F.col("dist") <= (1.0 - cfg.tau)).select(
-        F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst"))
-    assign = connected_components(edges)
-    clusters = components_with_singletons(assign, d.select("doc_id"), "doc_id")
+    clusters = clusters_from_edges(tau_edges(scored, cfg.tau), d.select("doc_id"))
     clusters.write.mode("overwrite").parquet(out_path)
 
 # Steady-state protocol: one untimed full warm-up run (JVM JIT + Janino
@@ -283,7 +279,7 @@ for line in sys.stdin:
     elif cmd == "FINISH":
         break
 n_clusters = spark.read.parquet("/tmp/er_scaling_out_%d" % cores).select(
-    "component").distinct().count()
+    "cluster_id").distinct().count()
 
 # per-job breakdown of each timed window from the event log
 jobs = {}

@@ -138,18 +138,19 @@ def run_pieces():
     out["er_n_pairs"] = pairs.count()
     out["er_pair_features"] = _timed(
         spark, "er_pair_features",
-        lambda: entry._er_pair_features(spark, SF_DIR),
+        lambda: entry._er_pair_features(entry._doc_feats(spark, SF_DIR)),
     )
     out["er_pair_scores"] = _timed(
         spark, "er_pair_scores",
-        lambda: entry._er_pair_scores(spark, SF_DIR),
+        lambda: entry._er_pair_scores(entry._doc_feats(spark, SF_DIR)),
     )
-    edges = entry._er_pair_scores(spark, SF_DIR).where(
+    edges = entry._er_pair_scores(entry._doc_feats(spark, SF_DIR)).where(
         F.col("score") >= entry.TAU
     )
     out["er_n_edges"] = edges.count()
     out["er_clusters"] = _timed(
-        spark, "er_clusters", lambda: entry._er_clusters(spark, SF_DIR)
+        spark, "er_clusters",
+        lambda: entry._er_clusters(entry._doc_feats(spark, SF_DIR)),
     )
     print(json.dumps(out))
 

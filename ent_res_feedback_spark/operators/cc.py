@@ -275,11 +275,14 @@ def _finish_on_driver(edges: DataFrame) -> DataFrame:
     return spark.createDataFrame(out, schema)
 
 
+#: star-round super-steps before ``connected_components`` gives up; the
+#: loop converges in O(log^2 n) rounds (O(log n) in practice)
+MAX_ITERATIONS = 50
+
+
 def connected_components(
     edges: DataFrame,
     checkpoint_dir: str | None = None,
-    max_iterations: int = 50,
-    checkpoint_interval: int = 1,
     finish_edge_threshold: int | None = 5_000_000,
     edge_bound: int | None = None,
 ) -> DataFrame:
@@ -295,22 +298,9 @@ def connected_components(
     input under the same dir invalidates the store instead of silently
     returning stale clusters.
 
-    Barrier budget: ``checkpoint_interval`` large/small-star rounds run
-    per materialization (lazy plan in between), and the convergence
-    checksum rides the checkpoint action as an Observation — so a k-round
-    super-step costs ONE job, not 2k. Extra rounds past the fixpoint are
-    no-ops on the edge set (star rounds are idempotent there), so interval
-    > 1 never changes the result (k-invariance test in tests/test_cc.py).
-
-    Default k=1, MEASURED (BENCH/ANALYSIS.md round-5): each star round's
-    logical plan embeds its input ~3x, so a k-round super-step carries
-    ~3^(2k) subtree copies — 81 at k=2 vs 9 at k=1 — and the driver-side
-    planning/codegen of those plans is a per-super-step FIXED cost that
-    scales with nothing. At 550k docs, k=1 beat k=2 end-to-end by 36% at
-    2 cores and ~55% at 8 (identical clusters), because halving the
-    unrolled plan depth outweighs doubling the (cheap, Observation-
-    riding) checkpoint actions. k=4 is structurally unsafe (driver OOM
-    rendering the ~6,561-copy plan at bench scale).
+    Barrier budget: each super-step is ONE large/small-star round, and
+    the convergence checksum rides that round's checkpoint action as an
+    Observation — one job per round, not two.
 
     ``finish_edge_threshold`` (round-6): once the current edge set —
     input or any super-step survivor — is at or below this count, the
@@ -339,7 +329,6 @@ def connected_components(
     small enough, or iterated with fingerprint resume otherwise.
     """
     spark = edges.sparkSession
-    k = max(1, checkpoint_interval)
 
     # Early finish: star rounds preserve the node set and the component
     # structure, so an exact union-find over the CURRENT edge set yields
@@ -400,10 +389,16 @@ def connected_components(
     if _small_enough(n_cur):
         return _finish_on_driver(cur)
 
-    for i in range(start_iter, max_iterations):
-        nxt = cur
-        for _ in range(k):
-            nxt = _small_star(_large_star(nxt))
+    for i in range(start_iter, MAX_ITERATIONS):
+        # One star round per materialization, MEASURED (BENCH/ANALYSIS.md
+        # round-5): each round's logical plan embeds its input ~3x, so k
+        # unrolled rounds carry ~3^(2k) subtree copies — 81 at k=2 vs 9 at
+        # k=1 — and the driver-side planning/codegen of those plans is a
+        # fixed cost per super-step that scales with nothing. At 550k docs
+        # k=1 beat k=2 end-to-end by 36% at 2 cores and ~55% at 8
+        # (identical clusters); k=4 OOM'd the driver rendering the
+        # ~6,561-copy plan at bench scale.
+        nxt = _small_star(_large_star(cur))
         if store is not None:
             nxt, n, h = store.write(nxt, i)
         else:
@@ -420,7 +415,7 @@ def connected_components(
             return _finish_on_driver(cur)
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} iterations"
+            f"connected_components did not converge in {MAX_ITERATIONS} iterations"
         )
 
     # At fixpoint the small-star output is a star: (node -> component min).

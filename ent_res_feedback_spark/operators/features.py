@@ -9,8 +9,8 @@ by operators/pairs.py — no per-row Python anywhere.
 
 ``mention_pair_features`` produces the north-star feature set
 (Jaro-Winkler + Levenshtein + prefix on first names, middle-initial
-compatibility, affiliation token jaccard, optional embedding cosine) with
-the same NULL->neutral fills as the oracle (oracle.name_features_py), so
+compatibility, affiliation token jaccard) with the same NULL->neutral
+fills as the oracle (oracle.name_features_py), so
 Spark-vs-oracle disagreement isolates plumbing bugs, not model drift.
 """
 
@@ -26,7 +26,6 @@ from ent_res_feedback_spark.functions.strdist import (
     prefix_dist,
 )
 from ent_res_feedback_spark.functions.text import set_jaccard
-from ent_res_feedback_spark.functions.vectors import cosine_sim
 
 NEUTRAL = 0.5  # NULL -> neutral evidence fill (oracle.name_features_py)
 
@@ -63,54 +62,32 @@ def _tokens(col: Column) -> Column:
 
 
 @once_per_context
-def _pair_feature_columns(fill_neutral: bool, with_embedding: bool) -> tuple:
-    """FEATURE_COLS as aliased columns, plus the ``emb_cosine`` column
-    (None without ``with_embedding``) — built once per SparkContext."""
+def _pair_feature_columns() -> tuple:
+    """FEATURE_COLS as aliased columns — built once per SparkContext."""
     f1, f2 = F.col("first_1"), F.col("first_2")
     gate = (F.length(f1) > 1) & (F.length(f2) > 1)
-
-    jw = F.when(gate, jaro_winkler(f1, f2))
-    lev = F.when(gate, 1.0 - levenshtein_norm(f1, f2))
-    pref = F.when(gate, 1.0 - prefix_dist(f1, f2))
+    neutral = F.lit(NEUTRAL)
     affil = set_jaccard(_tokens(F.col("affil_norm_1")), _tokens(F.col("affil_norm_2")))
-
-    if fill_neutral:
-        jw = F.coalesce(jw, F.lit(NEUTRAL))
-        lev = F.coalesce(lev, F.lit(NEUTRAL))
-        pref = F.coalesce(pref, F.lit(NEUTRAL))
-        affil = F.coalesce(affil, F.lit(NEUTRAL))
-
-    features = (
-        jw.alias("jw_first"),
-        lev.alias("lev_first"),
-        pref.alias("prefix_first"),
+    return (
+        F.coalesce(F.when(gate, jaro_winkler(f1, f2)), neutral).alias("jw_first"),
+        F.coalesce(
+            F.when(gate, 1.0 - levenshtein_norm(f1, f2)), neutral
+        ).alias("lev_first"),
+        F.coalesce(
+            F.when(gate, 1.0 - prefix_dist(f1, f2)), neutral
+        ).alias("prefix_first"),
         middle_compatible(F.col("middle_1"), F.col("middle_2")).alias("middle_compat"),
-        affil.alias("affil_jaccard"),
+        F.coalesce(affil, neutral).alias("affil_jaccard"),
     )
-    emb = None
-    if with_embedding:
-        emb = F.when(
-            F.col("embedding_1").isNotNull() & F.col("embedding_2").isNotNull(),
-            cosine_sim(F.col("embedding_1"), F.col("embedding_2")),
-        )
-    return features, emb
 
 
-def mention_pair_features(
-    pairs: DataFrame,
-    fill_neutral: bool = True,
-    with_embedding: bool = False,
-) -> DataFrame:
-    """Adds FEATURE_COLS (+ ``emb_cosine`` when requested) to a pair frame
-    with first/middle/affil_norm columns suffixed _1/_2.
+def mention_pair_features(pairs: DataFrame) -> DataFrame:
+    """Adds FEATURE_COLS to a pair frame with first/middle/affil_norm
+    columns suffixed _1/_2.
 
     String-distance features gate on len>1 (reference text.py:363:
     initial-only names carry no distance evidence) and fill NULL->0.5.
     The expression trees are built once per SparkContext
     (``_pair_feature_columns``).
     """
-    features, emb = _pair_feature_columns(fill_neutral, with_embedding)
-    out = pairs.select("*", *features)
-    if with_embedding:
-        out = out.withColumn("emb_cosine", emb)
-    return out
+    return pairs.select("*", *_pair_feature_columns())

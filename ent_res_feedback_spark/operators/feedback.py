@@ -25,24 +25,25 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ent_res_feedback_spark.operators.cc import (
-    components_with_singletons,
-    connected_components,
-)
 from ent_res_feedback_spark.pipeline import (
     ERConfig,
+    clusters_from_edges,
     release_persisted,
     scored_pair_distances,
     tau_edges,
 )
 
+#: mass of the scored pairs on each side of tau's rank that the
+#: uncertainty band spans (FB3)
+BAND_QUANTILE = 0.1
+#: labels a refit round needs before it fits new weights (FB1)
+MIN_REFIT_LABELS = 10
 
-def uncertainty_band(
-    scored: DataFrame, tau: float, band_quantile: float = 0.1
-) -> tuple[float, float]:
+
+def uncertainty_band(scored: DataFrame, tau: float) -> tuple[float, float]:
     """FB3 — approxQuantile-derived score band around the threshold: the
-    narrowest [lo, hi] containing ~band_quantile of the scored mass on
-    each side of TAU'S OWN RANK in the score distribution.
+    narrowest [lo, hi] containing ~``BAND_QUANTILE`` of the scored mass
+    on each side of TAU'S OWN RANK in the score distribution.
 
     The band is anchored at tau's quantile position (the fraction of
     scores <= tau), not at the median: with a score distribution skewed
@@ -59,7 +60,7 @@ def uncertainty_band(
     rank = (n_below or 0) / n
     lo, hi = s.approxQuantile(
         "score",
-        [max(0.0, rank - band_quantile), min(1.0, rank + band_quantile)],
+        [max(0.0, rank - BAND_QUANTILE), min(1.0, rank + BAND_QUANTILE)],
         0.01,
     )
     # clamp the band to straddle tau
@@ -68,12 +69,10 @@ def uncertainty_band(
     return lo, hi
 
 
-def select_uncertain_pairs(
-    scored: DataFrame, tau: float, k: int, band_quantile: float = 0.1
-) -> DataFrame:
+def select_uncertain_pairs(scored: DataFrame, tau: float, k: int) -> DataFrame:
     """Top-k pairs by |score - tau| within the uncertainty band,
     deterministic tie-break on ids."""
-    lo, hi = uncertainty_band(scored, tau, band_quantile)
+    lo, hi = uncertainty_band(scored, tau)
     return (
         scored.where(
             F.col("score").isNotNull() & F.col("score").between(lo, hi)
@@ -98,34 +97,20 @@ class FeedbackState:
 
 def run_feedback_loop(
     docs: DataFrame,
-    labeler=None,
+    labeler,
     config: ERConfig | None = None,
     max_rounds: int = 5,
     pairs_per_round: int = 20,
     metric_fn=None,
     refit_every: int | None = None,
-    min_refit_labels: int = 10,
-    batch_labeler=None,
 ) -> dict:
     """Bounded feedback loop (FB4).
 
-    Labels come from one of two oracle forms:
-
-    - scalar ``labeler(doc_id_1, doc_id_2) -> 0/1`` gold label, or None
-      to abstain (pair unknown to the oracle — no constraint is
-      synthesized for it; the simulation oracle mirrors the reference's
-      gold-cluster comparison, ecc.py:845-860);
-    - batch ``batch_labeler(pairs_df) -> labels_df`` taking a DataFrame
-      ``(doc_id_1, doc_id_2)`` and returning ``(doc_id_1, doc_id_2,
-      label)`` — omitted rows or NULL labels abstain. One frame
-      round-trip per round instead of a Python call per pair, so rounds
-      carrying thousands of labels skip the per-pair driver loop.
-
-    The keyword decides the form: ``labeler=`` is always called per
-    pair, ``batch_labeler=`` always with the round's pair frame.
-
-    A round where every selected pair is abstained ends the loop (no new
-    information).
+    ``labeler(doc_id_1, doc_id_2) -> 0/1`` gold label, or None to
+    abstain (pair unknown to the oracle — no constraint is synthesized
+    for it; the simulation oracle mirrors the reference's gold-cluster
+    comparison, ecc.py:845-860). A round where every selected pair is
+    abstained ends the loop (no new information).
     metric_fn(clusters_df) -> float, optional early-exit metric
     (stops when it reaches 1.0).
 
@@ -137,28 +122,40 @@ def run_feedback_loop(
     ``refit_every=k`` additionally REFITS the logistic weights every k-th
     round on all labels gathered so far (FB1 re-weighting — the analog of
     the reference re-solving its objective with the folded constraints,
-    ecc.py:645-668) once at least ``min_refit_labels`` labels exist.
-    A refit changes the model globally, so that round re-scores the whole
-    corpus instead of the touched blocks — the lineage bound deliberately
-    does not apply when the weights themselves moved.
+    ecc.py:645-668) once at least ``MIN_REFIT_LABELS`` labels exist.
+    A refit changes the model globally, so that round touches every
+    block: it re-scores the whole corpus, and the lineage bound restarts
+    from it.
     """
-    if (labeler is None) == (batch_labeler is None):
-        raise TypeError(
-            "pass exactly one of labeler= (scalar) or batch_labeler= (batch)"
-        )
     cfg = config or ERConfig()
     spark = docs.sparkSession
+    nodes = docs.select("doc_id")
     state = FeedbackState()
 
+    def settle(
+        frame: DataFrame, rescored: DataFrame
+    ) -> tuple[DataFrame, DataFrame, float | None]:
+        """Materialize a round's scored frame with ``localCheckpoint``,
+        release what its re-score persisted (no cache accumulation
+        across rounds), and cluster it. The frame's row count rides the
+        checkpoint as an Observation (no extra job) and bounds the
+        edges, so CC finishes on the driver without materializing them
+        first."""
+        obs = Observation()
+        scored = frame.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+        release_persisted(rescored)
+        clusters = clusters_from_edges(
+            tau_edges(scored, cfg.tau), nodes, edge_bound=int(obs.get["n"])
+        )
+        return scored, clusters, metric_fn(clusters) if metric_fn else None
+
     raw = scored_pair_distances(docs, cfg, seeds=None)
-    scored, n_scored = _checkpointed(raw)
-    release_persisted(raw)  # checkpoint done — drop the cached mentions
+    scored, clusters, m = settle(raw, raw)
     # every round's frame keeps round 0's partition count: the union of
     # the untouched pairs and the re-score would otherwise add the
     # re-score's partitions every round, widening every later stage
     n_parts = scored.rdd.getNumPartitions()
-    clusters = _cluster_from(scored, docs, cfg, n_scored)
-    state.history.append({"round": 0, "metric": metric_fn(clusters) if metric_fn else None})
+    state.history.append({"round": 0, "metric": m})
 
     for rnd in range(1, max_rounds + 1):
         uncertain = select_uncertain_pairs(
@@ -166,12 +163,9 @@ def run_feedback_loop(
         ).collect()
         if not uncertain:
             break
-        labels = _labels_for(
-            spark, batch_labeler or labeler, uncertain,
-            is_batch=batch_labeler is not None,
-        )
         new_seeds = []
-        for r, label in zip(uncertain, labels):
+        for r in uncertain:
+            label = labeler(r["doc_id_1"], r["doc_id_2"])
             if label is None:  # labeler abstained — no constraint for it
                 continue
             kind = "require" if label == 1 else "disallow"
@@ -184,80 +178,48 @@ def run_feedback_loop(
             state.seeds, "doc_id_1 string, doc_id_2 string, kind string"
         )
 
-        if (
+        refit = bool(
             refit_every
             and rnd % refit_every == 0
-            and len(state.seeds) >= min_refit_labels
-        ):
+            and len(state.seeds) >= MIN_REFIT_LABELS
+        )
+        if refit:
+            # the weights moved globally: every block is touched, so the
+            # whole corpus is re-scored and no pair is kept
             cfg = _refit_weights(docs, cfg, state)
-            # weights moved globally: full re-score this round
-            raw = scored_pair_distances(docs, cfg, seeds=seeds_df)
-            scored, n_scored = _checkpointed(raw)
-            release_persisted(raw)
             state.touched_blocks.clear()  # lineage restarts from the refit
-            clusters = _cluster_from(scored, docs, cfg, n_scored)
-            m = metric_fn(clusters) if metric_fn else None
-            state.rounds = rnd
-            state.history.append(
-                {"round": rnd, "metric": m, "n_seeds": len(state.seeds),
-                 "refit": True}
+            affected_docs, kept = docs, None
+            round_info = {"refit": True}
+        else:
+            # lineage-bounded recompute: re-score only touched blocks.
+            # The touched set is a broadcast anti-join frame, not an
+            # isin() literal — after many rounds a literal list would
+            # inflate every round's plan (and resubmit the whole
+            # predicate to the JVM); the frame stays one broadcast
+            # regardless of round count.
+            touched = sorted(state.touched_blocks)
+            touched_df = spark.createDataFrame(
+                [(b,) for b in touched], "block_key string"
             )
-            if m is not None and m >= 1.0:
-                break
-            continue
-
-        # lineage-bounded recompute: re-score only touched blocks. The
-        # touched set is a broadcast anti-join frame, not an isin()
-        # literal — after many rounds a literal list would inflate every
-        # round's plan (and resubmit the whole predicate to the JVM);
-        # the frame stays one broadcast regardless of round count.
-        touched = sorted(state.touched_blocks)
-        touched_df = spark.createDataFrame(
-            [(b,) for b in touched], "block_key string"
-        )
-        affected = F.broadcast(_docs_in_blocks(scored, touched_df))
-        affected_docs = docs.join(affected, "doc_id", "left_semi")
+            affected = F.broadcast(_docs_in_blocks(scored, touched_df))
+            affected_docs = docs.join(affected, "doc_id", "left_semi")
+            kept = scored.join(F.broadcast(touched_df), "block_key", "left_anti")
+            round_info = {"n_touched_blocks": len(touched)}
         rescored = scored_pair_distances(affected_docs, cfg, seeds=seeds_df)
-        untouched = scored.join(
-            F.broadcast(touched_df), "block_key", "left_anti"
-        )
+        merged = rescored if kept is None else kept.unionByName(rescored)
         # localCheckpoint() each round flattens the union lineage: the
         # checkpointed RDD is the new root, so plan depth stays O(1) in
         # the number of rounds rather than rounds-linear
-        scored, n_scored = _checkpointed(
-            untouched.unionByName(rescored).coalesce(n_parts)
-        )
-        release_persisted(rescored)  # per-round: no cache accumulation
-
-        clusters = _cluster_from(scored, docs, cfg, n_scored)
-        m = metric_fn(clusters) if metric_fn else None
+        scored, clusters, m = settle(merged.coalesce(n_parts), rescored)
         state.rounds = rnd
         state.history.append(
             {"round": rnd, "metric": m, "n_seeds": len(state.seeds),
-             "n_touched_blocks": len(touched)}
+             **round_info}
         )
         if m is not None and m >= 1.0:
             break
 
     return {"clusters": clusters, "state": state, "scored": scored}
-
-
-def _labels_for(spark, labeler, uncertain_rows, is_batch: bool) -> list:
-    """Resolve labels for the round's selected pairs through the labeler
-    form the caller's keyword chose (see run_feedback_loop docstring)."""
-    if not is_batch:
-        return [labeler(r["doc_id_1"], r["doc_id_2"]) for r in uncertain_rows]
-    pairs_df = spark.createDataFrame(
-        [(r["doc_id_1"], r["doc_id_2"]) for r in uncertain_rows],
-        "doc_id_1 string, doc_id_2 string",
-    )
-    out = {
-        (r["doc_id_1"], r["doc_id_2"]): r["label"]
-        for r in labeler(pairs_df)
-        .select("doc_id_1", "doc_id_2", "label")
-        .collect()  # bounded: k pairs/round, human-labeled
-    }
-    return [out.get((r["doc_id_1"], r["doc_id_2"])) for r in uncertain_rows]
 
 
 def _docs_in_blocks(scored: DataFrame, blocks_df: DataFrame) -> DataFrame:
@@ -273,29 +235,6 @@ def _docs_in_blocks(scored: DataFrame, blocks_df: DataFrame) -> DataFrame:
     re-score."""
     hit = scored.join(F.broadcast(blocks_df), "block_key", "left_semi")
     return hit.select(F.explode(F.array("doc_id_1", "doc_id_2")).alias("doc_id"))
-
-
-def _checkpointed(scored: DataFrame) -> tuple[DataFrame, int]:
-    """``scored`` materialized with ``localCheckpoint``, and its row count
-    riding that action as an Observation (no extra job): a bound on the
-    edges ``_cluster_from`` can see."""
-    obs = Observation()
-    out = scored.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
-    return out, int(obs.get["n"])
-
-
-def _cluster_from(
-    scored: DataFrame, docs: DataFrame, cfg: ERConfig, n_scored: int
-) -> DataFrame:
-    # the edges are a subset of the scored pairs, so their count bounds
-    # the edges: at or below CC's threshold it finishes on the driver
-    # without materializing them first
-    assignments = connected_components(
-        tau_edges(scored, cfg.tau), edge_bound=n_scored
-    )
-    return components_with_singletons(assignments, docs.select("doc_id"), "doc_id").withColumnRenamed(
-        "component", "cluster_id"
-    )
 
 
 def _labeled_pair_features(docs: DataFrame, cfg: ERConfig, labeled: DataFrame) -> DataFrame:

@@ -26,17 +26,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ent_res_feedback_spark.operators.cc import (
-    components_with_singletons,
-    connected_components,
-)
 from ent_res_feedback_spark.operators.constraints import apply_constraints
-from ent_res_feedback_spark.operators.features import mention_pair_features
 from ent_res_feedback_spark.operators.mentions import extract_mentions
-from ent_res_feedback_spark.operators.scoring import score_pairs
 from ent_res_feedback_spark.pipeline import (
     ERConfig,
     MENTION_COLS,
+    clusters_from_edges,
+    gated_scores,
+    release_persisted,
     run_pipeline,
     scored_pair_distances,
 )
@@ -73,9 +70,9 @@ def argmin_assign(
 
 
 def _score_cross_pairs(new_m: DataFrame, member_m: DataFrame, cfg: ERConfig) -> DataFrame:
-    """Score (new x member) pairs within shared blocks — same featurize/
-    constraint/score stack as the batch pipeline, but a two-sided join
-    instead of a self-join."""
+    """Score (new x member) pairs within shared blocks — the batch
+    pipeline's constraint gate and scorer (``gated_scores``), over a
+    two-sided join instead of a self-join."""
     left = new_m.select(
         *[F.col(c).alias(c + "_1") for c in MENTION_COLS if c != "block_key"],
         "block_key",
@@ -85,16 +82,8 @@ def _score_cross_pairs(new_m: DataFrame, member_m: DataFrame, cfg: ERConfig) -> 
         "block_key",
         F.col("cluster_id"),
     )
-    pairs = left.join(right, "block_key")
-    pairs = apply_constraints(pairs, seeds=None)
-    unconstrained = pairs.where(F.col("constraint_dist").isNull())
-    scored_u = score_pairs(mention_pair_features(unconstrained), cfg.weights).select(
-        "doc_id_1", "cluster_id", (1.0 - F.col("score")).alias("dist")
-    )
-    scored_c = pairs.where(F.col("constraint_dist").isNotNull()).select(
-        "doc_id_1", "cluster_id", F.col("constraint_dist").alias("dist")
-    )
-    return scored_u.unionByName(scored_c)
+    pairs = apply_constraints(left.join(right, "block_key"), seeds=None)
+    return gated_scores(pairs, cfg.weights).select("doc_id_1", "cluster_id", "dist")
 
 
 def resplit_altered_clusters(
@@ -142,10 +131,10 @@ def resplit_altered_clusters(
         .where(F.col("oc1") == F.col("oc2"))
         .select(F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst"))
     )
-    assign = connected_components(edges)
-    sub = components_with_singletons(
-        assign, members.select("doc_id"), "doc_id"
-    ).withColumnRenamed("component", "sub_id")
+    sub = clusters_from_edges(edges, members.select("doc_id")).withColumnRenamed(
+        "cluster_id", "sub_id"
+    )
+    release_persisted(scored)  # CC materialized the edges
     sub = sub.join(members, "doc_id")
 
     n_parts = sub.groupBy("orig_cluster_id").agg(

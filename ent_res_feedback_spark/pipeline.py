@@ -120,34 +120,37 @@ def _scored(
         max_block_size=cfg.max_block_size,
         census=census,
     )
-    pairs = apply_constraints(pairs, seeds)
-
-    # C2 gate: the expensive featurization UDFs only see unconstrained pairs.
-    unconstrained = pairs.where(F.col("constraint_dist").isNull())
-    featurized = score_pairs(mention_pair_features(unconstrained), cfg.weights)
-    scored_u = featurized.select(
-        "doc_id_1",
-        "doc_id_2",
-        "block_key",
-        F.col("score"),
-        F.col("constraint_dist"),
-        (1.0 - F.col("score")).alias("dist"),
+    out = gated_scores(apply_constraints(pairs, seeds), cfg.weights).select(
+        "doc_id_1", "doc_id_2", "block_key", "score", "constraint_dist", "dist"
     )
-    scored_c = pairs.where(F.col("constraint_dist").isNotNull()).select(
-        "doc_id_1",
-        "doc_id_2",
-        "block_key",
-        F.lit(None).cast("double").alias("score"),
-        F.col("constraint_dist"),
-        F.col("constraint_dist").alias("dist"),
-    )
-    out = scored_u.unionByName(scored_c)
     # persist lifecycle: the caller owns it — after materializing the
     # scored frame (checkpoint / sink write), call release_persisted(out)
     # so iterating callers (the feedback loop) don't accumulate cached
     # partitions for the driver lifetime.
     out._persisted_deps = [mentions]  # type: ignore[attr-defined]
     return out
+
+
+def gated_scores(pairs: DataFrame, weights: dict) -> DataFrame:
+    """The C2 gate over a pair frame that carries ``constraint_dist``
+    (``apply_constraints``): unconstrained pairs are featurized and
+    scored (``dist = 1 - score``); constrained pairs skip the UDFs and
+    take ``dist = constraint_dist`` with a NULL score. Returns the pair
+    columns plus ``score`` and ``dist``; callers select what they keep,
+    and the optimizer prunes the rest in both branches. Without seeds no
+    constraint distance passes the tau filter, so an edge plan built on
+    this keeps one pair join and no ``Union``."""
+    cols = pairs.columns
+    unconstrained = pairs.where(F.col("constraint_dist").isNull())
+    scored_u = score_pairs(mention_pair_features(unconstrained), weights).select(
+        *cols, "score", (1.0 - F.col("score")).alias("dist")
+    )
+    scored_c = pairs.where(F.col("constraint_dist").isNotNull()).select(
+        *cols,
+        F.lit(None).cast("double").alias("score"),
+        F.col("constraint_dist").alias("dist"),
+    )
+    return scored_u.unionByName(scored_c)
 
 
 def tau_edges(scored: DataFrame, tau: float) -> DataFrame:
@@ -165,6 +168,25 @@ def release_persisted(df: DataFrame) -> None:
     lazy frame stays correct, it just recomputes."""
     for dep in getattr(df, "_persisted_deps", []):
         dep.unpersist()
+
+
+def clusters_from_edges(
+    edges: DataFrame,
+    nodes: DataFrame,
+    edge_bound: int | None = None,
+    checkpoint_dir: str | None = None,
+) -> DataFrame:
+    """The clustering tail of every ER chain: connected components of
+    ``edges`` (``src``, ``dst``), joined back onto ``nodes`` (keyed by
+    ``doc_id``; edge-less nodes become singletons) with the component as
+    ``cluster_id``. ``nodes`` keeps its other columns. CC is eager (see
+    ``connected_components``); the join-back is lazy."""
+    assignments = connected_components(
+        edges, checkpoint_dir=checkpoint_dir, edge_bound=edge_bound
+    )
+    return components_with_singletons(
+        assignments, nodes, "doc_id"
+    ).withColumnRenamed("component", "cluster_id")
 
 
 def run_pipeline(
@@ -204,19 +226,17 @@ def run_pipeline(
     scored = _scored(mentions, census, cfg, seeds)
     # every edge is a within-block pair of a counted block, so the census
     # pair count bounds the edge count before any edge is computed
-    assignments = connected_components(
+    clusters = clusters_from_edges(
         tau_edges(scored, cfg.tau),
-        checkpoint_dir=cfg.checkpoint_dir,
+        docs,
         edge_bound=census.pairs,
+        checkpoint_dir=cfg.checkpoint_dir,
     )
     # connected_components materialized the edge set (collected for the
     # driver finish, or checkpointed), so the persisted mentions frame has
     # served its purpose — release it now rather than leaking cached
     # partitions for the driver lifetime.
     release_persisted(scored)
-    clusters = components_with_singletons(
-        assignments, docs, "doc_id"
-    ).withColumnRenamed("component", "cluster_id")
 
     lineage = census.frame.withColumn(
         "salted",

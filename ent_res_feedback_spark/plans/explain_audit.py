@@ -58,7 +58,9 @@ def audit(spark, sf_dir: str = "/root/testdata/sf0.01") -> dict[str, str]:
     pruned = docs.where(F.col("n_chars") > 200).select("doc_id", "text")
     plans["scan_pruning"] = _formatted(pruned)
 
-    plans["pair_features"] = _formatted(em._er_pair_features(spark, sf_dir))
+    plans["pair_features"] = _formatted(
+        em._er_pair_features(em._doc_feats(spark, sf_dir))
+    )
 
     # the corpus plants a hot block far above 30 docs and none near 2000,
     # so these are the hot and the no-skew shapes of the ER chain

@@ -92,3 +92,19 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def write_text(spark: SparkSession, path: str, text: str) -> None:
+    """Write a small text file (a job's JSON report) through Spark's
+    Hadoop FileSystem, so it lands on the same filesystem as the job's
+    parquet outputs: with a ``file://``, ``hdfs://`` or ``s3a://`` path a
+    plain ``open()`` would create a bogus local ``file:/...`` tree under
+    the working directory instead. Parent directories are created."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    out = hpath.getFileSystem(conf).create(hpath, True)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()

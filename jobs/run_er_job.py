@@ -57,6 +57,7 @@ def main() -> int:
     args = p.parse_args()
 
     from ent_res_feedback_spark.pipeline import ERConfig, run_pipeline
+    from ent_res_feedback_spark.session import write_text
 
     spark = SparkSession.builder.appName("ent-res-er").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -96,9 +97,11 @@ def main() -> int:
             "salt_buckets": args.salt_buckets,
         }
     )
-    os.makedirs(args.metrics_dir, exist_ok=True)
-    with open(os.path.join(args.metrics_dir, "metrics.json"), "w") as f:
-        json.dump(metrics, f, indent=2)
+    write_text(
+        spark,
+        os.path.join(args.metrics_dir, "metrics.json"),
+        json.dumps(metrics, indent=2),
+    )
     print(json.dumps(metrics))
     return 0
 

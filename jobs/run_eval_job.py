@@ -56,6 +56,7 @@ def main() -> int:
         pairwise_prf,
         v_measure,
     )
+    from ent_res_feedback_spark.session import write_text
 
     spark = SparkSession.builder.appName("ent-res-eval").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -99,29 +100,13 @@ def main() -> int:
         if "score" in labeled.columns:
             summary["auroc_ap"] = auroc_ap(labeled)
 
-    _write_text_hadoop(
+    write_text(
         spark,
         os.path.join(args.output, "summary.json"),
         json.dumps(summary, indent=2, default=float),
     )
     print("SUMMARY " + json.dumps(summary, default=float))
     return 0
-
-
-def _write_text_hadoop(spark: SparkSession, path: str, text: str) -> None:
-    """Write a small text file through Spark's Hadoop FileSystem so the
-    summary lands on the SAME filesystem as the parquet outputs — with a
-    non-local --output URI (hdfs://, s3a://) a plain open() would
-    silently create a bogus local directory instead."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(conf)
-    out = fs.create(hpath, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
 
 
 if __name__ == "__main__":

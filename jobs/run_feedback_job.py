@@ -42,6 +42,7 @@ def main() -> int:
     from ent_res_feedback_spark.operators.feedback import run_feedback_loop
     from ent_res_feedback_spark.operators.metrics import pairwise_prf
     from ent_res_feedback_spark.pipeline import ERConfig
+    from ent_res_feedback_spark.session import write_text
 
     spark = SparkSession.builder.appName("ent-res-feedback-loop").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -81,9 +82,11 @@ def main() -> int:
         "overwrite"
     ).parquet(os.path.join(args.output, "clusters"))
     history = res["state"].history
-    os.makedirs(args.output, exist_ok=True)
-    with open(os.path.join(args.output, "history.json"), "w") as f:
-        json.dump(history, f, indent=2)
+    write_text(
+        spark,
+        os.path.join(args.output, "history.json"),
+        json.dumps(history, indent=2),
+    )
     print(json.dumps({"rounds": res["state"].rounds, "history": history}))
     return 0
 

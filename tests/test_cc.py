@@ -181,45 +181,10 @@ def test_checkpoint_resume_identical(spark, tmp_path):
 
 
 def test_cc_path_graph_converges(spark):
-    # worst-ish case: a long path; must converge well under max_iterations
+    # worst-ish case: a long path; must converge well under MAX_ITERATIONS
     n = 200
     edges = [(i, i + 1) for i in range(n - 1)]
     edf = spark.createDataFrame(edges, "src long, dst long")
     got = {r["id"]: r["component"] for r in connected_components(edf).collect()}
     assert set(got.values()) == {0}
     assert len(got) == n
-
-
-@pytest.mark.parametrize("k", [2, 3])
-def test_cc_checkpoint_interval_invariance(spark, k):
-    """checkpoint_interval batches star rounds per materialization (a
-    barrier-budget knob); extra rounds past the fixpoint are no-ops, so
-    any k must produce the identical assignment as the default k=1.
-
-    k is bounded at 3 here ON PURPOSE: each star round's logical plan
-    embeds the previous round's tree ~3x (the round's input appears in
-    the aggregate, the join probe, and the join build), so an unrolled
-    k-round super-step costs ~3^(2k) subtree copies regardless of data
-    size — k=7 hangs Catalyst for tens of minutes and k=4 OOM'd an 8 GB
-    driver at corpus scale (BENCH/ANALYSIS.md round-5 matrix). That
-    blow-up — 81 subtree copies at k=2 vs 9 at k=1, a fixed per-super-
-    step driver planning cost — is why k=1 is the shipped default
-    (measured 36-55% faster end-to-end, BENCH/ANALYSIS.md round-5)."""
-    rng = random.Random(99)
-    n, m = 150, 160
-    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
-    edges = [(s, d) for s, d in edges if s != d]
-    edf = spark.createDataFrame(edges, "src long, dst long")
-    base = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            edf, finish_edge_threshold=None
-        ).collect()  # k=1, star loop to fixpoint
-    }
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            edf, checkpoint_interval=k, finish_edge_threshold=None
-        ).collect()
-    }
-    assert got == base

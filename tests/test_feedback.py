@@ -7,7 +7,9 @@ from pyspark.sql import functions as F
 
 from ent_res_feedback_spark.corpus import CorpusConfig, corpus_to_spark, generate_corpus
 from ent_res_feedback_spark.operators.feedback import (
+    FeedbackState,
     _docs_in_blocks,
+    _refit_weights,
     run_feedback_loop,
     select_uncertain_pairs,
 )
@@ -152,8 +154,9 @@ def test_many_rounds_stable_plan_and_results(spark):
 
 def test_refit_rounds_change_weights_and_stay_consistent(spark):
     """FB1 opt-in refit: weights move off the defaults at the refit
-    round, history records it, and the post-refit scored frame equals a
-    from-scratch rescore with the refit config + all seeds."""
+    round, history records it, the post-refit scored frame equals a
+    from-scratch rescore with the refit config + all seeds, and the refit
+    round keeps round 0's partition count like every other round."""
     documents, gold, _ = generate_corpus(CorpusConfig(n_entities=25, seed=13))
     docs = corpus_to_spark(spark, documents)
     gold_map = dict(gold)
@@ -161,13 +164,36 @@ def test_refit_rounds_change_weights_and_stay_consistent(spark):
     def labeler(d1, d2):
         return int(gold_map[d1] == gold_map[d2])
 
+    cfg = ERConfig()
     res = run_feedback_loop(
-        docs, labeler, ERConfig(), max_rounds=3, pairs_per_round=15,
-        refit_every=2, min_refit_labels=5,
+        docs, labeler, cfg, max_rounds=2, pairs_per_round=15, refit_every=2,
     )
-    hist = res["state"].history
-    refit_rounds = [h for h in hist if h.get("refit")]
-    assert refit_rounds, f"no refit round recorded: {hist}"
+    state = res["state"]
+    hist = state.history
+    assert hist[-1].get("refit"), f"round 2 is not a refit round: {hist}"
+    assert "n_touched_blocks" not in hist[-1]
+    assert not state.touched_blocks  # lineage restarts from the refit
+
+    # the refit fits on every seed gathered so far (all of them: it is
+    # the last round)
+    refit_cfg = _refit_weights(docs, cfg, FeedbackState(seeds=list(state.seeds)))
+    assert refit_cfg.weights != cfg.weights
+    seeds_df = spark.createDataFrame(
+        state.seeds, "doc_id_1 string, doc_id_2 string, kind string"
+    )
+    full = scored_pair_distances(docs, refit_cfg, seeds=seeds_df)
+    keys = ["doc_id_1", "doc_id_2", "block_key"]
+    got = sorted(map(tuple, res["scored"].select(*keys, "dist").collect()))
+    want = sorted(map(tuple, full.select(*keys, "dist").collect()))
+    release_persisted(full)
+    assert [g[:3] for g in got] == [w[:3] for w in want]
+    # the refit's training rows reach the driver in partition order, so
+    # the weights may differ in the last bits between the two fits
+    assert [g[3] for g in got] == pytest.approx([w[3] for w in want], abs=1e-9)
+
+    round0 = run_feedback_loop(docs, labeler, cfg, max_rounds=0)
+    parts = res["scored"].rdd.getNumPartitions()
+    assert parts == round0["scored"].rdd.getNumPartitions(), parts
 
 
 def test_uncertainty_band_anchors_on_tau_rank(spark):
@@ -175,7 +201,10 @@ def test_uncertainty_band_anchors_on_tau_rank(spark):
     band must still contain only ~2q of the mass AROUND TAU, not a
     median-anchored band clamped out to tau (which could cover most of
     the distribution)."""
-    from ent_res_feedback_spark.operators.feedback import uncertainty_band
+    from ent_res_feedback_spark.operators.feedback import (
+        BAND_QUANTILE as q,
+        uncertainty_band,
+    )
 
     # 1000 scores: 10% below tau=0.5 (uniform 0.3-0.5), 90% above
     # (uniform 0.8-1.0) — strongly skewed away from the threshold
@@ -183,8 +212,7 @@ def test_uncertainty_band_anchors_on_tau_rank(spark):
         (0.8 + 0.2 * i / 900,) for i in range(900)
     ]
     scored = spark.createDataFrame(rows, "score double")
-    q = 0.1
-    lo, hi = uncertainty_band(scored, tau=0.5, band_quantile=q)
+    lo, hi = uncertainty_band(scored, tau=0.5)
     assert lo <= 0.5 <= hi
     in_band = scored.where(F.col("score").between(lo, hi)).count()
     frac = in_band / 1000
@@ -193,62 +221,10 @@ def test_uncertainty_band_anchors_on_tau_rank(spark):
     assert frac <= 2 * q + 0.08, (lo, hi, frac)
 
 
-def test_batch_labeler_matches_scalar(spark):
-    """Round-4: the batch labeler interface (pairs_df -> labels_df) must
-    produce identical seeds and history to the scalar form."""
-    documents, gold, _ = generate_corpus(CorpusConfig(n_entities=12, seed=7))
-    docs = corpus_to_spark(spark, documents)
-    gold_map = dict(gold)
-
-    def scalar_labeler(d1, d2):
-        return int(gold_map[d1] == gold_map[d2])
-
-    def batch_labeler(pairs_df):
-        sp = pairs_df.sparkSession
-        gold_df = sp.createDataFrame(
-            list(gold_map.items()), "doc_id string, cluster string"
-        )
-        return (
-            pairs_df.join(
-                gold_df.select(
-                    F.col("doc_id").alias("doc_id_1"),
-                    F.col("cluster").alias("c1"),
-                ),
-                "doc_id_1",
-            )
-            .join(
-                gold_df.select(
-                    F.col("doc_id").alias("doc_id_2"),
-                    F.col("cluster").alias("c2"),
-                ),
-                "doc_id_2",
-            )
-            .select(
-                "doc_id_1",
-                "doc_id_2",
-                (F.col("c1") == F.col("c2")).cast("int").alias("label"),
-            )
-        )
-
-    cfg = ERConfig()
-    res_scalar = run_feedback_loop(
-        docs, scalar_labeler, cfg, max_rounds=4, pairs_per_round=3
-    )
-    res_batch_kw = run_feedback_loop(
-        docs, config=cfg, max_rounds=4, pairs_per_round=3,
-        batch_labeler=batch_labeler,
-    )
-    assert res_scalar["state"].seeds == res_batch_kw["state"].seeds
-    assert res_scalar["state"].history == res_batch_kw["state"].history
-
-
 def test_scalar_labeler_with_defaulted_param_not_misrouted(spark):
     """A scalar labeler declared (a, b=None) has ONE required positional
-    — an arity sniff would send it to the batch path, where it blows up
-    on a DataFrame argument. ``labeler=`` always runs it as scalar, and
-    the keyword validation must reject ambiguous calls."""
-    import pytest
-
+    — an arity sniff would send it to a batch path, where it blows up on
+    a DataFrame argument. The labeler is always called per pair."""
     documents, gold, _ = generate_corpus(CorpusConfig(n_entities=8, seed=3))
     docs = corpus_to_spark(spark, documents)
     gold_map = dict(gold)
@@ -260,10 +236,3 @@ def test_scalar_labeler_with_defaulted_param_not_misrouted(spark):
         docs, defaulted_scalar, ERConfig(), max_rounds=2, pairs_per_round=3
     )
     assert res["state"].rounds >= 0  # ran scalar path without TypeError
-
-    with pytest.raises(TypeError, match="exactly one of"):
-        run_feedback_loop(docs, max_rounds=1)  # neither labeler given
-    with pytest.raises(TypeError, match="exactly one of"):
-        run_feedback_loop(
-            docs, defaulted_scalar, batch_labeler=lambda df: df, max_rounds=1
-        )  # both given
