@@ -8,11 +8,9 @@ Layout
 ------
 functions/   scalar function library (reference: s2and/text.py)
 operators/   blocking, pair generation, featurization, constraints,
-             scoring, connected components, clustering, metrics,
-             feedback, incremental, dedup, similarity, text analysis
-sources/     labeled-pair CSV loader
+             scoring, connected components, metrics, feedback,
+             incremental, dedup, similarity, text analysis
 plans/       physical-plan audit
-streaming/   foreachBatch incremental-assignment driver
 corpus.py    deterministic synthetic interleaved-document corpus
 pipeline.py  end-to-end ER pipeline (the flagship job)
 oracle.py    pure-Python reference-semantics oracle for parity tests

@@ -232,10 +232,12 @@ def assign_incremental(
     prevent_new_incompatibilities: bool = True,
     alias_pairs: DataFrame | None = None,
 ) -> DataFrame:
-    """Returns (doc_id, cluster_id) for ALL docs: existing keep their
-    cluster; new docs join the argmin-average-distance cluster when that
-    average < eps (reference model.py:533-741); the rest form new
-    clusters via the batch pipeline among themselves.
+    """Returns (doc_id, cluster_id) for ALL docs, one row each: existing
+    keep their cluster; new docs join the argmin-average-distance cluster
+    when that average < eps (reference model.py:533-741); the rest form
+    new clusters via the batch pipeline among themselves. A doc of
+    ``new_docs`` that ``existing_clusters`` already assigns is a
+    re-delivery and is ignored (it would pair with its own member row).
 
     With ``altered_clusters`` (a (cluster_id) frame), those clusters are
     re-split first (I2) and assignment runs against the subclusters; the
@@ -244,6 +246,7 @@ def assign_incremental(
     """
     cfg = config or ERConfig()
     eps = (1.0 - cfg.tau) if eps is None else eps
+    new_docs = new_docs.join(existing_clusters, "doc_id", "left_anti")
 
     new_m = extract_mentions(new_docs, ascii_fast_path=cfg.ascii_fast_path).select(
         *MENTION_COLS

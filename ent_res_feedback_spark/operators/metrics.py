@@ -267,14 +267,12 @@ def facet_eval(
             F.count(F.lit(1)).alias("n"),
         )
     )
-    return out.withColumn(
-        "f1",
-        F.when(
-            F.col("precision") + F.col("recall") > 0,
-            2 * F.col("precision") * F.col("recall")
-            / (F.col("precision") + F.col("recall")),
-        ).otherwise(F.lit(0.0)),
-    )
+    f1 = F.when(
+        F.col("precision") + F.col("recall") > 0,
+        2 * F.col("precision") * F.col("recall")
+        / (F.col("precision") + F.col("recall")),
+    ).otherwise(F.lit(0.0))
+    return out.select("facet", "precision", "recall", f1.alias("f1"), "n")
 
 
 def pairwise_cluster_prf(pred: DataFrame, gold: DataFrame, id_col: str = "doc_id") -> dict:

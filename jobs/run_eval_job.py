@@ -16,8 +16,13 @@ Writes:
   <output>/summary.json   B3 P/R/F1, pairwise cluster P/R/F1 (+ macro F1
                           when --blocks given, AUROC/AP when --labeled
                           has a score column), v-measure
-  <output>/b3_per_item    per-item B3 rows (the facet_eval input)
-  <output>/facets         derived structural facets (when --blocks given)
+  <output>/b3_per_item    per-item B3 rows
+  <output>/facets         derived structural facets (when --signatures
+                          given)
+  <output>/facet_b3       B3 per facet bucket (facet, precision, recall,
+                          f1, n), facet "<column>=<value>" for block_size,
+                          cluster_size, homonymity and synonymity (when
+                          --signatures given)
 
 Every metric is the distributed formulation — nothing but final scalars
 reaches the driver.
@@ -34,6 +39,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+
+#: derived facet columns that ``facet_b3`` buckets B3 by
+FACET_COLS = ("block_size", "cluster_size", "homonymity", "synonymity")
 
 
 def main() -> int:
@@ -52,6 +60,7 @@ def main() -> int:
         b3,
         b3_per_item,
         cmacro_pairwise_f1,
+        facet_eval,
         pairwise_cluster_prf,
         pairwise_prf,
         v_measure,
@@ -92,6 +101,20 @@ def main() -> int:
         )
         facets.write.mode("overwrite").parquet(
             os.path.join(args.output, "facets")
+        )
+        # one (doc_id, "<col>=<value>") row per facet column, so a single
+        # facet_eval call computes per-item B3 once for every facet
+        buckets = facets.select(
+            "doc_id",
+            F.explode(
+                F.array(*[
+                    F.concat(F.lit(f"{c}="), F.col(c).cast("string"))
+                    for c in FACET_COLS
+                ])
+            ).alias("facet"),
+        )
+        facet_eval(pred, gold, buckets, "facet").write.mode("overwrite").parquet(
+            os.path.join(args.output, "facet_b3")
         )
 
     if args.labeled:

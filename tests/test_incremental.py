@@ -1,35 +1,44 @@
 """Incremental assignment (I1): new docs of known entities join the
 existing cluster; docs of brand-new entities become new clusters;
-existing assignments never change."""
+existing assignments never change, also when known docs are re-delivered."""
+
+import pytest
+from pyspark.sql import functions as F
 
 from ent_res_feedback_spark.corpus import CorpusConfig, corpus_to_spark, generate_corpus
 from ent_res_feedback_spark.operators.incremental import assign_incremental
 from ent_res_feedback_spark.pipeline import ERConfig, run_pipeline
 
+OLD_ENTITIES = {f"e{i}" for i in range(20)}
 
-def test_incremental_assignment(spark):
+
+@pytest.fixture(scope="module")
+def split(spark):
+    """Docs of entities e0..e19 are "existing" (at most 2 per entity); the
+    rest of their docs are "new"; entities e20+ are entirely new. Returns
+    (documents, gold_map, old_docs, new_docs, old_df, base, base_map)."""
     documents, gold, _ = generate_corpus(CorpusConfig(n_entities=25, seed=21))
     gold_map = dict(gold)
-    # split: docs of entities e0..e19 are "existing"; for e0..e19 hold out
-    # some docs as "new"; entities e20+ are entirely new
-    old_entities = {f"e{i}" for i in range(20)}
     old_docs, new_docs = [], []
     seen_of_entity = {}
     for d in documents:
         e = gold_map[d["doc_id"]]
-        if e in old_entities and seen_of_entity.setdefault(e, 0) < 2:
+        if e in OLD_ENTITIES and seen_of_entity.setdefault(e, 0) < 2:
             seen_of_entity[e] += 1
             old_docs.append(d)
         else:
             new_docs.append(d)
-
     old_df = corpus_to_spark(spark, old_docs)
-    new_df = corpus_to_spark(spark, new_docs)
-    cfg = ERConfig()
-    base = run_pipeline(old_df, cfg)["clusters"].select("doc_id", "cluster_id")
+    base = run_pipeline(old_df, ERConfig())["clusters"].select("doc_id", "cluster_id")
     base_map = {r["doc_id"]: r["cluster_id"] for r in base.collect()}
+    return documents, gold_map, old_docs, new_docs, old_df, base, base_map
 
-    out = assign_incremental(new_df, old_df, base, cfg)
+
+def test_incremental_assignment(spark, split):
+    documents, gold_map, _, new_docs, old_df, base, base_map = split
+    new_df = corpus_to_spark(spark, new_docs)
+
+    out = assign_incremental(new_df, old_df, base, ERConfig())
     out_map = {r["doc_id"]: r["cluster_id"] for r in out.collect()}
 
     # every doc assigned exactly once
@@ -50,9 +59,28 @@ def test_incremental_assignment(spark):
     old_clusters = set(base_map.values())
     for d in new_docs:
         e = gold_map[d["doc_id"]]
-        if e not in old_entities:
+        if e not in OLD_ENTITIES:
             c = out_map[d["doc_id"]]
             if c in old_clusters:
                 # allowed only if that old cluster is of the same entity
                 members = [k for k, v in base_map.items() if v == c]
                 assert all(gold_map[m] == e for m in members)
+
+
+def test_redelivered_docs_keep_one_row_and_their_cluster(spark, split):
+    """A known doc_id in ``new_docs`` pairs with its own member row; it must
+    be ignored, not given a second (doc_id, cluster_id) row."""
+    documents, _, old_docs, new_docs, old_df, base, base_map = split
+    redelivered = old_docs[:3]
+    new_df = corpus_to_spark(spark, new_docs + redelivered)
+
+    out = assign_incremental(new_df, old_df, base, ERConfig())
+
+    # counted as rows: a dict would hide a duplicate
+    assert out.count() == len(documents)
+    assert out.groupBy("doc_id").count().where(F.col("count") > 1).count() == 0
+    ids = [d["doc_id"] for d in redelivered]
+    rows = out.where(F.col("doc_id").isin(ids)).collect()
+    assert len(rows) == len(ids)
+    for r in rows:
+        assert r["cluster_id"] == base_map[r["doc_id"]]

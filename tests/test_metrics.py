@@ -1,6 +1,7 @@
 """Metric aggregations: B3 goldens ported from the reference
 tests/test_eval.py:7-38 (its b3 returns 3-decimal-rounded values — we
-round for comparison) plus pairwise-PRF sanity."""
+round for comparison), pairwise-PRF sanity, v-measure bounds, the
+per-block macro F1 and facet-bucketed B3."""
 
 import pytest
 
@@ -125,3 +126,32 @@ def test_pairwise_cluster_prf_values_and_single_job(spark):
     f1 = 2 * want_p * want_r / (want_p + want_r)
     assert got["f1"] == pytest.approx(f1)
     assert n_jobs == 1, f"expected 1 job, saw {n_jobs}"
+
+
+def test_v_measure_identity_and_bounds(spark):
+    from ent_res_feedback_spark.operators.metrics import v_measure
+
+    gold = _clusters_df(spark, {"a": [1, 2, 3], "b": [4, 5]})
+    assert v_measure(gold, gold) == pytest.approx(1.0)
+    pred = _clusters_df(spark, {"x": [1, 2, 3, 4, 5]})
+    v = v_measure(pred, gold)
+    assert 0.0 <= v < 1.0
+
+
+def test_cmacro_and_facets(spark):
+    from ent_res_feedback_spark.operators.metrics import cmacro_pairwise_f1, facet_eval
+
+    gold = _clusters_df(spark, {"g1": [1, 2], "g2": [3], "g3": [4, 5]})
+    pred = _clusters_df(spark, {"p1": [1, 2], "p2": [3], "p3": [4], "p4": [5]})
+    blocks = spark.createDataFrame(
+        [(str(i), "blk1" if i <= 3 else "blk2") for i in range(1, 6)],
+        "doc_id string, block_key string",
+    )
+    m = cmacro_pairwise_f1(pred, gold, blocks)
+    # blk1 is perfectly clustered; blk2 splits a gold pair
+    assert m["precision"] == pytest.approx(1.0)
+    assert 0.5 < m["recall"] < 1.0
+    facets = blocks.withColumnRenamed("block_key", "grp")
+    fe = {r["facet"]: r for r in facet_eval(pred, gold, facets, "grp").collect()}
+    assert fe["blk1"]["f1"] == pytest.approx(1.0)
+    assert fe["blk2"]["f1"] < 1.0

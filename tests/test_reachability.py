@@ -15,18 +15,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "ent_res_feedback_spark"
 
 #: modules allowed to be unreached, with the reason
-EXCEPTIONS = {
-    # the paper's incremental mode: whether a job runs the streaming
-    # assigner or it is deleted is an open ROADMAP item
-    f"{PKG}.streaming.incremental_stream",
-    # reference-parity operators kept with their tests (average-linkage
-    # HAC and its eps sweep, pair sampling, the labelled-pairs CSV
-    # loader): wiring them into a job or deleting them is an open
-    # ROADMAP item
-    f"{PKG}.operators.hac",
-    f"{PKG}.operators.sampling",
-    f"{PKG}.sources.pairs_csv",
-}
+EXCEPTIONS = set()
 
 
 def _package_modules() -> dict[str, str]:
