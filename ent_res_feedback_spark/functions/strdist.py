@@ -93,23 +93,6 @@ def prefix_dist_kernel(s1: str, s2: str) -> float:
     return 1.0 - i / min_len if i else 1.0
 
 
-def lcs_len(s1: str, s2: str) -> int:
-    """Longest common subsequence length (rolling 1-row DP)."""
-    if not s1 or not s2:
-        return 0
-    if len(s2) > len(s1):
-        s1, s2 = s2, s1
-    prev = [0] * (len(s2) + 1)
-    for a in s1:
-        cur = [0]
-        p = prev
-        append = cur.append
-        for j, b in enumerate(s2):
-            append(p[j] + 1 if a == b else (cur[j] if cur[j] >= p[j + 1] else p[j + 1]))
-        prev = cur
-    return prev[-1]
-
-
 # ---------------------------------------------------------------------------
 # Arrow-batched column functions
 # ---------------------------------------------------------------------------

@@ -1,8 +1,8 @@
 """Deduplication operators over the ``documents`` table — the
-training-data-pipeline layer: exact, MinHash-LSH, SimHash, and n-gram
-Jaccard near-dup. All candidate generation is JVM-side (portable md5
-hashes, see functions/hashing.py); verification jaccard is a column
-expression over token arrays.
+training-data-pipeline layer: exact and MinHash-LSH near-dup. All
+candidate generation is JVM-side (portable md5 hashes, see
+functions/hashing.py); verification jaccard is a column expression over
+token arrays.
 
 At 100 TB scale the shape is: narrow fingerprint/signature projection ->
 one shuffle per dedup key (groupBy or band-key self-join) -> verified
@@ -19,7 +19,6 @@ from ent_res_feedback_spark.functions.text import normalize_text_ascii, set_jacc
 from ent_res_feedback_spark.operators.blocking import (
     add_minhash_band_keys,
     split_tokens,
-    tokenize,
     word_shingles_from_tokens,
 )
 from ent_res_feedback_spark.operators.pairs import within_block_pairs
@@ -45,42 +44,6 @@ def exact_duplicates(
             F.count(F.lit(1)).alias("group_size"),
         )
         .where(F.col("group_size") > 1)
-    )
-
-
-def dedup_survivors(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact dedup keep-first: rows whose id is the min of their
-    fingerprint group (deterministic survivor selection)."""
-    fp = docs.withColumn("fingerprint", normalized_fingerprint(F.col(text_col)))
-    keep = fp.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
-    return fp.join(keep, ["fingerprint", id_col], "inner").drop("fingerprint")
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    block_col: Column | None = None,
-) -> DataFrame:
-    """Near-dup pairs by token-set jaccard >= threshold. Candidate scope is
-    a blocking column (default: document length bucket is NOT used — the
-    caller should pass an LSH band key for scale; with block_col=None this
-    is a within-corpus all-pairs limited to small inputs/tests)."""
-    toks = tokenize(normalize_text_ascii(F.col(text_col)))
-    slim = docs.select(F.col(id_col), toks.alias("tokens"))
-    if block_col is not None:
-        slim = slim.withColumn("block_key", block_col)
-    else:
-        slim = slim.withColumn("block_key", F.lit("all"))
-    pairs = within_block_pairs(slim, key="block_key", id_col=id_col)
-    jac = set_jaccard(F.col("tokens_1"), F.col("tokens_2"))
-    return (
-        pairs.withColumn("jaccard", jac)
-        .where(F.col("jaccard") >= threshold)
-        .select(id_col + "_1", id_col + "_2", "jaccard")
     )
 
 
@@ -144,76 +107,3 @@ def minhash_lsh_duplicates(
         .select(id_col + "_1", id_col + "_2", "jaccard")
     )
 
-
-def simhash_near_duplicates(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    num_blocks: int = 4,
-) -> DataFrame:
-    """SimHash near-dup with a RECALL GUARANTEE: 64-bit fingerprint
-    (Arrow-batched numpy kernel), candidate generation by bit-block
-    decomposition, exact ``bit_count(xor)`` verification.
-
-    Pigeonhole (Manku, Jain & Das Sarma, "Detecting Near-Duplicates for
-    Web Crawling", WWW'07): split the 64 bits into ``num_blocks``
-    contiguous blocks and bucket each document once per block value; any
-    pair within Hamming distance < num_blocks agrees on at least one
-    whole block, so with the default (d=3, b=4, 16-bit blocks — the
-    classic web-dedup config) every qualifying pair collides in >= 1
-    bucket. Larger ``max_hamming`` needs ``num_blocks > max_hamming``
-    (asserted). The candidate dedup shuffles bare id pairs; fingerprints
-    re-join once for verification."""
-    if max_hamming >= num_blocks:
-        raise ValueError(
-            f"recall guarantee needs num_blocks > max_hamming "
-            f"(got {num_blocks} blocks, d={max_hamming})"
-        )
-    if 64 % num_blocks != 0:
-        raise ValueError("num_blocks must divide 64 (whole-bit blocks)")
-    toks = tokenize(normalize_text_ascii(F.col(text_col)))
-    slim = docs.select(
-        F.col(id_col), hashing.simhash64(toks).alias("simhash")
-    ).where(F.col("simhash").isNotNull())
-    width = 64 // num_blocks
-    block_keys = F.array(
-        *[
-            F.concat_ws(
-                ":",
-                F.lit(str(i)),
-                F.shiftrightunsigned(
-                    F.shiftleft(F.col("simhash"), i * width), 64 - width
-                ).cast("string"),
-            )
-            for i in range(num_blocks)
-        ]
-    )
-    banded = slim.select(
-        F.col(id_col), F.explode(block_keys).alias("block_key")
-    )
-    cand_ids = (
-        within_block_pairs(banded, key="block_key", id_col=id_col)
-        .select(id_col + "_1", id_col + "_2")
-        .distinct()
-    )
-    fps = slim.select(F.col(id_col), "simhash")
-    cands = cand_ids.join(
-        fps.select(
-            F.col(id_col).alias(id_col + "_1"), F.col("simhash").alias("simhash_1")
-        ),
-        id_col + "_1",
-    ).join(
-        fps.select(
-            F.col(id_col).alias(id_col + "_2"), F.col("simhash").alias("simhash_2")
-        ),
-        id_col + "_2",
-    )
-    hamming = F.bit_count(
-        F.col("simhash_1").bitwiseXOR(F.col("simhash_2"))
-    )
-    return (
-        cands.withColumn("hamming", hamming)
-        .where(F.col("hamming") <= max_hamming)
-        .select(id_col + "_1", id_col + "_2", "hamming")
-    )

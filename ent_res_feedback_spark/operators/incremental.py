@@ -243,6 +243,9 @@ def assign_incremental(
     re-split first (I2) and assignment runs against the subclusters; the
     claimed profile is restored on output, subject to the name-
     incompatibility gate.
+
+    The argmin assignments are built eagerly and persisted on the
+    result's behalf: call ``release_persisted`` on it once it is written.
     """
     cfg = config or ERConfig()
     eps = (1.0 - cfg.tau) if eps is None else eps
@@ -265,8 +268,21 @@ def assign_incremental(
         .join(seed_clusters, "doc_id")
     )
 
-    scored = _score_cross_pairs(new_m, member_m, cfg)
-    best = argmin_assign(scored, eps)
+    # Every consumer below (the leftover pipeline's mention persist,
+    # census and join-back, and the final union) reads the assignments,
+    # so they are cached and the cross-pair scoring runs once; lost cache
+    # blocks recompute from lineage. AQE does not coalesce a cached plan,
+    # so the assignments (one row per assigned doc) are coalesced to the
+    # cluster's parallelism before caching; counting them builds the
+    # cache and gives the planner their real size, so the leftover
+    # anti-join can broadcast them instead of shuffling the new docs.
+    parallelism = new_docs.sparkSession.sparkContext.defaultParallelism
+    best = assigned = (
+        argmin_assign(_score_cross_pairs(new_m, member_m, cfg), eps)
+        .coalesce(parallelism)
+        .persist()
+    )
+    assigned.count()
 
     if recluster_map is not None:
         # undo the re-clustering: subcluster winners map back to the
@@ -308,8 +324,10 @@ def assign_incremental(
     leftover_clusters = run_pipeline(leftovers, cfg)["clusters"].select(
         "doc_id", "cluster_id"
     )
-    return (
+    out = (
         existing_clusters.select("doc_id", "cluster_id")
         .unionByName(best.select("doc_id", "cluster_id"))
         .unionByName(leftover_clusters)
     )
+    out._persisted_deps = [assigned]  # type: ignore[attr-defined]
+    return out

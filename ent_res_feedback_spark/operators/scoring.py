@@ -115,42 +115,6 @@ def collect_training_sample(
 
 
 # ---------------------------------------------------------------------------
-# FE6 — StandardScaler (reference s2and/data.py:138-143 fits sklearn's
-# StandardScaler on the pair features before the linear model). Fit is one
-# distributed aggregation; transform is pure column arithmetic.
-# ---------------------------------------------------------------------------
-
-def fit_standard_scaler(
-    features_df: DataFrame, feature_cols=None
-) -> dict[str, tuple[float, float]]:
-    """Population mean/std per feature (ddof=0, like sklearn). Returns
-    {col: (mean, std)}; std 0 -> 1.0 (sklearn's constant-feature guard)."""
-    cols = list(feature_cols or FEATURE_COLS)
-    aggs = []
-    for c in cols:
-        aggs.append(F.avg(c).alias(f"{c}__mean"))
-        aggs.append(F.var_pop(c).alias(f"{c}__var"))
-    row = features_df.agg(*aggs).collect()[0]
-    out = {}
-    for c in cols:
-        mean = float(row[f"{c}__mean"] or 0.0)
-        var = float(row[f"{c}__var"] or 0.0)
-        std = var ** 0.5
-        out[c] = (mean, std if std > 0 else 1.0)
-    return out
-
-
-def apply_standard_scaler(
-    features_df: DataFrame, scaler: dict[str, tuple[float, float]]
-) -> DataFrame:
-    """(x - mean) / std, JVM-side, weights inlined as literals."""
-    out = features_df
-    for c, (mean, std) in scaler.items():
-        out = out.withColumn(c, (F.col(c) - F.lit(mean)) / F.lit(std))
-    return out
-
-
-# ---------------------------------------------------------------------------
 # M2 — general N-way voting (reference VotingClassifier, model.py:879-981)
 # ---------------------------------------------------------------------------
 
@@ -191,74 +155,3 @@ def vote_hard_col(
     total = F.lit(float(sum(weights)))
     return (w1 > total - w1).cast("int")
 
-
-# ---------------------------------------------------------------------------
-# M1 hyperparameter search (reference PairwiseModeler: 25-iteration
-# hyperopt TPE over the classifier's space, model.py:80 + 744-876,
-# scored on a validation split). Restated as a seeded random search over
-# the logistic's (l2, lr, iters), scored by the DISTRIBUTED val AUROC —
-# trials are driver-side (training sets are small by design), scoring
-# never collects the val pairs.
-# ---------------------------------------------------------------------------
-
-DEFAULT_SEARCH_SPACE = {
-    "l2": (1e-5, 1e-1),     # log-uniform
-    "lr": (0.05, 1.0),      # log-uniform
-    "iters": (100, 200, 400, 800),
-}
-
-
-def tune_logistic(
-    train_df: DataFrame,
-    val_df: DataFrame,
-    label_col: str = "label",
-    feature_cols=None,
-    n_iter: int = 25,
-    seed: int = 42,
-    space: dict | None = None,
-    max_train_rows: int = 100_000,
-) -> dict:
-    """Seeded random hyper search for the pairwise logistic (M1).
-
-    Draws ``n_iter`` configs from ``space`` (log-uniform floats, uniform
-    choice for iters), fits each on a collected training sample, scores
-    each on ``val_df`` with the distributed ``metrics.auroc_ap``, and
-    returns the config/weights with the best validation AUROC (first
-    trial wins exact ties — deterministic under ``seed``).
-
-    Returns {"weights", "params", "val_auroc", "trials"} where trials is
-    the full (params, auroc) history, like hyperopt's trial log.
-    """
-    from ent_res_feedback_spark.operators.metrics import auroc_ap
-
-    cols = list(feature_cols or FEATURE_COLS)
-    sp = dict(DEFAULT_SEARCH_SPACE, **(space or {}))
-    X, y = collect_training_sample(
-        train_df, label_col, cols, max_rows=max_train_rows, seed=seed
-    )
-    rng = np.random.default_rng(seed)
-    best = None
-    trials = []
-    for t in range(n_iter):
-        if t == 0:
-            # warm-start trial: the fit_logistic defaults. Guarantees the
-            # selected config is never worse than the un-tuned baseline
-            # on val (the search result dominates the default by
-            # construction).
-            params = {"l2": 1e-3, "lr": 0.5, "iters": 400}
-        else:
-            lo, hi = sp["l2"]
-            l2 = float(np.exp(rng.uniform(np.log(lo), np.log(hi))))
-            lo, hi = sp["lr"]
-            lr = float(np.exp(rng.uniform(np.log(lo), np.log(hi))))
-            iters = int(sp["iters"][rng.integers(len(sp["iters"]))])
-            params = {"l2": l2, "lr": lr, "iters": iters}
-        l2, lr, iters = params["l2"], params["lr"], params["iters"]
-        weights = fit_logistic(X, y, cols, l2=l2, lr=lr, iters=iters, seed=seed)
-        scored = val_df.withColumn("__score", logistic_score_col(weights, cols))
-        auc = auroc_ap(scored, label_col=label_col, score_col="__score")["auroc"]
-        trials.append({"params": params, "auroc": auc})
-        if best is None or auc > best["val_auroc"]:
-            best = {"weights": weights, "params": params, "val_auroc": auc}
-    best["trials"] = trials
-    return best

@@ -22,9 +22,8 @@ table), the top-N selection is a window over that census only, and every
 reference processes several datasets it applies the cutoff per dataset;
 pass ``dataset_col`` to reproduce that (census and rank partition by it).
 
-The reference's step 5 also keeps *references of all papers*; this
-engine's document model has no citation graph, so the side-table hook is
-the generic :func:`filter_side_table` semi-join (used for embeddings).
+Step 5 is left to the caller: keeping a side table's rows for the kept
+docs is one ``left_semi`` join on the id.
 """
 
 from __future__ import annotations
@@ -114,11 +113,3 @@ def mini_corpus(
     )
     return docs.join(kept_ids, id_col, "left_semi")
 
-
-def filter_side_table(
-    side: DataFrame, kept_docs: DataFrame, side_id: str, doc_id: str = "doc_id"
-) -> DataFrame:
-    """Step 5 — keep a side table's rows (embeddings, payloads) whose id
-    appears among kept docs. A semi-join; ids-only on the build side."""
-    ids = kept_docs.select(F.col(doc_id).alias(side_id)).distinct()
-    return side.join(ids, side_id, "left_semi")

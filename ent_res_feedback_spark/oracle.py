@@ -18,7 +18,6 @@ import unicodedata
 
 from ent_res_feedback_spark.functions.strdist import (
     jaro_winkler_similarity,
-    lcs_len,
     prefix_dist_kernel,
 )
 

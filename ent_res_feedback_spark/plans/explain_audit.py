@@ -94,19 +94,6 @@ def audit(spark, sf_dir: str = "/root/testdata/sf0.01") -> dict[str, str]:
     )
 
     from ent_res_feedback_spark.operators.facets import derive_facets
-    from ent_res_feedback_spark.operators.merge_rules import (
-        cluster_pair_rules,
-        cluster_profiles,
-    )
-
-    sig = spark.createDataFrame(
-        [("s1", "Ann", None, "Lee", ["MIT"], None, "ORCID", ["1"], 2001, "c1")],
-        "sig_id string, first string, middle string, last string, "
-        "affiliations array<string>, email string, source string, "
-        "source_ids array<string>, year int, cluster_id string",
-    )
-    profs = cluster_profiles(sig)
-    plans["cluster_pair_rules"] = _formatted(cluster_pair_rules(profs, profs))
 
     fsig = docs.select(
         "doc_id",
@@ -119,10 +106,6 @@ def audit(spark, sf_dir: str = "/root/testdata/sf0.01") -> dict[str, str]:
     )
 
     # round-4 operators
-    from ent_res_feedback_spark.operators.similarity import (
-        _centroid_ranking,
-        ivf_centroids,
-    )
     from ent_res_feedback_spark.operators.splits import split_blocks
 
     mentions = docs.select("doc_id", F.col("lang").alias("block_key"))
@@ -130,21 +113,6 @@ def audit(spark, sf_dir: str = "/root/testdata/sf0.01") -> dict[str, str]:
         split_blocks(mentions, k=3, exact=False)
     )
     plans["split_blocks_exact"] = _formatted(split_blocks(mentions, k=3))
-
-    cents = ivf_centroids(emb, 8)
-    dim = len(cents[0])
-    kmeans_update = (
-        emb.select(
-            F.col("embedding"),
-            _centroid_ranking(F.col("embedding"), cents)[0].alias("_cell"),
-        )
-        .groupBy("_cell")
-        .agg(
-            F.count("*").alias("_n"),
-            *[F.sum(F.col("embedding")[i]).alias(f"_s{i}") for i in range(dim)],
-        )
-    )
-    plans["ivf_kmeans_update"] = _formatted(kmeans_update)
 
     # round-5 operators
     from ent_res_feedback_spark.operators.cc import threshold_sweep_components
@@ -311,11 +279,6 @@ def check(plans: dict[str, str]) -> list[str]:
     if "codegen id" not in lp:
         problems.append("lang_id_profile: not codegen'd")
 
-    # C3 default candidate path must be equi-join, never a cross shape
-    cr = plans["cluster_pair_rules"]
-    if "CartesianProduct" in cr or "BroadcastNestedLoopJoin" in cr:
-        problems.append("cluster_pair_rules: default path compiles to a cross")
-
     # facet derivation is pure JVM group-count joins
     fc = plans["derive_facets"]
     if "ArrowEvalPython" in fc or "BatchEvalPython" in fc:
@@ -335,12 +298,6 @@ def check(plans: dict[str, str]) -> list[str]:
         problems.append("split_blocks_exact: stratum map join not broadcast")
     if "Window" not in sbe:
         problems.append("split_blocks_exact: rank window missing")
-    # round-4: the k-means update must be one map-side-combinable agg
-    km = plans["ivf_kmeans_update"]
-    if "ArrowEvalPython" in km or "BatchEvalPython" in km:
-        problems.append("ivf_kmeans_update: Python in the Lloyd update")
-    if "HashAggregate" not in km:
-        problems.append("ivf_kmeans_update: no partial hash aggregate")
     # round-5: the mini-corpus keeps must be broadcast semi-joins — the
     # kept-block table is bounded by top_n, never a shuffle on the docs
     mc = plans["mini_corpus"]

@@ -54,7 +54,7 @@ def main() -> int:
     args = p.parse_args()
 
     from ent_res_feedback_spark.operators.incremental import assign_incremental
-    from ent_res_feedback_spark.pipeline import ERConfig
+    from ent_res_feedback_spark.pipeline import ERConfig, release_persisted
 
     spark = SparkSession.builder.appName("ent-res-incremental").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -80,6 +80,7 @@ def main() -> int:
     assigned.join(spans, "doc_id").select("doc_id", "cluster_id", "spans").write.mode(
         "overwrite"
     ).parquet(os.path.join(args.output, "clusters"))
+    release_persisted(assigned)
     print(
         json.dumps(
             {

@@ -1,36 +1,13 @@
-"""FE6 (StandardScaler), A5 (AUROC/AP).
+"""A5 (AUROC/AP).
 
-Goldens are computed independently in-test: numpy for the scaler, and a
-pure-Python replica of sklearn's roc_auc_score / average_precision_score
-for the metrics (pairwise counting + step integral on ~10 rows)."""
+Goldens are computed independently in-test: a pure-Python replica of
+sklearn's roc_auc_score / average_precision_score (pairwise counting +
+step integral on ~10 rows)."""
 
 import numpy as np
 import pytest
 
 from ent_res_feedback_spark.operators.metrics import auroc_ap
-from ent_res_feedback_spark.operators.scoring import (
-    apply_standard_scaler,
-    fit_standard_scaler,
-)
-
-
-def test_standard_scaler_matches_numpy(spark):
-    rng = np.random.default_rng(7)
-    X = rng.normal(3.0, 2.5, size=(200, 2))
-    X[:, 1] = 5.0  # constant feature -> std guard
-    df = spark.createDataFrame(
-        [(float(a), float(b)) for a, b in X], "fa double, fb double"
-    )
-    scaler = fit_standard_scaler(df, ["fa", "fb"])
-    assert scaler["fa"][0] == pytest.approx(X[:, 0].mean())
-    assert scaler["fa"][1] == pytest.approx(X[:, 0].std())  # ddof=0
-    assert scaler["fb"] == (pytest.approx(5.0), 1.0)
-
-    got = np.array(
-        [r["fa"] for r in apply_standard_scaler(df, scaler).collect()]
-    )
-    want = (X[:, 0] - X[:, 0].mean()) / X[:, 0].std()
-    assert np.allclose(sorted(got), sorted(want))
 
 
 def _roc_auc_py(y, s):

@@ -44,30 +44,6 @@ def test_exact_duplicates_match_bruteforce(spark):
     want_groups = {tuple(sorted(v)) for v in groups.values() if len(v) > 1}
     got_groups = {(sid, size) for _, sid, size in got}
     assert {(g[0], len(g)) for g in want_groups} == got_groups
-    # survivors: one row per distinct text
-    surv = dedup.dedup_survivors(df)
-    assert surv.count() == len(groups)
-
-
-def _token_jaccard(a, b):
-    sa, sb = set(a.split()), set(b.split())
-    return len(sa & sb) / len(sa | sb) if sa and sb else None
-
-
-def test_ngram_jaccard_pairs_bruteforce(spark):
-    df, rows = _mkdocs(spark, n=40)
-    got = {
-        (r["doc_id_1"], r["doc_id_2"]): r["jaccard"]
-        for r in dedup.ngram_jaccard_pairs(df, threshold=0.6).collect()
-    }
-    want = {}
-    for (i, a), (j, b) in itertools.combinations(rows, 2):
-        jac = _token_jaccard(a, b)
-        if jac is not None and jac >= 0.6:
-            want[(min(i, j), max(i, j))] = jac
-    assert set(got) == set(want)
-    for k in got:
-        assert abs(got[k] - want[k]) < 1e-9
 
 
 def _shingle_set(text, n=3):
@@ -97,83 +73,3 @@ def test_minhash_lsh_finds_exact_dups_and_verifies(spark):
         s1, s2 = _shingle_set(text_of[a]), _shingle_set(text_of[b])
         assert len(s1 & s2) / len(s1 | s2) >= 0.999
 
-
-def test_simhash_exact_dups_zero_hamming(spark):
-    df, rows = _mkdocs(spark, n=60)
-    out = dedup.simhash_near_duplicates(df, max_hamming=0).collect()
-    got = {(r["doc_id_1"], r["doc_id_2"]) for r in out}
-    groups = {}
-    for i, t in rows:
-        # simhash over token SETS: same token set -> same fingerprint
-        groups.setdefault(frozenset(t.split()), []).append(i)
-    want = set()
-    for v in groups.values():
-        for a, b in itertools.combinations(sorted(v), 2):
-            want.add((a, b))
-    # zero-hamming pairs must include all same-token-set pairs that share
-    # the 16-bit prefix bucket (they do: identical fingerprint)
-    assert want <= got
-
-
-def test_simhash_block_decomposition_recall_guarantee(spark):
-    """Pigeonhole recall: EVERY pair within max_hamming of each other is
-    found (brute-force cross-check), not just same-prefix pairs."""
-    import itertools
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from ent_res_feedback_spark.functions import hashing
-    from ent_res_feedback_spark.functions.text import normalize_text_ascii
-    from ent_res_feedback_spark.operators.dedup import (
-        simhash_near_duplicates,
-        tokenize,
-    )
-
-    base = "spark native entity resolution with blocking scoring clustering"
-    variants = [
-        base,
-        # same token SET, different order -> identical fingerprint
-        # (hamming 0): a guaranteed within-d pair for the recall assertion
-        "clustering scoring blocking with resolution entity native spark",
-        base + " extra",
-        base.replace("blocking", "blocks"),
-        base.replace("spark", "flink").replace("entity", "record"),
-        "completely different text about oceans and volcano geology maps",
-        "completely different text about oceans and volcano geology map",
-    ]
-    df = spark.createDataFrame(
-        [(str(i), t) for i, t in enumerate(variants)], "doc_id string, text string"
-    )
-    d = 3
-    got = {
-        tuple(sorted((r["doc_id_1"], r["doc_id_2"])))
-        for r in simhash_near_duplicates(df, max_hamming=d).collect()
-    }
-    # brute force over the same fingerprints
-    fps = {
-        r["doc_id"]: r["sh"]
-        for r in df.select(
-            "doc_id",
-            hashing.simhash64(tokenize(normalize_text_ascii(F.col("text")))).alias("sh"),
-        ).collect()
-    }
-    want = {
-        tuple(sorted((a, b)))
-        for a, b in itertools.combinations(fps, 2)
-        if bin(fps[a] ^ fps[b]).count("1") <= d
-    }
-    assert got == want
-    assert len(want) >= 1  # fixture actually exercises a near-dup pair
-
-
-def test_simhash_invalid_params_raise(spark):
-    import pytest as _pytest
-
-    from ent_res_feedback_spark.operators.dedup import simhash_near_duplicates
-
-    df = spark.createDataFrame([("a", "x")], "doc_id string, text string")
-    with _pytest.raises(ValueError, match="num_blocks > max_hamming"):
-        simhash_near_duplicates(df, max_hamming=4, num_blocks=4)
-    with _pytest.raises(ValueError, match="divide 64"):
-        simhash_near_duplicates(df, max_hamming=3, num_blocks=5)

@@ -7,10 +7,7 @@ from collections import defaultdict
 import numpy as np
 import pytest
 
-from ent_res_feedback_spark.operators.facets import (
-    availability_facets,
-    derive_facets,
-)
+from ent_res_feedback_spark.operators.facets import derive_facets
 
 # (sig_id, block_key, full_name, cluster_id) — crafted so that:
 # block "b1" holds a homonym group ("ann lee" split over c1/c2), a
@@ -107,30 +104,6 @@ def test_halfeven_bucket_boundary(spark):
     assert row["t0"]["homonymity_count"] == 1
     assert row["t0"]["homonymity"] == pytest.approx(0.12)
     assert float(np.round(1 / 8, 2)) == 0.12  # the semantics being pinned
-
-
-def test_availability_facets(spark):
-    df = spark.createDataFrame(
-        [
-            ("a", "J.", ["MIT"], "x@y.z", ["b"]),
-            ("b", "Jo", [], "", []),
-            ("c", None, None, None, None),
-        ],
-        "sig_id string, first string, affiliations array<string>, "
-        "email string, coauthors array<string>",
-    )
-    got = {r["sig_id"]: r for r in availability_facets(df).collect()}
-    # "J." -> dot removed -> len 1 -> 0; "Jo" -> 1
-    assert got["a"]["has_first_name"] == 0
-    assert got["b"]["has_first_name"] == 1
-    assert got["c"]["has_first_name"] == 0
-    assert got["a"]["has_affiliation"] == 1
-    assert got["b"]["has_affiliation"] == 0
-    assert got["a"]["has_email"] == 1
-    assert got["b"]["has_email"] == 0
-    assert got["c"]["has_email"] == 0
-    assert got["a"]["has_coauthors"] == 1
-    assert got["b"]["has_coauthors"] == 0
 
 
 def test_randomized_fixtures_match_reference_loop(spark):

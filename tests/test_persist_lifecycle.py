@@ -1,12 +1,14 @@
 """Persist lifecycle of the ER chain: every frame a job persists is
-released once its outputs are written, so repeated jobs and feedback
-rounds do not pile up cached partitions for the driver lifetime."""
+released once its outputs are written, so repeated jobs, feedback rounds
+and incremental runs do not pile up cached partitions for the driver
+lifetime."""
 
 import pytest
 
 from ent_res_feedback_spark.corpus import CorpusConfig, corpus_to_spark, generate_corpus
 from ent_res_feedback_spark.operators.feedback import run_feedback_loop
-from ent_res_feedback_spark.pipeline import ERConfig, run_pipeline
+from ent_res_feedback_spark.operators.incremental import assign_incremental
+from ent_res_feedback_spark.pipeline import ERConfig, release_persisted, run_pipeline
 
 
 def _persisted(spark) -> tuple[int, int]:
@@ -57,4 +59,20 @@ def test_feedback_rounds_release_cached_frames(spark, small_corpus):
         max_rounds=2, pairs_per_round=5,
     )
     assert res["state"].rounds == 2
+    assert _persisted(spark)[0] == cached
+
+
+def test_incremental_assignments_cached_once_and_released(spark, tmp_path):
+    """The argmin assignments feed the leftover pipeline and the final
+    union; they are cached once, and released with the result."""
+    documents, _, _ = generate_corpus(CorpusConfig(n_entities=12, seed=5))
+    prior = corpus_to_spark(spark, documents[::2])
+    new = corpus_to_spark(spark, documents[1::2])
+    base = run_pipeline(prior, ERConfig())["clusters"].select("doc_id", "cluster_id")
+    cached, _ = _persisted(spark)
+    out = assign_incremental(new, prior, base, ERConfig())
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" in plan
+    out.write.parquet(str(tmp_path / "clusters"))
+    release_persisted(out)
     assert _persisted(spark)[0] == cached

@@ -1,11 +1,24 @@
-"""Every package module is reached by a job, a query or a CLI.
+"""Every package module, and every top-level function and class in it, is
+reached by a job, a query or a CLI.
 
-A module that only tests import is dead code that still costs reading,
-review and test time. This walk (no Spark) starts from the entry points —
-the spark-submit jobs, the tools, the benchmark, the driver's queries and
-every module with a ``__main__`` block — follows module imports
-(top-level and function-local) and fails on any package module it does
-not reach.
+Code that only tests call is dead code that still costs reading, review
+and test time. Both walks (no Spark) start from the entry points — the
+spark-submit jobs, the tools, the benchmark, the driver's queries and
+every module with a ``__main__`` block.
+
+The module walk follows module imports (top-level and function-local)
+and fails on any package module it does not reach.
+
+The function walk collects every name and attribute the entry points
+reference, then closes that set over the bodies of the package's
+top-level functions and classes whose names are reached (module-level
+statements run at import, so they count as reached). It fails on any
+top-level definition whose name it does not reach. Names are matched
+without their module, which can only over-count reach: no entry point
+refers by name to a definition it flags. The plan audit
+(``plans/explain_audit.py``) is left out of the function walk: it is a
+check on the plans of the product path, like the tests, not a product
+path itself, so what only it builds is not reached.
 """
 
 import ast
@@ -16,6 +29,36 @@ PKG = "ent_res_feedback_spark"
 
 #: modules allowed to be unreached, with the reason
 EXCEPTIONS = set()
+
+#: the module the function walk neither starts from nor checks
+AUDIT = "ent_res_feedback_spark.plans.explain_audit"
+
+_MM = "ent_res_feedback_spark.operators.multimodal"
+_SPLITS = "ent_res_feedback_spark.operators.splits"
+
+#: top-level definitions allowed to be unreached, (module, name) -> reason
+FUNCTION_EXCEPTIONS = {
+    (_MM, "DecodeUnavailable"): "pixel decode: no job ingests image bytes yet",
+    (_MM, "decode_netpbm"): "pixel decode: no job ingests image bytes yet",
+    (_MM, "decode_bmp"): "pixel decode: no job ingests image bytes yet",
+    (_MM, "decode_image"): "pixel decode: no job ingests image bytes yet",
+    (_MM, "decode_image_or_fake"): "pixel decode: no job ingests image bytes yet",
+    (_MM, "deterministic_fake_image"): "the decode stub's fallback image",
+    (_MM, "resize_bilinear"): "resize kernel of the unreached decode path",
+    (_MM, "resize_media"): "resize stage of the unreached decode path",
+    (_MM, "sample_frames"): "video frame sampling: no job reads video",
+    (_SPLITS, "split_signatures"): "per-signature split mode; jobs split blocks",
+    (_SPLITS, "split_time"): "by-year split mode; jobs split blocks",
+    (
+        "ent_res_feedback_spark.operators.constraints",
+        "load_name_aliases",
+    ): "S5 alias-table loader: the alias table has no job flag yet",
+}
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path) as fh:
+        return ast.parse(fh.read())
 
 
 def _package_modules() -> dict[str, str]:
@@ -50,16 +93,14 @@ def _roots(mods: dict[str, str]) -> list[tuple[str, str]]:
     for f in ("__spark_entry__.py", "bench.py", "bench_extra.py"):
         roots.append((f[:-3], os.path.join(REPO, f)))
     for name, path in mods.items():
-        with open(path) as fh:
-            if _has_main_block(ast.parse(fh.read())):
-                roots.append((name, path))
+        if _has_main_block(_parse(path)):
+            roots.append((name, path))
     return roots
 
 
 def _imports(name: str, path: str, mods: dict[str, str]) -> set[str]:
     """Package modules ``path`` (module ``name``) imports anywhere."""
-    with open(path) as fh:
-        tree = ast.parse(fh.read())
+    tree = _parse(path)
     package = name if path.endswith("__init__.py") else name.rpartition(".")[0]
     out = set()
     for node in ast.walk(tree):
@@ -112,4 +153,54 @@ def test_every_package_module_is_reached():
     # equality, not subset: an exception that becomes reachable is stale
     assert unreached == EXCEPTIONS, (
         f"unreached: {sorted(unreached)}; exceptions: {sorted(EXCEPTIONS)}"
+    )
+
+
+def _names(node: ast.AST) -> set[str]:
+    """Every name and attribute ``node`` references."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+    return out
+
+
+_DEFS = (ast.FunctionDef, ast.ClassDef)
+
+
+def _unreached_defs(mods: dict[str, str]) -> set[tuple[str, str]]:
+    reached: set[str] = set()
+    defs: dict[str, list[ast.AST]] = {}
+    located = set()
+    for name, path in _roots(mods):
+        # a package module's own __main__ block is module-level code,
+        # which the pass below reads
+        if name not in mods:
+            reached |= _names(_parse(path))
+    for name, path in mods.items():
+        if name == AUDIT:
+            continue
+        for node in _parse(path).body:
+            if isinstance(node, _DEFS):
+                defs.setdefault(node.name, []).append(node)
+                located.add((name, node.name))
+            else:
+                reached |= _names(node)
+    todo = list(reached)
+    while todo:
+        for node in defs.pop(todo.pop(), []):
+            new = _names(node) - reached
+            reached |= new
+            todo.extend(new)
+    return {(mod, name) for mod, name in located if name not in reached}
+
+
+def test_every_package_definition_is_reached():
+    unreached = _unreached_defs(_package_modules())
+    # equality, not subset: an exception that becomes reachable is stale
+    assert unreached == set(FUNCTION_EXCEPTIONS), (
+        f"unreached: {sorted(unreached - set(FUNCTION_EXCEPTIONS))}; "
+        f"stale exceptions: {sorted(set(FUNCTION_EXCEPTIONS) - unreached)}"
     )

@@ -12,11 +12,7 @@ import collections
 
 from pyspark.sql import functions as F
 
-from ent_res_feedback_spark.operators.subset import (
-    filter_side_table,
-    kept_blocks,
-    mini_corpus,
-)
+from ent_res_feedback_spark.operators.subset import kept_blocks, mini_corpus
 
 # (doc_id, block, cluster) — block 'c' is over-cutoff, cluster 30
 # straddles a dropped block, cluster 40's doc re-enters via containment
@@ -137,16 +133,6 @@ def test_per_dataset_partitioning(spark):
         ).collect()
     }
     assert got == {4}
-
-
-def test_filter_side_table(spark):
-    docs, clusters = _frames(spark, ROWS)
-    kept = mini_corpus(docs, clusters, big_block_cutoff=2)
-    side = spark.createDataFrame(
-        [(d, float(d)) for d, _, _ in ROWS], "vec_id long, v double"
-    )
-    out = filter_side_table(side, kept, side_id="vec_id")
-    assert {r.vec_id for r in out.collect()} == {1, 2, 8, 9, 10}
 
 
 def test_kept_blocks_plan_is_broadcastable(spark):
