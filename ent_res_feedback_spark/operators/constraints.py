@@ -140,53 +140,17 @@ def _require_groups(req_edges: DataFrame) -> DataFrame | None:
     return spark.createDataFrame(assign, "doc_id string, grp string")
 
 
-def load_name_aliases(spark, path: str) -> DataFrame:
-    """S5 — load a first-name alias table (reference name_tuples,
-    s2and/data.py:481-488): csv or parquet with columns name_1, name_2."""
-    if path.endswith(".csv"):
-        return spark.read.option("header", "true").csv(path).select(
-            "name_1", "name_2"
-        )
-    return spark.read.parquet(path).select("name_1", "name_2")
-
-
-def join_alias_flags(pairs: DataFrame, alias_pairs: DataFrame | None) -> DataFrame:
-    """Broadcast-join the (small) alias table onto a pair frame as a
-    ``known_alias`` boolean over (first_1, first_2), both orientations
-    (the reference probes the tuple set both ways, data.py:854-862)."""
-    if alias_pairs is None:
-        return pairs.withColumn("known_alias", _false())
-    canon = (
-        alias_pairs.select(F.col("name_1").alias("fa"), F.col("name_2").alias("fb"))
-        .unionByName(
-            alias_pairs.select(
-                F.col("name_2").alias("fa"), F.col("name_1").alias("fb")
-            )
-        )
-        .distinct()
-        .withColumn("known_alias", F.lit(True))
-    )
-    out = pairs.join(
-        F.broadcast(canon),
-        (pairs["first_1"] == canon["fa"]) & (pairs["first_2"] == canon["fb"]),
-        "left",
-    ).drop("fa", "fb")
-    return out.fillna({"known_alias": False})
-
-
 @once_per_context
 def _false() -> Column:
-    """The no-seed / no-alias flag value, built once per SparkContext."""
+    """The no-seed flag value, built once per SparkContext."""
     return F.lit(False)
 
 
-def constraint_distance(
-    alias_pairs: DataFrame | None = None,
-) -> Column:
+@once_per_context
+def constraint_distance() -> Column:
     """The C1 precedence chain as one column expression over a pair frame
-    that already has seed flags and mention fields (_1/_2 suffixed).
-    Built once per SparkContext for each of the two shapes it has: with
-    and without an alias table (``_constraint_chain``).
+    that already has seed flags and mention fields (_1/_2 suffixed),
+    built once per SparkContext.
 
     Order (reference data.py:827-891):
       seed disallow -> 1e4
@@ -194,22 +158,12 @@ def constraint_distance(
       cross-seed disallow -> 1e4
       last-name mismatch -> 1e4
       first-initial mismatch -> 1e4
-      non-prefix & non-alias firsts -> 1e4
+      non-prefix firsts -> 1e4
       conflicting middle initials -> 1e4
       else NULL (model decides)
     """
-    return _constraint_chain(alias_pairs is not None)
-
-
-@once_per_context
-def _constraint_chain(with_alias: bool) -> Column:
     f1, f2 = F.col("first_1"), F.col("first_2")
     l1, l2 = F.col("last_1"), F.col("last_2")
-    known_alias = (
-        F.coalesce(F.col("known_alias"), F.lit(False))
-        if with_alias
-        else F.lit(False)
-    )
     return (
         F.when(F.col("seed_disallow"), F.lit(LARGE_DISTANCE))
         .when(F.col("seed_require"), F.lit(LOW_DISTANCE))
@@ -224,8 +178,7 @@ def _constraint_chain(with_alias: bool) -> Column:
         .when(
             (F.length(f1) > 0)
             & (F.length(f2) > 0)
-            & ~_starts_with_either(f1, f2)
-            & ~known_alias,
+            & ~_starts_with_either(f1, f2),
             F.lit(LARGE_DISTANCE),
         )
         .when(
@@ -236,18 +189,10 @@ def _constraint_chain(with_alias: bool) -> Column:
     )
 
 
-def apply_constraints(
-    pairs: DataFrame,
-    seeds: DataFrame | None = None,
-    alias_pairs: DataFrame | None = None,
-) -> DataFrame:
+def apply_constraints(pairs: DataFrame, seeds: DataFrame | None = None) -> DataFrame:
     """Attach ``constraint_dist`` (NULL = unconstrained). Call BEFORE the
     expensive featurization and filter the UDF input to
-    ``constraint_dist IS NULL`` (the C2 gate). ``alias_pairs`` (S5) turns
-    otherwise-disallowed non-prefix first-name pairs back over to the
-    model (reference data.py:854-862)."""
-    with_seeds = join_seed_constraints(pairs, seeds)
-    with_alias = join_alias_flags(with_seeds, alias_pairs)
-    return with_alias.withColumn(
-        "constraint_dist", constraint_distance(alias_pairs)
+    ``constraint_dist IS NULL`` (the C2 gate)."""
+    return join_seed_constraints(pairs, seeds).withColumn(
+        "constraint_dist", constraint_distance()
     )

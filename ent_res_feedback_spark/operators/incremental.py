@@ -10,9 +10,9 @@ I2 (altered-cluster re-split, model.py:570-599): clusters flagged as
 WITHOUT seeds; new docs assign against the resulting SUBclusters, then
 the winning subcluster is mapped back to the claimed cluster id. With
 ``prevent_new_incompatibilities`` (model.py:684-717), a doc whose first
-name is neither a prefix-match nor a known alias of ANY multi-char first
-name already in the claimed cluster becomes a singleton instead — the
-"D Jones + David Jones + Donald Jones" guard.
+name is not a prefix-match of ANY multi-char first name already in the
+claimed cluster becomes a singleton instead — the "D Jones + David Jones
++ Donald Jones" guard.
 
 Spark restatement: block-scoped join of new docs x cluster members ->
 score -> groupBy(new_id, cluster).avg(dist) -> rank-1 window + eps
@@ -162,16 +162,13 @@ def resplit_altered_clusters(
 
 
 def _incompatibility_gate(
-    best: DataFrame,
-    new_m: DataFrame,
-    member_m_orig: DataFrame,
-    alias_pairs: DataFrame | None,
+    best: DataFrame, new_m: DataFrame, member_m_orig: DataFrame
 ) -> DataFrame:
-    """Reference model.py:684-717 — drop winners whose first name is
-    neither a prefix-match nor a known alias of any EXISTING multi-char
-    first name in the claimed cluster (clusters with only initials admit
-    anyone). ``best`` must carry ``was_resplit`` (the gate only applies to
-    docs that joined via a re-split subcluster). Returns the gated best."""
+    """Reference model.py:684-717 — drop winners whose first name is not
+    a prefix-match of any EXISTING multi-char first name in the claimed
+    cluster (clusters with only initials admit anyone). ``best`` must
+    carry ``was_resplit`` (the gate only applies to docs that joined via
+    a re-split subcluster). Returns the gated best."""
     firsts = (
         member_m_orig.where(F.length("first") > 1)
         .groupBy("cluster_id")
@@ -185,39 +182,11 @@ def _incompatibility_gate(
         F.col("cluster_firsts"),
         lambda f: f.startswith(F.col("new_first")) | F.col("new_first").startswith(f),
     )
-    if alias_pairs is not None:
-        # canonical both-orientation alias keys, joined per exploded first
-        canon = alias_pairs.select(
-            F.col("name_1").alias("fa"), F.col("name_2").alias("fb")
-        ).unionByName(
-            alias_pairs.select(
-                F.col("name_2").alias("fa"), F.col("name_1").alias("fb")
-            )
-        ).distinct()
-        exploded = cand.select(
-            "doc_id", "new_first", F.explode("cluster_firsts").alias("fa")
-        )
-        alias_hits = (
-            exploded.join(
-                F.broadcast(canon),
-                (exploded["fa"] == canon["fa"])
-                & (exploded["new_first"] == canon["fb"]),
-                "left_semi",
-            )
-            .select("doc_id")
-            .distinct()
-            .withColumn("alias_ok", F.lit(True))
-        )
-        cand = cand.join(alias_hits, "doc_id", "left")
-        alias_ok = F.coalesce(F.col("alias_ok"), F.lit(False))
-    else:
-        alias_ok = F.lit(False)
     allowed = (
         ~F.col("was_resplit")
         | F.col("cluster_firsts").isNull()
         | (F.size("cluster_firsts") == 0)
         | prefix_ok
-        | alias_ok
     )
     return cand.where(allowed).select("doc_id", "cluster_id")
 
@@ -230,7 +199,6 @@ def assign_incremental(
     eps: float | None = None,
     altered_clusters: DataFrame | None = None,
     prevent_new_incompatibilities: bool = True,
-    alias_pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Returns (doc_id, cluster_id) for ALL docs, one row each: existing
     keep their cluster; new docs join the argmin-average-distance cluster
@@ -316,7 +284,7 @@ def assign_incremental(
                 .select(*MENTION_COLS)
                 .join(existing_clusters, "doc_id")
             )
-            best = _incompatibility_gate(best, new_m, member_m_orig, alias_pairs)
+            best = _incompatibility_gate(best, new_m, member_m_orig)
         else:
             best = best.select("doc_id", "cluster_id")
 

@@ -1,25 +1,20 @@
-"""Train/val/test splitting — the reference's §3.1 step-5 lifecycle
-operator (`split_cluster_signatures`, /root/reference/s2and/data.py:977-1040)
+"""Train/val/test splitting of blocks — the reference's §3.1 step-5
+lifecycle operator (`split_cluster_signatures`, s2and/data.py:977-1040)
+in its 'blocks' mode (`split_blocks_helper`, data.py:908-953),
 re-expressed Spark-first.
 
-Three modes, mirroring the reference's ``unit_of_data_split``:
-
-- **blocks** (`split_blocks`, reference `split_blocks_helper`
-  data.py:908-953): KMeans-stratify blocks by SIZE, then split blocks
-  within each stratum by seeded rank — train/val/test keep the same
-  block-size mix. The reference runs sklearn KMeans + sklearn
-  train_test_split; the restatement keeps the same shape with a
-  deterministic, engine-portable core: an exact-integer 1-D Lloyd over
-  the (distinct size, block count) histogram on the driver (the
-  histogram is bounded by the largest block size, never by corpus
-  size), and an md5-rank split within strata executed distributed.
-- **signatures** (`split_signatures`): seeded uniform split of ids.
-- **time** (`split_time`): contiguous split over a sort by year
-  (missing year -> 0), exactly the reference's truncation arithmetic.
+`split_blocks` KMeans-stratifies blocks by SIZE, then splits blocks
+within each stratum by seeded rank, so train/val/test keep the same
+block-size mix. The reference runs sklearn KMeans + sklearn
+train_test_split; the restatement keeps the same shape with a
+deterministic, engine-portable core: an exact-integer 1-D Lloyd over the
+(distinct size, block count) histogram on the driver (the histogram is
+bounded by the largest block size, never by corpus size), and an
+md5-rank split within strata executed distributed.
 
 Every rule is replayable in ANSI SQL (md5 ranks, floor thresholds,
-exact-integer centroid rationals), so the driver oracle checks the
-blocks mode hash-exactly.
+exact-integer centroid rationals), so the driver oracle checks it
+hash-exactly.
 """
 
 from __future__ import annotations
@@ -107,7 +102,6 @@ def split_blocks(
     seed: int = 1111,
     ratios: tuple[float, float, float] = (0.8, 0.1, 0.1),
     iters: int = KMEANS_ITERS,
-    exact: bool = True,
 ) -> DataFrame:
     """Reference `split_blocks_helper` (data.py:908-953) -> one row per
     block: (block_key, block_size, stratum, split).
@@ -115,15 +109,9 @@ def split_blocks(
     Shuffle shape: one groupBy on the block key (sizes), a collect of
     the DISTINCT-size histogram (bounded by max block size, not corpus
     size), a broadcast join of the size->stratum map, and one window
-    rank within strata. Nothing quadratic, nothing keyed on doc ids.
-
-    ``exact=True`` reproduces the reference's exact per-stratum counts
-    via a rank window partitioned by stratum — fine up to ~1e8 blocks
-    (k partitions carry the sort). ``exact=False`` is the 100 TB path:
-    each block draws a uniform [0,1) value from its md5 (first 13 hex
-    chars / 16^13) and splits by threshold — embarrassingly parallel,
-    no window, proportions exact to ~1/sqrt(n) per stratum. Both modes
-    are seed-stable and SQL-replayable.
+    rank within strata, which reproduces the reference's exact
+    per-stratum counts (k partitions carry the sort). Nothing quadratic,
+    nothing keyed on doc ids.
     """
     spark = mentions.sparkSession
     bs = mentions.groupBy(block_col).agg(F.count("*").alias("block_size"))
@@ -143,21 +131,6 @@ def split_blocks(
     order_key = F.md5(
         F.concat_ws("|", F.lit(str(seed)), F.col(block_col))
     )
-    if not exact:
-        # hash-threshold draw: u = int(md5[:13], 16) / 16^13 in [0, 1)
-        tr, va, _ = ratios
-        u = F.conv(F.substring(order_key, 1, 13), 16, 10).cast("double") / F.lit(
-            float(16**13)
-        )
-        return sized.select(
-            F.col(block_col),
-            F.col("block_size"),
-            F.col("stratum").cast("bigint").alias("stratum"),
-            F.when(u < F.lit(tr), F.lit("train"))
-            .when(u < F.lit(tr + va), F.lit("val"))
-            .otherwise(F.lit("test"))
-            .alias("split"),
-        )
     w_rank = Window.partitionBy("stratum").orderBy(order_key, F.col(block_col))
     w_cnt = Window.partitionBy("stratum")
     ranked = sized.select(
@@ -172,94 +145,4 @@ def split_blocks(
         F.col("block_size"),
         F.col("stratum").cast("bigint").alias("stratum"),
         _split_col(F.col("rn"), F.col("cnt"), ratios).alias("split"),
-    )
-
-
-def split_signatures(
-    mentions: DataFrame,
-    id_col: str = "doc_id",
-    seed: int = 1111,
-    ratios: tuple[float, float, float] = (0.8, 0.1, 0.1),
-    exact: bool = True,
-) -> DataFrame:
-    """Reference 'signatures' mode (data.py:992-1008): seeded uniform
-    split of ids -> (id, split). md5 rank replaces sklearn's shuffled
-    index: same semantics (uniform, seed-stable), engine-portable.
-
-    ``exact=True`` gives exact counts via a global rank (single-reducer
-    sort — fine to ~1e8 rows). ``exact=False`` is the 100 TB path:
-    per-row md5-threshold draw, no shuffle at all, proportions exact to
-    ~1/sqrt(n)."""
-    order_key = F.md5(F.concat_ws("|", F.lit(str(seed)), F.col(id_col)))
-    if not exact:
-        tr, va, _ = ratios
-        u = F.conv(F.substring(order_key, 1, 13), 16, 10).cast("double") / F.lit(
-            float(16**13)
-        )
-        return mentions.select(
-            F.col(id_col),
-            F.when(u < F.lit(tr), F.lit("train"))
-            .when(u < F.lit(tr + va), F.lit("val"))
-            .otherwise(F.lit("test"))
-            .alias("split"),
-        )
-    w_rank = Window.orderBy(order_key, F.col(id_col))
-    w_all = Window.partitionBy()
-    ranked = mentions.select(
-        F.col(id_col),
-        F.row_number().over(w_rank).alias("rn"),
-        F.count("*").over(w_all).alias("cnt"),
-    )
-    return ranked.select(
-        id_col, _split_col(F.col("rn"), F.col("cnt"), ratios).alias("split")
-    )
-
-
-def split_time(
-    mentions: DataFrame,
-    id_col: str = "doc_id",
-    year_col: str = "year",
-    ratios: tuple[float, float, float] = (0.8, 0.1, 0.1),
-    exact: bool = True,
-) -> DataFrame:
-    """Reference 'time' mode (data.py:1010-1030): sort by year (missing
-    -> 0), contiguous truncation split: train = first int(n*train),
-    val = next int(n*val), test = the rest — the reference's exact
-    arithmetic.
-
-    ``exact=False`` is the 100 TB path: boundary YEARS come from
-    approxQuantile (no global sort/rank); rows split by comparing their
-    year to the two boundaries. Contiguity in time is preserved exactly;
-    the counts are approximate at the boundary years."""
-    tr, va, _ = ratios
-    yr = F.coalesce(F.col(year_col), F.lit(0))
-    if not exact:
-        y_tr, y_va = mentions.select(
-            yr.cast("double").alias("_y")
-        ).approxQuantile("_y", [tr, tr + va], 0.001)
-        return mentions.select(
-            F.col(id_col),
-            F.when(yr <= F.lit(y_tr), F.lit("train"))
-            .when(yr <= F.lit(y_va), F.lit("val"))
-            .otherwise(F.lit("test"))
-            .alias("split"),
-        )
-    w_rank = Window.orderBy(
-        F.coalesce(F.col(year_col), F.lit(0)), F.col(id_col)
-    )
-    w_all = Window.partitionBy()
-    ranked = mentions.select(
-        F.col(id_col),
-        F.coalesce(F.col(year_col), F.lit(0)).alias("_yr"),
-        F.row_number().over(w_rank).alias("rn"),
-        F.count("*").over(w_all).alias("cnt"),
-    )
-    t1 = F.floor(F.col("cnt") * F.lit(tr))
-    t2 = t1 + F.floor(F.col("cnt") * F.lit(va))
-    return ranked.select(
-        id_col,
-        F.when(F.col("rn") <= t1, F.lit("train"))
-        .when(F.col("rn") <= t2, F.lit("val"))
-        .otherwise(F.lit("test"))
-        .alias("split"),
     )

@@ -7,11 +7,10 @@ Mirrors the reference behaviors pinned by
      assign against the SUBclusters and the claimed id is restored on
      output;
   2. with prevent_new_incompatibilities, a doc whose first name is not a
-     prefix/alias of any existing multi-char first in the claimed cluster
+     prefix of any existing multi-char first in the claimed cluster
      becomes a singleton instead (the "D Jones/David Jones/Donald Jones"
      guard); with the flag off it joins;
-  3. a known alias (name-pairs table) lets the otherwise-blocked name in;
-  4. a claimed cluster whose multi-char first-name set is empty admits
+  3. a claimed cluster whose multi-char first-name set is empty admits
      anyone the distance model accepts.
 """
 
@@ -98,15 +97,6 @@ def test_no_prevention_admits_everyone(spark, claimed):
         spark, claimed, new_docs, prevent_new_incompatibilities=False
     )
     assert got["n1"] == "C" and got["n2"] == "C"
-
-
-def test_known_alias_admits_blocked_name(spark, claimed):
-    alias_df = spark.createDataFrame(
-        [("alan", "alec")], "name_1 string, name_2 string"
-    )
-    new_docs = [_doc("n1", "alec smith", AFFIL_X)]
-    got = _assign(spark, claimed, new_docs, alias_pairs=alias_df)
-    assert got["n1"] == "C"
 
 
 def test_single_char_only_cluster_admits_any_name(spark):

@@ -1,66 +1,14 @@
-"""Multimodal plumbing: resize (REAL bilinear math over the stubbed
-decode), frame sampling, feature extraction round-trip."""
+"""Multimodal plumbing: the feature-extraction round trip."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from ent_res_feedback_spark.operators.multimodal import (
-    deterministic_fake_features,
-    deterministic_fake_image,
     extract_media_features,
     features_long,
     media_from_table,
-    resize_bilinear,
-    resize_media,
-    sample_frames,
 )
 
-
-# ---------------------------------------------------------------------------
-# resize_bilinear numpy goldens (no Spark)
-# ---------------------------------------------------------------------------
-
-def test_resize_identity():
-    img = np.arange(12, dtype=np.float32).reshape(3, 4)
-    out = resize_bilinear(img, 3, 4)
-    np.testing.assert_allclose(out, img, rtol=0, atol=1e-6)
-
-
-def test_resize_constant_stays_constant():
-    img = np.full((5, 7), 3.25, dtype=np.float32)
-    out = resize_bilinear(img, 2, 9)
-    np.testing.assert_allclose(out, np.full((2, 9), 3.25), atol=1e-6)
-
-
-def test_resize_2x2_to_1x1_is_mean():
-    img = np.array([[0.0, 1.0], [2.0, 3.0]], dtype=np.float32)
-    out = resize_bilinear(img, 1, 1)
-    assert out.shape == (1, 1)
-    assert out[0, 0] == pytest.approx(1.5)
-
-
-def test_resize_downscale_2x_box_equivalence():
-    # pixel-center bilinear at exactly 2x downscale samples the midpoint of
-    # each 2x2 block = block mean
-    img = np.arange(16, dtype=np.float32).reshape(4, 4)
-    out = resize_bilinear(img, 2, 2)
-    want = np.array([[2.5, 4.5], [10.5, 12.5]], dtype=np.float32)
-    np.testing.assert_allclose(out, want, atol=1e-6)
-
-
-def test_fake_image_deterministic():
-    a = deterministic_fake_image(b"ref-1", 8, 8)
-    b = deterministic_fake_image(b"ref-1", 8, 8)
-    c = deterministic_fake_image(b"ref-2", 8, 8)
-    np.testing.assert_array_equal(a, b)
-    assert not np.array_equal(a, c)
-    assert a.shape == (8, 8) and a.dtype == np.float32
-
-
-# ---------------------------------------------------------------------------
-# Spark plumbing
-# ---------------------------------------------------------------------------
 
 @pytest.fixture(scope="module")
 def media_df(spark):
@@ -68,48 +16,6 @@ def media_df(spark):
         [(f"m{i}",) for i in range(6)], "media_ref string"
     )
     return media_from_table(refs)
-
-
-def test_resize_media_shape_and_determinism(spark, media_df):
-    out = resize_media(media_df, out_h=4, out_w=5).collect()
-    assert len(out) == 6
-    for r in out:
-        assert r["out_h"] == 4 and r["out_w"] == 5
-        assert len(r["pixels"]) == 20
-    # row content matches a driver-side replay of decode+resize
-    r0 = next(r for r in out if r["media_ref"] == "m0")
-    img = deterministic_fake_image(b"m0", 64, 64)
-    want = resize_bilinear(img, 4, 5).ravel()
-    np.testing.assert_allclose(np.array(r0["pixels"]), want, atol=1e-6)
-
-
-def test_sample_frames_timestamps_and_features(spark):
-    rows = spark.createDataFrame([("v1",), ("v2",)], "media_ref string")
-    media = media_from_table(rows, kind="video").withColumn(
-        "meta",
-        F.struct(
-            F.lit(64).alias("width"),
-            F.lit(64).alias("height"),
-            F.lit(10000).alias("duration_ms"),
-            F.lit("fake").alias("codec"),
-        ),
-    )
-    out = sample_frames(media, n_frames=4).collect()
-    assert len(out) == 8
-    v1 = sorted(
-        (r for r in out if r["media_ref"] == "v1"), key=lambda r: r["frame_idx"]
-    )
-    # pixel-center timestamps over 10s / 4 frames: 1250, 3750, 6250, 8750
-    assert [r["ts_ms"] for r in v1] == [1250, 3750, 6250, 8750]
-    # per-frame features deterministic and frame-dependent
-    f0 = deterministic_fake_features(b"v1" + (0).to_bytes(4, "big"))
-    np.testing.assert_allclose(np.array(v1[0]["frame_features"]), f0, atol=1e-6)
-    assert v1[0]["frame_features"] != v1[1]["frame_features"]
-
-
-def test_media_without_duration_skipped(spark, media_df):
-    # images have duration_ms NULL -> no frames emitted
-    assert sample_frames(media_df, n_frames=3).count() == 0
 
 
 def test_extract_features_long_roundtrip(spark, media_df):

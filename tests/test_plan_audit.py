@@ -22,3 +22,17 @@ def test_plan_audit_checks_pass(no_aqe, sf_dir):
     plans = explain_audit.audit(no_aqe, sf_dir)
     problems = explain_audit.check(plans)
     assert problems == []
+
+
+def test_formatted_plan_independent_of_session_history(spark):
+    """The same frame built twice in one session formats to the same text:
+    expression ids, exchange plan ids and RDD ids are session counters."""
+    from pyspark.sql import functions as F
+
+    def frame():
+        rows = spark.createDataFrame([(i, i % 3) for i in range(9)], "a long, b long")
+        return rows.groupBy((F.col("b") + 1).alias("k")).agg(F.sum("a").alias("s"))
+
+    first = explain_audit._formatted(frame())
+    assert "Exchange" in first and "RDD[" in first
+    assert explain_audit._formatted(frame()) == first

@@ -33,28 +33,6 @@ EXCEPTIONS = set()
 #: the module the function walk neither starts from nor checks
 AUDIT = "ent_res_feedback_spark.plans.explain_audit"
 
-_MM = "ent_res_feedback_spark.operators.multimodal"
-_SPLITS = "ent_res_feedback_spark.operators.splits"
-
-#: top-level definitions allowed to be unreached, (module, name) -> reason
-FUNCTION_EXCEPTIONS = {
-    (_MM, "DecodeUnavailable"): "pixel decode: no job ingests image bytes yet",
-    (_MM, "decode_netpbm"): "pixel decode: no job ingests image bytes yet",
-    (_MM, "decode_bmp"): "pixel decode: no job ingests image bytes yet",
-    (_MM, "decode_image"): "pixel decode: no job ingests image bytes yet",
-    (_MM, "decode_image_or_fake"): "pixel decode: no job ingests image bytes yet",
-    (_MM, "deterministic_fake_image"): "the decode stub's fallback image",
-    (_MM, "resize_bilinear"): "resize kernel of the unreached decode path",
-    (_MM, "resize_media"): "resize stage of the unreached decode path",
-    (_MM, "sample_frames"): "video frame sampling: no job reads video",
-    (_SPLITS, "split_signatures"): "per-signature split mode; jobs split blocks",
-    (_SPLITS, "split_time"): "by-year split mode; jobs split blocks",
-    (
-        "ent_res_feedback_spark.operators.constraints",
-        "load_name_aliases",
-    ): "S5 alias-table loader: the alias table has no job flag yet",
-}
-
 
 def _parse(path: str) -> ast.Module:
     with open(path) as fh:
@@ -199,8 +177,4 @@ def _unreached_defs(mods: dict[str, str]) -> set[tuple[str, str]]:
 
 def test_every_package_definition_is_reached():
     unreached = _unreached_defs(_package_modules())
-    # equality, not subset: an exception that becomes reachable is stale
-    assert unreached == set(FUNCTION_EXCEPTIONS), (
-        f"unreached: {sorted(unreached - set(FUNCTION_EXCEPTIONS))}; "
-        f"stale exceptions: {sorted(set(FUNCTION_EXCEPTIONS) - unreached)}"
-    )
+    assert unreached == set(), f"unreached: {sorted(unreached)}"

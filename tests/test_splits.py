@@ -1,16 +1,11 @@
 """KMeans-stratified train/val/test splits (reference
 split_cluster_signatures, s2and/data.py:977-1040; split_blocks_helper
 data.py:908-953): stratum assignment, exact per-stratum proportions,
-determinism, and the scale (hash-threshold) path."""
-
-import pytest
-from pyspark.sql import functions as F
+and determinism."""
 
 from ent_res_feedback_spark.operators.splits import (
     kmeans_strata_1d,
     split_blocks,
-    split_signatures,
-    split_time,
 )
 
 
@@ -84,80 +79,3 @@ def test_split_blocks_strata_group_similar_sizes(spark):
         by_size.setdefault(r["block_size"], set()).add(r["stratum"])
     assert by_size[1] != by_size[100]
     assert len(by_size[1]) == 1 and len(by_size[100]) == 1
-
-
-def test_split_blocks_hash_threshold_mode(spark):
-    """exact=False: no window rank — proportions approximate but the
-    assignment is per-row deterministic and seed-stable."""
-    sizes = [1] * 200 + [10] * 100
-    m = _mentions(spark, sizes)
-    out = split_blocks(m, k=2, seed=1111, exact=False)
-    rows = out.collect()
-    assert len(rows) == 300
-    frac_train = sum(r["split"] == "train" for r in rows) / 300
-    assert 0.7 < frac_train < 0.9
-    # no Window/Sort in the plan — the 100 TB path must stay narrow
-    # after the size aggregation
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "Window" not in plan
-    again = sorted(map(tuple, split_blocks(m, k=2, seed=1111, exact=False).collect()))
-    assert sorted(map(tuple, rows)) == again
-
-
-def test_split_signatures_cover_and_ratio(spark):
-    m = _mentions(spark, [1] * 100)
-    out = split_signatures(m).collect()
-    assert len(out) == 100
-    import collections
-
-    c = collections.Counter(r["split"] for r in out)
-    assert c["train"] == 80 and c["val"] == 10 and c["test"] == 10
-
-
-def test_split_time_is_contiguous_by_year(spark):
-    rows = [(f"d{i}", 1990 + (i % 30)) for i in range(100)]
-    m = spark.createDataFrame(rows, "doc_id string, year int")
-    out = {r["doc_id"]: r["split"] for r in split_time(m).collect()}
-    years = {d: y for d, y in rows}
-    max_train = max(years[d] for d, s in out.items() if s == "train")
-    min_test = min(years[d] for d, s in out.items() if s == "test")
-    assert max_train <= min_test  # train strictly earlier than test
-    import collections
-
-    c = collections.Counter(out.values())
-    # reference truncation arithmetic: int(n*0.8), int(n*0.1), rest
-    assert c["train"] == 80 and c["val"] == 10 and c["test"] == 10
-    # missing years sort first (treated as 0)
-    m2 = spark.createDataFrame(
-        [("a", None), ("b", 2000)], "doc_id string, year int"
-    )
-    out2 = {r["doc_id"]: r["split"] for r in split_time(m2).collect()}
-    assert out2["a"] == "train"
-
-
-def test_split_signatures_hash_threshold(spark):
-    m = _mentions(spark, [1] * 500)
-    out = split_signatures(m, exact=False)
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "Window" not in plan
-    rows = out.collect()
-    import collections
-
-    c = collections.Counter(r["split"] for r in rows)
-    assert 0.7 < c["train"] / 500 < 0.9
-    again = sorted(map(tuple, split_signatures(m, exact=False).collect()))
-    assert sorted(map(tuple, rows)) == again
-
-
-def test_split_time_approx_boundaries(spark):
-    rows = [(f"d{i}", 1990 + (i % 40)) for i in range(400)]
-    m = spark.createDataFrame(rows, "doc_id string, year int")
-    out = {r["doc_id"]: r["split"] for r in split_time(m, exact=False).collect()}
-    years = {d: y for d, y in rows}
-    max_train = max(years[d] for d, s in out.items() if s == "train")
-    min_test = min(years[d] for d, s in out.items() if s == "test")
-    assert max_train < min_test  # contiguity in time holds exactly
-    import collections
-
-    c = collections.Counter(out.values())
-    assert 0.65 < c["train"] / 400 < 0.95
