@@ -218,12 +218,8 @@ def corpus_to_spark(spark, documents):
 def spark_corpus(
     spark,
     n_entities: int,
-    max_docs_per_entity: int = 10,
     hot_block_entities: int = 12,
     hot_block_boost: int = 4,
-    initial_variant_pct: int = 25,
-    honorific_pct: int = 10,
-    affil_missing_pct: int = 10,
     seed: int = 42,
 ):
     """documents(doc_id, spans) + gold(doc_id, cluster_id), generated
@@ -232,7 +228,10 @@ def spark_corpus(
     independent. Surname space = base x suffix x suffix (~1200 names), so
     block density stays realistic as n_entities grows; the first
     ``hot_block_entities`` entities are forced into ONE hot block with a
-    ``hot_block_boost`` document multiplier (skew realism)."""
+    ``hot_block_boost`` document multiplier (skew realism). Each entity
+    has 1-10 docs (times the boost); a doc's first name is an initial
+    with 25% chance, else "Dr "-prefixed with 10%, and 10% of docs have
+    no affiliation."""
     from pyspark.sql import functions as F
 
     def arr(values):
@@ -264,7 +263,7 @@ def spark_corpus(
         pick(AFFIL_CODES, F.col("eid"), "a3"),
     )
     n_docs = (
-        F.pmod(F.xxhash64(F.col("eid"), F.lit(seed), F.lit("n")), F.lit(max_docs_per_entity))
+        F.pmod(F.xxhash64(F.col("eid"), F.lit(seed), F.lit("n")), F.lit(10))
         .cast("int")
         + 1
     ) * F.when(is_hot, F.lit(hot_block_boost)).otherwise(F.lit(1))
@@ -286,14 +285,12 @@ def spark_corpus(
         F.xxhash64(F.col("eid"), F.col("k"), F.lit(seed), F.lit(tag)), F.lit(100)
     )
     first_v = (
-        F.when(roll("iv") < initial_variant_pct, F.substring("first", 1, 1))
-        .when(roll("hv") < honorific_pct, F.concat(F.lit("Dr "), F.col("first")))
+        F.when(roll("iv") < 25, F.substring("first", 1, 1))
+        .when(roll("hv") < 10, F.concat(F.lit("Dr "), F.col("first")))
         .otherwise(F.col("first"))
     )
     middle_v = F.when(roll("mv") < 30, F.lit("")).otherwise(F.col("middle"))
-    affil_v = F.when(roll("av") < affil_missing_pct, F.lit("")).otherwise(
-        F.col("affil")
-    )
+    affil_v = F.when(roll("av") < 10, F.lit("")).otherwise(F.col("affil"))
     name = F.trim(
         F.regexp_replace(
             F.concat_ws(" ", first_v, middle_v, F.col("last")), r"\s+", " "
@@ -304,7 +301,7 @@ def spark_corpus(
         *[pick(TITLE_WORDS, doc_key + F.lit(i), f"t{i}") for i in range(4)],
     )
     doc_id = F.format_string(
-        "d%012d", F.col("eid") * (max_docs_per_entity * hot_block_boost) + F.col("k")
+        "d%012d", F.col("eid") * (10 * hot_block_boost) + F.col("k")
     )
     span = lambda kind, text, ref, off: F.struct(  # noqa: E731
         F.lit(kind).alias("kind"),

@@ -30,6 +30,10 @@ from ent_res_feedback_spark.functions.expr import let
 MERSENNE61 = (1 << 61) - 1
 _MULT_BITS = 31
 
+#: winnowing k-gram length and window, shared by the Spark expression and
+#: its DuckDB replay
+WINNOW_K, WINNOW_W = 5, 4
+
 
 def token_hash32(col: Column) -> Column:
     """Portable 32-bit hash (first 8 md5 hex digits)."""
@@ -74,18 +78,19 @@ def lsh_band_key_cols(sig: Column, num_bands: int, rows_per_band: int) -> list[C
     return keys
 
 
-def simhash_kernel(token_lists: pd.Series, bits: int = 64) -> pd.Series:
-    """SimHash over token arrays (Arrow-batched numpy kernel): per-token
-    md5-derived bit vectors, summed as +-1 votes, sign -> fingerprint."""
+def simhash_kernel(token_lists: pd.Series) -> pd.Series:
+    """64-bit SimHash over token arrays (Arrow-batched numpy kernel):
+    per-token md5-derived bit vectors, summed as +-1 votes, sign ->
+    fingerprint."""
     import hashlib
 
     out = []
-    masks = np.array([1 << i for i in range(bits)], dtype=np.uint64)
+    masks = np.array([1 << i for i in range(64)], dtype=np.uint64)
     for toks in token_lists:
         if toks is None or len(toks) == 0:
             out.append(None)
             continue
-        votes = np.zeros(bits, dtype=np.int64)
+        votes = np.zeros(64, dtype=np.int64)
         for t in set(toks):
             h = int.from_bytes(hashlib.md5(t.encode()).digest()[:8], "big")
             bitsvec = (np.uint64(h) & masks) != 0
@@ -107,13 +112,12 @@ def doc_fingerprint(text_col: Column) -> Column:
     return F.md5(text_col)
 
 
-def winnowing_fingerprints(
-    text_col: Column, k: int = 5, w: int = 4
-) -> Column:
+def winnowing_fingerprints(text_col: Column) -> Column:
     """Rolling-hash document fingerprints by winnowing (Schleimer, Wilkerson
     & Aiken, "Winnowing: Local Algorithms for Document Fingerprinting",
-    SIGMOD'03): hash every char k-gram, slide a window of ``w`` hashes,
-    select each window's minimum, return the sorted distinct selections.
+    SIGMOD'03): hash every char k-gram (k = ``WINNOW_K``), slide a window
+    of ``WINNOW_W`` hashes, select each window's minimum, return the sorted
+    distinct selections.
     Edit-robust: a local change perturbs only nearby windows, so most
     fingerprints survive — unlike ``doc_fingerprint``'s all-or-nothing md5.
 
@@ -131,6 +135,7 @@ def winnowing_fingerprints(
     passes per row — measured 53s for 5k docs at sf0.1); the gram array
     likewise must not be re-hashed per window. Round-6: 53s -> sub-second,
     values unchanged."""
+    k, w = WINNOW_K, WINNOW_W
     empty = F.array().cast("array<long>")
 
     def select_mins(g):
@@ -162,16 +167,16 @@ def winnowing_fingerprints(
     return let(text_col, fingerprints_of)
 
 
-def sql_winnowing_query(
-    text_sql: str, table: str = "documents", k: int = 5, w: int = 4
-) -> str:
+def sql_winnowing_query(text_sql: str) -> str:
     """DuckDB replay of ``winnowing_fingerprints`` over a varchar SQL
-    expression: same md5-derived hashes, same window-min selection. A full
+    expression on ``documents``: same md5-derived hashes, same window-min
+    selection. A full
     query (CTE) rather than one expression so the gram list is computed
     ONCE per row — inlining it into the per-window lambda would redo every
     k-gram md5 per window."""
+    k, w = WINNOW_K, WINNOW_W
     return f"""
-WITH d AS (SELECT doc_id, {text_sql} AS t FROM {table}),
+WITH d AS (SELECT doc_id, {text_sql} AS t FROM documents),
 g AS (
   SELECT doc_id,
          list_transform(range(1, greatest(length(t) - {k - 1}, 0) + 1),

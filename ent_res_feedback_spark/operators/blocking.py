@@ -80,10 +80,10 @@ def materialize_census(
     return BlockCensus(frame, int(vals["max"] or 0), int(vals["pairs"] or 0))
 
 
-def tokenize(col, pattern: str = r"\s+"):
-    """Distinct non-empty tokens of a text column (JVM-side)."""
+def tokenize(col):
+    """Distinct non-empty whitespace tokens of a text column (JVM-side)."""
     return F.array_distinct(
-        F.filter(F.split(col, pattern), lambda t: F.length(t) > 0)
+        F.filter(F.split(col, r"\s+"), lambda t: F.length(t) > 0)
     )
 
 
@@ -134,9 +134,9 @@ def minhash_signatures_df(
     units_col,
     num_hashes: int,
     seed: int = 42,
-    out: str = "minhash_sig",
 ) -> DataFrame:
-    """MinHash signatures via explode + hash-once + groupBy(min x k).
+    """MinHash signatures (``minhash_sig``) via explode + hash-once +
+    groupBy(min x k).
 
     The naive nested column expression (array of k transform/array_min
     passes over an md5-hashed token array) re-evaluates the token hashing
@@ -158,7 +158,8 @@ def minhash_signatures_df(
     ]
     sig = hashed.groupBy(id_col).agg(*aggs)
     return sig.select(
-        id_col, F.array(*[F.col(f"_mh{i}") for i in range(num_hashes)]).alias(out)
+        id_col,
+        F.array(*[F.col(f"_mh{i}") for i in range(num_hashes)]).alias("minhash_sig"),
     )
 
 
@@ -168,15 +169,14 @@ def add_minhash_band_keys(
     num_bands: int = 4,
     rows_per_band: int = 4,
     seed: int = 42,
-    out: str = "band_key",
     shingle_n: int | None = None,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """B4 — MinHash-LSH blocking keys (north-star blocking).
 
     word-shingles (or tokens) -> portable md5 minhash signature via the
     explode+agg path (see minhash_signatures_df) -> ``num_bands`` band
-    keys -> explode so each doc lands in one candidate bucket per band.
+    keys (``band_key``) -> explode so each doc (``doc_id``) lands in one
+    candidate bucket per band.
     Downstream all-pairs within a band key is the LSH candidate set;
     dedup across bands with the canonical (sid1<sid2) + distinct.
     """
@@ -185,35 +185,35 @@ def add_minhash_band_keys(
         # shingle transform (word_shingles_from_tokens docstring — the
         # inline form re-evaluates the split per element access)
         units_df = df.select(
-            id_col, split_tokens(F.col(text_col)).alias("_toks")
+            "doc_id", split_tokens(F.col(text_col)).alias("_toks")
         ).select(
-            id_col,
+            "doc_id",
             word_shingles_from_tokens(F.col("_toks"), shingle_n).alias(
                 "_units"
             ),
         )
     else:
         units_df = df.select(
-            id_col, tokenize(F.col(text_col)).alias("_units")
+            "doc_id", tokenize(F.col(text_col)).alias("_units")
         )
     sigs = minhash_signatures_df(
         units_df,
-        id_col,
+        "doc_id",
         F.col("_units"),
         num_bands * rows_per_band,
         seed,
     )
     bands = sigs.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.array(
                 *hashing.lsh_band_key_cols(
                     F.col("minhash_sig"), num_bands, rows_per_band
                 )
             )
-        ).alias(out),
+        ).alias("band_key"),
     )
-    return df.join(bands, id_col)
+    return df.join(bands, "doc_id")
 
 
 def hot_blocks(

@@ -19,8 +19,8 @@ DataFrame lineage (no exponential plan growth) and provides exact resume:
 killing the job mid-iteration and re-running reproduces identical
 clusters, which tests/test_cc.py asserts.
 
-Once an edge set is bounded — at most ``finish_edge_threshold`` edges
-(5M by default) — the components are finished on the driver instead:
+Once an edge set is bounded — at most ``FINISH_EDGE_THRESHOLD`` edges
+(5M) — the components are finished on the driver instead:
 the edges are collected with ``toArrow()``, solved by a vectorized
 union-find, and returned as local data (``createDataFrame``), with no
 Python worker task. The bound comes either from a count (the input or a
@@ -221,7 +221,7 @@ def _min_label(a, b, n: int):
 
 def _finish_on_driver(edges: DataFrame) -> DataFrame:
     """Exact CC of an edge frame known to be SMALL (at most
-    ``finish_edge_threshold`` edges), solved on the driver.
+    ``FINISH_EDGE_THRESHOLD`` edges), solved on the driver.
 
     The edges are collected with ``toArrow()``. Both id columns are
     dictionary-encoded together and the dictionary is sorted, so the
@@ -237,7 +237,7 @@ def _finish_on_driver(edges: DataFrame) -> DataFrame:
     collected ids, a 16-byte combined copy, 8 of int32 codes, ~16 of
     kernel temporaries, plus the per-node dictionary and labels), and
     resident memory grows by ~130 bytes per edge once the allocator's
-    slack is counted — ~0.65 GB at the 5M-edge default threshold. String
+    slack is counted — ~0.65 GB at the 5M-edge threshold. String
     ids add their bytes twice (collected and combined).
     """
     import numpy as np
@@ -279,11 +279,14 @@ def _finish_on_driver(edges: DataFrame) -> DataFrame:
 #: loop converges in O(log^2 n) rounds (O(log n) in practice)
 MAX_ITERATIONS = 50
 
+#: edge count at or below which ``connected_components`` finishes on the
+#: driver; ``None`` never finishes there (pure star loop)
+FINISH_EDGE_THRESHOLD: int | None = 5_000_000
+
 
 def connected_components(
     edges: DataFrame,
     checkpoint_dir: str | None = None,
-    finish_edge_threshold: int | None = 5_000_000,
     edge_bound: int | None = None,
 ) -> DataFrame:
     """Compute connected components of an undirected edge list
@@ -302,12 +305,12 @@ def connected_components(
     the convergence checksum rides that round's checkpoint action as an
     Observation — one job per round, not two.
 
-    ``finish_edge_threshold`` (round-6): once the current edge set —
+    ``FINISH_EDGE_THRESHOLD`` (round-6): once the current edge set —
     input or any super-step survivor — is at or below this count, the
     remaining components are solved exactly on the driver
     (``_finish_on_driver``: the edges are collected with ``toArrow()``;
     ~130 bytes of driver memory per long-id edge at peak, ~0.65 GB at the
-    5M default) instead of iterating more star rounds. Star rounds
+    5M threshold) instead of iterating more star rounds. Star rounds
     preserve the node set and component structure, so the result is
     identical at whatever point the switch happens (property-tested);
     what changes is the cost model — the star loop's per-super-step
@@ -315,12 +318,12 @@ def connected_components(
     once the data no longer does (the measured ~60s scaling-protocol
     tail, BENCH/ANALYSIS.md). The threshold is data-sized, not
     cluster-sized: a 10^12-edge graph still iterates star rounds until
-    the survivor set is bounded, then finishes. ``None`` disables.
+    the survivor set is bounded, then finishes.
 
     ``edge_bound``: an upper bound on the edge count known before any
     action — ``run_pipeline`` passes its block census's within-block
     pair count, since every edge is a within-block pair. At or below
-    ``finish_edge_threshold`` the input is neither materialized nor
+    ``FINISH_EDGE_THRESHOLD`` the input is neither materialized nor
     deduplicated, and the store is neither read nor written: the edges
     go straight to the driver finish, so a re-run recomputes them. Above
     it (or without a bound) the input is materialized first — written to
@@ -338,9 +341,9 @@ def connected_components(
     # property-tested in tests/test_cc.py).
     def _small_enough(n: int | None) -> bool:
         return (
-            finish_edge_threshold is not None
+            FINISH_EDGE_THRESHOLD is not None
             and n is not None
-            and n <= finish_edge_threshold
+            and n <= FINISH_EDGE_THRESHOLD
         )
 
     # id type is generic (string or numeric) — the algorithm only needs a
@@ -445,13 +448,10 @@ def threshold_sweep_components(
     scored_pairs: DataFrame,
     taus: list[float],
     nodes: DataFrame,
-    block_col: str = "block_key",
-    id_cols: tuple[str, str] = ("doc_id_1", "doc_id_2"),
-    score_col: str = "score",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """CL4/CL9 sweep — connected components at EVERY threshold in
-    ``taus`` from ONE pass -> (tau, doc_id, cluster_id), cluster_id =
+    ``taus`` from ONE pass over ``scored_pairs`` (block_key, doc_id_1,
+    doc_id_2, score) -> (tau, doc_id, cluster_id), cluster_id =
     the component's minimum doc_id (identical labeling to
     ``connected_components`` + ``components_with_singletons``).
 
@@ -473,13 +473,14 @@ def threshold_sweep_components(
     import numpy as np
     import pandas as pd
 
-    id1, id2 = id_cols
     taus_desc = sorted({float(t) for t in taus}, reverse=True)
-    out_schema = f"tau double, {id_col} long, cluster_id long"
+    out_schema = "tau double, doc_id long, cluster_id long"
 
     def one_block(key, pdf: pd.DataFrame) -> pd.DataFrame:
         ids = np.unique(
-            np.concatenate([pdf[id1].to_numpy(), pdf[id2].to_numpy()])
+            np.concatenate(
+                [pdf["doc_id_1"].to_numpy(), pdf["doc_id_2"].to_numpy()]
+            )
         )
         pos = {int(x): i for i, x in enumerate(ids)}
         n = len(ids)
@@ -491,10 +492,10 @@ def threshold_sweep_components(
                 x = parent[x]
             return x
 
-        order = pdf.sort_values(score_col, ascending=False)
-        e1 = order[id1].to_numpy()
-        e2 = order[id2].to_numpy()
-        sc = order[score_col].to_numpy()
+        order = pdf.sort_values("score", ascending=False)
+        e1 = order["doc_id_1"].to_numpy()
+        e2 = order["doc_id_2"].to_numpy()
+        sc = order["score"].to_numpy()
         frames = []
         ptr = 0
         for tau in taus_desc:
@@ -509,7 +510,7 @@ def threshold_sweep_components(
             # member of each root group is ids[min index with that root]
             lab = pd.Series(ids).groupby(roots).transform("min").to_numpy()
             frames.append(
-                pd.DataFrame({"tau": np.full(n, tau), id_col: ids,
+                pd.DataFrame({"tau": np.full(n, tau), "doc_id": ids,
                               "cluster_id": lab})
             )
         return pd.concat(frames, ignore_index=True)
@@ -520,23 +521,23 @@ def threshold_sweep_components(
     # localCheckpoint materializes the O(pairs) projection once (the
     # same order of bytes the block shuffle moves next).
     slim = scored_pairs.select(
-        block_col, id1, id2, score_col
+        "block_key", "doc_id_1", "doc_id_2", "score"
     ).localCheckpoint()
-    in_pairs = slim.groupBy(block_col).applyInPandas(one_block, out_schema)
+    in_pairs = slim.groupBy("block_key").applyInPandas(one_block, out_schema)
     # pair membership from the CHEAP pair frame, not from in_pairs —
     # referencing in_pairs twice would run the sweep kernel twice
     pair_docs = (
-        slim.select(F.col(id1).alias(id_col))
-        .union(slim.select(F.col(id2).alias(id_col)))
+        slim.select(F.col("doc_id_1").alias("doc_id"))
+        .union(slim.select(F.col("doc_id_2").alias("doc_id")))
         .distinct()
     )
     lone = (
-        nodes.select(id_col)
-        .join(pair_docs, id_col, "left_anti")
+        nodes.select("doc_id")
+        .join(pair_docs, "doc_id", "left_anti")
         .select(
             F.explode(F.array(*[F.lit(t) for t in taus_desc])).alias("tau"),
-            F.col(id_col),
-            F.col(id_col).alias("cluster_id"),
+            F.col("doc_id"),
+            F.col("doc_id").alias("cluster_id"),
         )
     )
-    return in_pairs.unionByName(lone.select("tau", id_col, "cluster_id"))
+    return in_pairs.unionByName(lone.select("tau", "doc_id", "cluster_id"))

@@ -29,18 +29,17 @@ def normalized_fingerprint(text_col: Column) -> Column:
     return hashing.doc_fingerprint(normalize_text_ascii(text_col))
 
 
-def exact_duplicates(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact dedup via hash-groupBy: one row per duplicate GROUP (size>1)
-    with the survivor (min id) and the group size."""
+def exact_duplicates(docs: DataFrame) -> DataFrame:
+    """Exact dedup of ``docs`` (doc_id, text) via hash-groupBy: one row
+    per duplicate GROUP (size>1) with the survivor (min id) and the group
+    size."""
     fp = docs.select(
-        F.col(id_col), normalized_fingerprint(F.col(text_col)).alias("fingerprint")
+        F.col("doc_id"), normalized_fingerprint(F.col("text")).alias("fingerprint")
     )
     return (
         fp.groupBy("fingerprint")
         .agg(
-            F.min(id_col).alias("survivor_id"),
+            F.min("doc_id").alias("survivor_id"),
             F.count(F.lit(1)).alias("group_size"),
         )
         .where(F.col("group_size") > 1)
@@ -49,27 +48,26 @@ def exact_duplicates(
 
 def minhash_lsh_duplicates(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_bands: int = 4,
     rows_per_band: int = 4,
     verify_threshold: float = 0.5,
     seed: int = 42,
     shingle_n: int = 3,
 ) -> DataFrame:
-    """MinHash-LSH near-dup detection: word-shingle -> minhash -> band ->
-    bucket self-join -> verify with true shingle jaccard. Emits verified
-    pairs (id1, id2, jaccard). The band join is the only wide stage; LSH
+    """MinHash-LSH near-dup detection over ``docs`` (doc_id, text):
+    word-shingle -> minhash -> band -> bucket self-join -> verify with
+    true shingle jaccard. Emits verified pairs (doc_id_1, doc_id_2,
+    jaccard). The band join is the only wide stage; LSH
     over n-gram shingles bounds candidate counts even on low-cardinality
     vocabularies where unigram token sets would all collide."""
-    norm = normalize_text_ascii(F.col(text_col))
+    norm = normalize_text_ascii(F.col("text"))
     # two-step projection: tokens materialized before the shingle
     # transform (see word_shingles_from_tokens) — the inline form
     # re-evaluated the split per element and dominated this operator
-    slim = docs.select(F.col(id_col), norm.alias("_norm")).select(
-        F.col(id_col), "_norm", split_tokens(F.col("_norm")).alias("_toks")
+    slim = docs.select(F.col("doc_id"), norm.alias("_norm")).select(
+        F.col("doc_id"), "_norm", split_tokens(F.col("_norm")).alias("_toks")
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         "_norm",
         word_shingles_from_tokens(F.col("_toks"), shingle_n).alias("tokens"),
     )
@@ -83,27 +81,27 @@ def minhash_lsh_duplicates(
     # then re-join each side's shingle set once for verification.
     cand_ids = (
         within_block_pairs(
-            banded.select("band_key", id_col), key="band_key", id_col=id_col
+            banded.select("band_key", "doc_id"), key="band_key"
         )
-        .select(id_col + "_1", id_col + "_2")
+        .select("doc_id_1", "doc_id_2")
         .distinct()
     )
-    tokens = slim.select(F.col(id_col), "tokens")
+    tokens = slim.select(F.col("doc_id"), "tokens")
     cands = cand_ids.join(
         tokens.select(
-            F.col(id_col).alias(id_col + "_1"), F.col("tokens").alias("tokens_1")
+            F.col("doc_id").alias("doc_id_1"), F.col("tokens").alias("tokens_1")
         ),
-        id_col + "_1",
+        "doc_id_1",
     ).join(
         tokens.select(
-            F.col(id_col).alias(id_col + "_2"), F.col("tokens").alias("tokens_2")
+            F.col("doc_id").alias("doc_id_2"), F.col("tokens").alias("tokens_2")
         ),
-        id_col + "_2",
+        "doc_id_2",
     )
     jac = set_jaccard(F.col("tokens_1"), F.col("tokens_2"))
     return (
         cands.withColumn("jaccard", jac)
         .where(F.col("jaccard") >= verify_threshold)
-        .select(id_col + "_1", id_col + "_2", "jaccard")
+        .select("doc_id_1", "doc_id_2", "jaccard")
     )
 

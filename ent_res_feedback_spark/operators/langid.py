@@ -70,21 +70,22 @@ _FUNCTION_WORDS: dict[str, list[str]] = {
 _PROFILE_SIZE = 120
 
 # Reliability thresholds — the single source of truth for both the Spark
-# operator defaults and the DuckDB oracle template (__spark_entry__).
+# operator and the DuckDB oracle template (__spark_entry__).
 DEFAULT_MIN_SCORE = 8.0
 DEFAULT_MIN_MARGIN = 1.0
 
 
-def _build_profile(words: list[str], k: int = _PROFILE_SIZE) -> dict[str, int]:
-    """Trigram profile of the padded word list: weight = k - rank.
-    Deterministic: counts, then (count desc, trigram asc) rank order."""
+def _build_profile(words: list[str]) -> dict[str, int]:
+    """Trigram profile of the padded word list, its top ``_PROFILE_SIZE``
+    trigrams weighted ``_PROFILE_SIZE - rank``. Deterministic: counts,
+    then (count desc, trigram asc) rank order."""
     counts: Counter[str] = Counter()
     for w in words:
         padded = f" {w} "
         for i in range(len(padded) - 2):
             counts[padded[i : i + 3]] += 1
-    ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-    return {tri: k - rank for rank, (tri, _) in enumerate(ranked)}
+    ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:_PROFILE_SIZE]
+    return {tri: _PROFILE_SIZE - rank for rank, (tri, _) in enumerate(ranked)}
 
 
 PROFILES: dict[str, dict[str, int]] = {
@@ -128,16 +129,12 @@ def _lang_score(trigrams: Column, profile: dict[str, int]) -> Column:
     return F.when(n > 0, total.cast("double") / n).otherwise(F.lit(0.0))
 
 
-def detect_language_profile(
-    text: Column,
-    min_score: float = DEFAULT_MIN_SCORE,
-    min_margin: float = DEFAULT_MIN_MARGIN,
-) -> Column:
+def detect_language_profile(text: Column) -> Column:
     """Profile-based language ID -> struct(is_reliable, is_english, lang,
     score). ``lang`` is the arg-max language; reliability requires the
-    winning normalized score >= min_score AND a margin over the runner-up
-    >= min_margin (the ensemble-agreement analog of the reference's
-    fasttext-vs-cld2 check, s2and/text.py:266-309).
+    winning normalized score >= DEFAULT_MIN_SCORE AND a margin over the
+    runner-up >= DEFAULT_MIN_MARGIN (the ensemble-agreement analog of the
+    reference's fasttext-vs-cld2 check, s2and/text.py:266-309).
 
     The trigram array is let-bound (``expr.let``) and the ranked score
     array likewise: each of the 5 per-language scores aggregates over
@@ -162,8 +159,8 @@ def detect_language_profile(
 
     def verdict(ranked):
         best, runner_up = ranked[0], ranked[1]
-        is_reliable = (best["score"] >= min_score) & (
-            (best["score"] - runner_up["score"]) >= min_margin
+        is_reliable = (best["score"] >= DEFAULT_MIN_SCORE) & (
+            (best["score"] - runner_up["score"]) >= DEFAULT_MIN_MARGIN
         )
         lang = F.when(is_reliable, best["lang"]).otherwise(F.lit("un"))
         return F.struct(

@@ -40,9 +40,9 @@ def _text_spans(spans: Column) -> Column:
     )
 
 
-def _strip_honorifics(tokens: Column, rounds: int = 2) -> Column:
-    """Drop up to ``rounds`` leading honorific tokens while more than one
-    token remains (reference normalizes prefixes via NAME_PREFIXES).
+def _strip_honorifics(tokens: Column) -> Column:
+    """Drop up to two leading honorific tokens while more than one token
+    remains (reference normalizes prefixes via NAME_PREFIXES).
 
     Each round's input is let-bound (``expr.let``): the strip ``when``
     references its input 4x, so the unbound form re-evaluated the
@@ -57,7 +57,7 @@ def _strip_honorifics(tokens: Column, rounds: int = 2) -> Column:
         ).otherwise(ts)
 
     out = tokens
-    for _ in range(rounds):
+    for _ in range(2):
         out = let(out, strip_once)
     return out
 

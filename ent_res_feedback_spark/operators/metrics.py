@@ -43,17 +43,15 @@ def pairwise_prf(labeled_pairs: DataFrame, assignments: DataFrame) -> dict:
     }
 
 
-def b3_per_item(
-    pred: DataFrame, gold: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def b3_per_item(pred: DataFrame, gold: DataFrame) -> DataFrame:
     """Per-item B-cubed rows (id, p_i, r_i): precision_i = |P∩G|/|P|,
     recall_i = |P∩G|/|G| — the exact quotients that ``b3`` and
     ``facet_eval`` average. Contingency + size joins only; every join is
     on a cluster key, no pair materialization."""
     from pyspark.sql import Window
 
-    p = pred.select(F.col(id_col).alias("id"), F.col("cluster_id").alias("pc"))
-    g = gold.select(F.col(id_col).alias("id"), F.col("cluster_id").alias("gc"))
+    p = pred.select(F.col("doc_id").alias("id"), F.col("cluster_id").alias("pc"))
+    g = gold.select(F.col("doc_id").alias("id"), F.col("cluster_id").alias("gc"))
     j = p.join(g, "id")
     # Window counts instead of groupBy + join-back: the former shape
     # referenced ``j`` four times, re-running the whole upstream pipeline
@@ -70,18 +68,18 @@ def b3_per_item(
     )
 
 
-def b3(pred: DataFrame, gold: DataFrame, id_col: str = "doc_id") -> dict:
+def b3(pred: DataFrame, gold: DataFrame) -> dict:
     """A1 — B-cubed P/R/F1.
 
-    pred(id, cluster_id), gold(id, cluster_id). For item i with predicted
+    pred(doc_id, cluster_id), gold(doc_id, cluster_id). For item i with predicted
     cluster P and gold cluster G: precision_i = |P∩G|/|P|,
     recall_i = |P∩G|/|G|; metric = mean over items. Expressed as:
     contingency counts n_{pg} (one groupBy), cluster sizes |P|, |G|
     (two groupBys), then sum_{pg} n_{pg} * (n_{pg}/|P|) / N etc. — every
     item in cell (p,g) shares the same per-item value.
     """
-    p = pred.select(F.col(id_col).alias("id"), F.col("cluster_id").alias("pc"))
-    g = gold.select(F.col(id_col).alias("id"), F.col("cluster_id").alias("gc"))
+    p = pred.select(F.col("doc_id").alias("id"), F.col("cluster_id").alias("pc"))
+    g = gold.select(F.col("doc_id").alias("id"), F.col("cluster_id").alias("gc"))
     j = p.join(g, "id")
     cont = j.groupBy("pc", "gc").count().withColumnRenamed("count", "npg")
     psize = j.groupBy("pc").count().withColumnRenamed("count", "np")
@@ -102,16 +100,14 @@ def b3(pred: DataFrame, gold: DataFrame, id_col: str = "doc_id") -> dict:
     return {"precision": precision, "recall": recall, "f1": f1}
 
 
-def cmacro_pairwise_f1(
-    pred: DataFrame, gold: DataFrame, blocks: DataFrame, id_col: str = "doc_id"
-) -> dict:
+def cmacro_pairwise_f1(pred: DataFrame, gold: DataFrame, blocks: DataFrame) -> dict:
     """A3 — pairwise F1 computed per block then macro-averaged (reference
-    eval.py:786-868). ``blocks``: (id, block_key). All per-block P/R/F1
+    eval.py:786-868). ``blocks``: (doc_id, block_key). All per-block P/R/F1
     fall out of one grouped aggregation over the block-qualified
     contingency — no per-block loop."""
-    p = pred.select(F.col(id_col).alias("id"), F.col("cluster_id").alias("pc"))
-    g = gold.select(F.col(id_col).alias("id"), F.col("cluster_id").alias("gc"))
-    b = blocks.select(F.col(id_col).alias("id"), "block_key")
+    p = pred.select(F.col("doc_id").alias("id"), F.col("cluster_id").alias("pc"))
+    g = gold.select(F.col("doc_id").alias("id"), F.col("cluster_id").alias("gc"))
+    b = blocks.select(F.col("doc_id").alias("id"), "block_key")
     j = p.join(g, "id").join(b, "id")
 
     def pairs_by(cols):
@@ -143,12 +139,12 @@ def cmacro_pairwise_f1(
     return {k: float(row[k]) for k in ("precision", "recall", "f1")}
 
 
-def v_measure(pred: DataFrame, gold: DataFrame, id_col: str = "doc_id") -> float:
+def v_measure(pred: DataFrame, gold: DataFrame) -> float:
     """A4 — v-measure (homogeneity/completeness harmonic mean; reference
     uses sklearn v_measure_score, e2e_scripts/evaluate.py:75). Entropies
     from the contingency table via groupBy aggregations."""
-    p = pred.select(F.col(id_col).alias("id"), F.col("cluster_id").alias("pc"))
-    g = gold.select(F.col(id_col).alias("id"), F.col("cluster_id").alias("gc"))
+    p = pred.select(F.col("doc_id").alias("id"), F.col("cluster_id").alias("pc"))
+    g = gold.select(F.col("doc_id").alias("id"), F.col("cluster_id").alias("gc"))
     j = p.join(g, "id")
 
     # Fully distributed: the contingency table NEVER reaches the driver
@@ -187,10 +183,9 @@ def v_measure(pred: DataFrame, gold: DataFrame, id_col: str = "doc_id") -> float
     return 0.0 if hom + com == 0 else 2 * hom * com / (hom + com)
 
 
-def auroc_ap(
-    scored: DataFrame, label_col: str = "label", score_col: str = "score"
-) -> dict:
-    """A5 — AUROC + average precision over a scored, labeled pair frame
+def auroc_ap(scored: DataFrame) -> dict:
+    """A5 — AUROC + average precision over a scored (``score``), labeled
+    (``label``) pair frame
     (reference eval.py:430-607 uses sklearn roc_auc_score /
     average_precision_score on the collected predictions).
 
@@ -206,9 +201,9 @@ def auroc_ap(
     """
     from pyspark.sql import Window
 
-    lab = F.col(label_col).cast("double")
+    lab = F.col("label").cast("double")
     g = (
-        scored.groupBy(F.col(score_col).alias("s"))
+        scored.groupBy(F.col("score").alias("s"))
         .agg(
             F.sum(lab).alias("pos"),
             F.sum(1.0 - lab).alias("neg"),
@@ -251,13 +246,12 @@ def facet_eval(
     gold: DataFrame,
     facets: DataFrame,
     facet_col: str,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """A6 — B3-F1 bucketed by a facet column (reference eval.py:196-427):
     per-item B3 precision/recall from the contingency join, averaged per
     facet bucket. Returns (facet, precision, recall, f1, n)."""
-    fct = facets.select(F.col(id_col).alias("id"), F.col(facet_col).alias("facet"))
-    per_item = b3_per_item(pred, gold, id_col)
+    fct = facets.select(F.col("doc_id").alias("id"), F.col(facet_col).alias("facet"))
+    per_item = b3_per_item(pred, gold)
     out = (
         per_item.join(fct, "id")
         .groupBy("facet")
@@ -275,14 +269,14 @@ def facet_eval(
     return out.select("facet", "precision", "recall", f1.alias("f1"), "n")
 
 
-def pairwise_cluster_prf(pred: DataFrame, gold: DataFrame, id_col: str = "doc_id") -> dict:
+def pairwise_cluster_prf(pred: DataFrame, gold: DataFrame) -> dict:
     """A2 — P/R/F1 over all intra-cluster pairs, counting each item's
     self-pair (the singleton correction of arXiv:1808.04216 used by the
     reference at eval.py:723-783: without it singletons contribute
     nothing). Pair counts via n*(n+1)/2 on cluster sizes; intersection via
     the contingency table — no pair materialization."""
-    p = pred.select(F.col(id_col).alias("id"), F.col("cluster_id").alias("pc"))
-    g = gold.select(F.col(id_col).alias("id"), F.col("cluster_id").alias("gc"))
+    p = pred.select(F.col("doc_id").alias("id"), F.col("cluster_id").alias("pc"))
+    g = gold.select(F.col("doc_id").alias("id"), F.col("cluster_id").alias("gc"))
     j = p.join(g, "id")
 
     # all three pair totals in ONE aggregation job: GROUPING SETS

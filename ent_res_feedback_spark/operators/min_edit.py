@@ -120,11 +120,7 @@ def _min_pair_edit_py(
     return score, steps, n
 
 
-def min_pair_edit(
-    assignments: DataFrame,
-    labeled_pairs: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def min_pair_edit(assignments: DataFrame, labeled_pairs: DataFrame) -> DataFrame:
     """Per-block minimum greedy edit stats.
 
     assignments: (doc_id, cluster_id) predicted clusters.
@@ -137,10 +133,10 @@ def min_pair_edit(
     single-process run is the one-block special case.
     """
     a1 = assignments.select(
-        F.col(id_col).alias("doc_id_1"), F.col("cluster_id").alias("c1")
+        F.col("doc_id").alias("doc_id_1"), F.col("cluster_id").alias("c1")
     )
     a2 = assignments.select(
-        F.col(id_col).alias("doc_id_2"), F.col("cluster_id").alias("c2")
+        F.col("doc_id").alias("doc_id_2"), F.col("cluster_id").alias("c2")
     )
     joined = labeled_pairs.join(a1, "doc_id_1").join(a2, "doc_id_2").select(
         "block_key", "doc_id_1", "doc_id_2", "label", "c1", "c2"

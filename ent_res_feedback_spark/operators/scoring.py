@@ -24,13 +24,12 @@ from ent_res_feedback_spark.oracle import DEFAULT_WEIGHTS
 from ent_res_feedback_spark.operators.features import FEATURE_COLS
 
 
-def logistic_score_col(weights: dict | None = None, feature_cols=None) -> Column:
+def logistic_score_col(weights: dict | None = None) -> Column:
     """score = sigmoid(bias + sum_i w_i * f_i) as a column expression,
     built once per SparkContext and weight vector."""
     w = weights or DEFAULT_WEIGHTS
-    cols = feature_cols or FEATURE_COLS
     return _logistic_score(
-        float(w["bias"]), tuple((c, float(w[c])) for c in cols)
+        float(w["bias"]), tuple((c, float(w[c])) for c in FEATURE_COLS)
     )
 
 
@@ -42,26 +41,13 @@ def _logistic_score(bias: float, terms: tuple) -> Column:
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
 
 
-def score_pairs(
-    features_df: DataFrame,
-    weights: dict | None = None,
-    feature_cols=None,
-    out: str = "score",
-) -> DataFrame:
-    return features_df.withColumn(out, logistic_score_col(weights, feature_cols))
+def score_pairs(features_df: DataFrame, weights: dict | None = None) -> DataFrame:
+    return features_df.withColumn("score", logistic_score_col(weights))
 
 
-def fit_logistic(
-    X: np.ndarray,
-    y: np.ndarray,
-    feature_cols=None,
-    l2: float = 1e-3,
-    lr: float = 0.5,
-    iters: int = 400,
-    sample_weight: np.ndarray | None = None,
-    seed: int = 42,
-) -> dict:
-    """Driver-side logistic regression (batch gradient descent, numpy).
+def fit_logistic(X: np.ndarray, y: np.ndarray, feature_cols=None) -> dict:
+    """Driver-side logistic regression (batch gradient descent, numpy:
+    400 steps of rate 0.5, L2 1e-3, seeded start).
 
     Used by the feedback loop to re-weight scoring from labeled pairs
     (SURVEY.md FB3: 'fold labels in, reweight logistic, re-cluster').
@@ -72,19 +58,17 @@ def fit_logistic(
     y = np.asarray(y, dtype=np.float64)
     n, d = X.shape
     assert d == len(cols)
-    sw = np.ones(n) if sample_weight is None else np.asarray(sample_weight, float)
-    sw = sw / sw.sum() * n
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     w = rng.normal(0, 0.01, d)
     b = 0.0
-    for _ in range(iters):
+    for _ in range(400):
         z = X @ w + b
         p = 1.0 / (1.0 + np.exp(-np.clip(z, -30, 30)))
-        g = (p - y) * sw
-        gw = X.T @ g / n + l2 * w
+        g = p - y
+        gw = X.T @ g / n + 1e-3 * w
         gb = g.mean()
-        w -= lr * gw
-        b -= lr * gb
+        w -= 0.5 * gw
+        b -= 0.5 * gb
     out = {c: float(wi) for c, wi in zip(cols, w)}
     out["bias"] = float(b)
     return out
@@ -94,18 +78,16 @@ def collect_training_sample(
     features_df: DataFrame,
     label_col: str,
     feature_cols=None,
-    max_rows: int = 100_000,
-    seed: int = 42,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Seeded sample of labeled pairs -> numpy (X, y) on the driver.
-    Mirrors the reference's 100k-pair training scale
+    """Seeded sample of at most ~100k labeled pairs -> numpy (X, y) on
+    the driver. Mirrors the reference's 100k-pair training scale
     (preprocess_s2and_data.py:34-39)."""
     cols = list(feature_cols or FEATURE_COLS)
     labeled = features_df.where(F.col(label_col).isNotNull())
     n = labeled.count()
-    frac = min(1.0, max_rows / max(n, 1))
+    frac = min(1.0, 100_000 / max(n, 1))
     pdf = (
-        labeled.sample(fraction=frac, seed=seed)
+        labeled.sample(fraction=frac, seed=42)
         .select(*cols, label_col)
         .toPandas()
     )

@@ -19,25 +19,18 @@ from pyspark.sql import functions as F
 from ent_res_feedback_spark.functions.vectors import cosine_sim
 
 
-def brute_force_topk(
-    embeddings: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Exact k-NN join of the table to itself: (id, neighbor_id, cosine),
-    top-k per id. Quadratic — the correctness baseline and the small-dim
-    case (broadcast one side when it fits)."""
+def brute_force_topk(embeddings: DataFrame, k: int = 5) -> DataFrame:
+    """Exact k-NN join of the table (vec_id, embedding) to itself, self
+    pairs excluded: (id, neighbor_id, cosine), top-k per id. Quadratic —
+    the correctness baseline and the small-dim case (broadcast one side
+    when it fits)."""
     a = embeddings.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("va")
+        F.col("vec_id").alias("id"), F.col("embedding").alias("va")
     )
     b = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("vb")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("vb")
     )
-    joined = a.crossJoin(b)
-    if exclude_self:
-        joined = joined.where(F.col("id") != F.col("neighbor_id"))
+    joined = a.crossJoin(b).where(F.col("id") != F.col("neighbor_id"))
     scored = joined.select(
         "id",
         "neighbor_id",
@@ -58,7 +51,6 @@ def hyperplane_lsh_buckets(
     num_planes: int = 12,
     dim: int = 64,
     seed: int = 42,
-    vec_col: str = "embedding",
     out: str = "lsh_bucket",
 ) -> DataFrame:
     """Random-hyperplane (sign) LSH bucket id per vector: sign pattern of
@@ -67,7 +59,7 @@ def hyperplane_lsh_buckets(
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((num_planes, dim))
     bucket = F.lit(0).cast("long")
-    vec = F.col(vec_col)
+    vec = F.col("embedding")
     for i in range(num_planes):
         dot = F.aggregate(
             F.zip_with(
@@ -89,8 +81,6 @@ def ann_topk_lsh(
     num_tables: int = 8,
     dim: int = 64,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate k-NN via MULTI-TABLE hyperplane LSH: ``num_tables``
     independent sign-hash tables of ``num_planes`` planes each; candidate
@@ -102,9 +92,7 @@ def ann_topk_lsh(
     join), more tables = recovered recall. The per-table bucket join is
     the only wide stage; candidates stay ~linear instead of the cross
     join's quadratic."""
-    cands = _lsh_candidate_ids(
-        embeddings, num_planes, num_tables, dim, seed, id_col, vec_col
-    )
+    cands = _lsh_candidate_ids(embeddings, num_planes, num_tables, dim, seed)
     # Score each UNORDERED candidate pair once, then mirror: cosine is
     # bitwise-symmetric (IEEE multiply commutes; the fold order over the
     # zipped products is position-determined), so emitting the mirrored
@@ -114,9 +102,7 @@ def ann_topk_lsh(
     # union's two branches re-running the join+kernel subtree (its cost
     # is O(candidate pairs) — the same order the top-k window shuffles
     # next, so it adds no asymptotic state at scale).
-    half = _join_vectors_and_score(
-        cands, embeddings, id_col, vec_col
-    ).localCheckpoint()
+    half = _join_vectors_and_score(cands, embeddings).localCheckpoint()
     scored = half.union(
         half.select(
             F.col("neighbor_id").alias("id"),
@@ -140,8 +126,6 @@ def _lsh_candidate_ids(
     num_tables: int,
     dim: int,
     seed: int,
-    id_col: str,
-    vec_col: str,
 ) -> DataFrame:
     """Distinct UNORDERED LSH candidate id pairs (id < neighbor_id).
     The dedup shuffles ONLY the id pair — a pair that collides in several
@@ -154,10 +138,10 @@ def _lsh_candidate_ids(
     table_cols = []
     for t in range(num_tables):
         col = f"_lsh_t{t}"
-        b = hyperplane_lsh_buckets(b, num_planes, dim, seed + 1000 * t, vec_col, out=col)
+        b = hyperplane_lsh_buckets(b, num_planes, dim, seed + 1000 * t, out=col)
         table_cols.append(col)
     buckets = b.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.explode(
             F.array(
                 *[
@@ -167,8 +151,8 @@ def _lsh_candidate_ids(
             )
         ).alias("lsh_key"),
     )
-    left = buckets.select("lsh_key", F.col(id_col).alias("id"))
-    right = buckets.select("lsh_key", F.col(id_col).alias("neighbor_id"))
+    left = buckets.select("lsh_key", F.col("vec_id").alias("id"))
+    right = buckets.select("lsh_key", F.col("vec_id").alias("neighbor_id"))
     return (
         left.join(right, "lsh_key")
         .where(F.col("id") < F.col("neighbor_id"))
@@ -177,26 +161,22 @@ def _lsh_candidate_ids(
     )
 
 
-def _join_vectors_and_score(
-    cands: DataFrame, embeddings: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
-    emb = embeddings.select(F.col(id_col), F.col(vec_col))
+def _join_vectors_and_score(cands: DataFrame, embeddings: DataFrame) -> DataFrame:
+    emb = embeddings.select(F.col("vec_id"), F.col("embedding"))
     scored = cands.join(
-        emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("va")), "id"
+        emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("va")), "id"
     ).join(
         emb.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("vb")
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("vb")
         ),
         "neighbor_id",
     )
-    return _cosine_batch(scored, "id", "neighbor_id", "va", "vb")
+    return _cosine_batch(scored)
 
 
-def _cosine_batch(
-    pairs: DataFrame, id1: str, id2: str, v1: str, v2: str,
-    out: str = "cosine",
-) -> DataFrame:
-    """Arrow-batched cosine over joined vector pairs — ONE numpy matrix
+def _cosine_batch(pairs: DataFrame) -> DataFrame:
+    """Arrow-batched cosine of the joined vector pairs (id, neighbor_id,
+    va, vb) -> (id, neighbor_id, cosine) — ONE numpy matrix
     op per batch instead of the interpreted zip_with/aggregate fold per
     row (guide §4.2; measured ~10s of the LSH re-rank at 1M candidates).
 
@@ -210,14 +190,16 @@ def _cosine_batch(
     import pandas as pd
 
     fields = {f.name: f.dataType.simpleString() for f in pairs.schema.fields}
-    out_schema = f"{id1} {fields[id1]}, {id2} {fields[id2]}, {out} double"
+    out_schema = (
+        f"id {fields['id']}, neighbor_id {fields['neighbor_id']}, cosine double"
+    )
 
     def kernel(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            A = np.stack(pdf[v1].to_numpy()).astype(np.float64)
-            B = np.stack(pdf[v2].to_numpy()).astype(np.float64)
+            A = np.stack(pdf["va"].to_numpy()).astype(np.float64)
+            B = np.stack(pdf["vb"].to_numpy()).astype(np.float64)
             dots = np.cumsum(A * B, axis=1)[:, -1]
             na = np.cumsum(A * A, axis=1)[:, -1]
             nb = np.cumsum(B * B, axis=1)[:, -1]
@@ -225,9 +207,13 @@ def _cosine_batch(
             cos = np.where(
                 denom == 0.0, 0.0, dots / np.where(denom == 0.0, 1.0, denom)
             )
-            yield pd.DataFrame({id1: pdf[id1], id2: pdf[id2], out: cos})
+            yield pd.DataFrame(
+                {"id": pdf["id"], "neighbor_id": pdf["neighbor_id"], "cosine": cos}
+            )
 
-    return pairs.select(id1, id2, v1, v2).mapInPandas(kernel, out_schema)
+    return pairs.select("id", "neighbor_id", "va", "vb").mapInPandas(
+        kernel, out_schema
+    )
 
 
 def embedding_cosine_duplicates(
@@ -237,8 +223,6 @@ def embedding_cosine_duplicates(
     num_tables: int = 8,
     dim: int = 64,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: multi-table hyperplane-LSH
     candidates (the scale path — no cross join), exact-cosine verified
@@ -246,13 +230,11 @@ def embedding_cosine_duplicates(
     of ``ann_topk_lsh``: same recall knobs (planes/tables), one wide
     bucket join, O(candidates) verify."""
     # _lsh_candidate_ids is already canonical (id < neighbor_id)
-    cands = _lsh_candidate_ids(
-        embeddings, num_planes, num_tables, dim, seed, id_col, vec_col
-    )
-    scored = _join_vectors_and_score(cands, embeddings, id_col, vec_col)
+    cands = _lsh_candidate_ids(embeddings, num_planes, num_tables, dim, seed)
+    scored = _join_vectors_and_score(cands, embeddings)
     return scored.where(F.col("cosine") >= threshold).select(
-        F.col("id").alias(id_col + "_1"),
-        F.col("neighbor_id").alias(id_col + "_2"),
+        F.col("id").alias("vec_id_1"),
+        F.col("neighbor_id").alias("vec_id_2"),
         "cosine",
     )
 
@@ -264,8 +246,6 @@ def embedding_cosine_duplicates(
 def ivf_centroids(
     embeddings: DataFrame,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[float]]:
     """Deterministic coarse-quantizer codebook: the vectors of the
     ``n_centroids`` ids with the smallest ``md5(id)`` (a seedless,
@@ -276,13 +256,13 @@ def ivf_centroids(
     inlined as literals."""
     rows = (
         embeddings.select(
-            F.md5(F.col(id_col).cast("string")).alias("_h"), F.col(vec_col)
+            F.md5(F.col("vec_id").cast("string")).alias("_h"), F.col("embedding")
         )
         .orderBy("_h")
         .limit(n_centroids)
         .collect()
     )
-    return [[float(x) for x in r[vec_col]] for r in rows]
+    return [[float(x) for x in r["embedding"]] for r in rows]
 
 
 def _centroid_ranking(vec: Column, centroids: list[list[float]]) -> Column:
@@ -305,8 +285,6 @@ def ivf_topk(
     k: int = 5,
     n_centroids: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF approximate k-NN: every vector lives in its nearest-centroid
     cell (the inverted file); every query probes its ``n_probe`` nearest
@@ -316,15 +294,15 @@ def ivf_topk(
 
     -> (id, neighbor_id, cosine, rank), rank 1..k per id.
     """
-    cents = ivf_centroids(embeddings, n_centroids, id_col, vec_col)
-    ranked = _centroid_ranking(F.col(vec_col), cents)
-    base = embeddings.select(F.col(id_col), F.col(vec_col), ranked.alias("_cells"))
+    cents = ivf_centroids(embeddings, n_centroids)
+    ranked = _centroid_ranking(F.col("embedding"), cents)
+    base = embeddings.select(F.col("vec_id"), F.col("embedding"), ranked.alias("_cells"))
     index_side = base.select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         F.col("_cells")[0].alias("_cell"),
     )
     probe_side = base.select(
-        F.col(id_col).alias("id"),
+        F.col("vec_id").alias("id"),
         F.explode(F.slice("_cells", 1, n_probe)).alias("_cell"),
     )
     cands = (
@@ -333,7 +311,7 @@ def ivf_topk(
         .select("id", "neighbor_id")
         .distinct()
     )
-    scored = _join_vectors_and_score(cands, embeddings, id_col, vec_col)
+    scored = _join_vectors_and_score(cands, embeddings)
     w = Window.partitionBy("id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )

@@ -28,11 +28,9 @@ from pyspark.sql import functions as F
 KMEANS_ITERS = 10
 
 
-def kmeans_strata_1d(
-    weighted_sizes: list[tuple[int, int]], k: int, iters: int = KMEANS_ITERS
-) -> dict[int, int]:
-    """Exact-arithmetic 1-D Lloyd over a (size, count) histogram ->
-    {size: 0-based stratum}.
+def kmeans_strata_1d(weighted_sizes: list[tuple[int, int]], k: int) -> dict[int, int]:
+    """Exact-arithmetic 1-D Lloyd (``KMEANS_ITERS`` iterations at most)
+    over a (size, count) histogram -> {size: 0-based stratum}.
 
     Centroids are kept as integer rationals (S, W) = (sum of weighted
     sizes, sum of weights); the only floating-point op is the per-element
@@ -64,7 +62,7 @@ def kmeans_strata_1d(
         return min(range(k), key=lambda j: (abs(s - cents[j][0] / cents[j][1]), j))
 
     assign: dict[int, int] = {}
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         assign = {s: nearest(s) for s in ss}
         new: list[tuple[int, int]] = []
         for j in range(k):
@@ -97,11 +95,9 @@ def _split_col(rn, cnt, ratios: tuple[float, float, float]):
 
 def split_blocks(
     mentions: DataFrame,
-    block_col: str = "block_key",
     k: int = 1,
     seed: int = 1111,
     ratios: tuple[float, float, float] = (0.8, 0.1, 0.1),
-    iters: int = KMEANS_ITERS,
 ) -> DataFrame:
     """Reference `split_blocks_helper` (data.py:908-953) -> one row per
     block: (block_key, block_size, stratum, split).
@@ -114,34 +110,32 @@ def split_blocks(
     nothing keyed on doc ids.
     """
     spark = mentions.sparkSession
-    bs = mentions.groupBy(block_col).agg(F.count("*").alias("block_size"))
+    bs = mentions.groupBy("block_key").agg(F.count("*").alias("block_size"))
     hist = (
         bs.groupBy("block_size")
         .agg(F.count("*").alias("cnt"))
         .collect()  # bounded: one row per distinct block SIZE
     )
-    strata = kmeans_strata_1d(
-        [(r["block_size"], r["cnt"]) for r in hist], k, iters
-    )
+    strata = kmeans_strata_1d([(r["block_size"], r["cnt"]) for r in hist], k)
     map_df = spark.createDataFrame(
         [(int(s), int(j)) for s, j in strata.items()],
         "block_size bigint, stratum int",
     )
     sized = bs.join(F.broadcast(map_df), "block_size")
     order_key = F.md5(
-        F.concat_ws("|", F.lit(str(seed)), F.col(block_col))
+        F.concat_ws("|", F.lit(str(seed)), F.col("block_key"))
     )
-    w_rank = Window.partitionBy("stratum").orderBy(order_key, F.col(block_col))
+    w_rank = Window.partitionBy("stratum").orderBy(order_key, F.col("block_key"))
     w_cnt = Window.partitionBy("stratum")
     ranked = sized.select(
-        F.col(block_col),
+        F.col("block_key"),
         F.col("block_size"),
         F.col("stratum"),
         F.row_number().over(w_rank).alias("rn"),
         F.count("*").over(w_cnt).alias("cnt"),
     )
     return ranked.select(
-        F.col(block_col),
+        F.col("block_key"),
         F.col("block_size"),
         F.col("stratum").cast("bigint").alias("stratum"),
         _split_col(F.col("rn"), F.col("cnt"), ratios).alias("split"),

@@ -37,21 +37,21 @@ def kept_blocks(
     *,
     big_block_cutoff: int = 500,
     top_blocks_to_keep: int = 1000,
-    block_col: str = "block_key",
     dataset_col: str | None = None,
 ) -> DataFrame:
-    """Blocks surviving the cutoff + top-N-by-name rule (steps 1-2).
+    """Blocks (``block_key``) surviving the cutoff + top-N-by-name rule
+    (steps 1-2).
 
     One shuffle (the census groupBy); the window runs over the census —
     one row per distinct block — not over the documents, so it holds at
     100 TB of docs as long as the distinct-block count is table-like.
     """
-    keys = [dataset_col, block_col] if dataset_col else [block_col]
+    keys = [dataset_col, "block_key"] if dataset_col else ["block_key"]
     census = docs.groupBy(*keys).agg(F.count(F.lit(1)).alias("block_size"))
     eligible = census.where(F.col("block_size") <= big_block_cutoff)
     w = Window.partitionBy(
         *( [dataset_col] if dataset_col else [F.lit(1)] )
-    ).orderBy(block_col)
+    ).orderBy("block_key")
     return (
         eligible.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= top_blocks_to_keep)
@@ -65,14 +65,12 @@ def mini_corpus(
     *,
     big_block_cutoff: int = 500,
     top_blocks_to_keep: int = 1000,
-    id_col: str = "doc_id",
-    block_col: str = "block_key",
-    cluster_col: str = "cluster_id",
     dataset_col: str | None = None,
 ) -> DataFrame:
     """Docs of the mini corpus: reference steps 1-4 as joins.
 
-    ``clusters`` maps ``id_col -> cluster_col`` (the gold partition).
+    ``docs`` carry ``doc_id`` and ``block_key``; ``clusters`` maps
+    ``doc_id -> cluster_id`` (the gold partition).
     Returns the kept docs (all input columns) — the signature set
     re-derived from fully-contained clusters, so a doc whose own block
     was dropped still survives if every member of its cluster sits in
@@ -84,32 +82,31 @@ def mini_corpus(
         docs,
         big_block_cutoff=big_block_cutoff,
         top_blocks_to_keep=top_blocks_to_keep,
-        block_col=block_col,
         dataset_col=dataset_col,
     )
-    join_keys = [dataset_col, block_col] if dataset_col else [block_col]
+    join_keys = [dataset_col, "block_key"] if dataset_col else ["block_key"]
     # top_blocks_to_keep bounds the kept-block table -> broadcastable
     in_kept_block = docs.join(
         F.broadcast(blocks), join_keys, "left_semi"
-    ).select(id_col)
+    ).select("doc_id")
 
     # cluster kept iff member count == kept-member count (step 3);
     # both sides aggregate to one row per cluster before comparing.
     membership = clusters.join(
-        in_kept_block.withColumn("_kept", F.lit(1)), id_col, "left"
+        in_kept_block.withColumn("_kept", F.lit(1)), "doc_id", "left"
     )
     full_clusters = (
-        membership.groupBy(cluster_col)
+        membership.groupBy("cluster_id")
         .agg(
             F.count(F.lit(1)).alias("_n"),
             F.count("_kept").alias("_n_kept"),
         )
         .where(F.col("_n") == F.col("_n_kept"))
-        .select(cluster_col)
+        .select("cluster_id")
     )
     # step 4: ids re-derived from the surviving clusters
-    kept_ids = clusters.join(full_clusters, cluster_col, "left_semi").select(
-        id_col
+    kept_ids = clusters.join(full_clusters, "cluster_id", "left_semi").select(
+        "doc_id"
     )
-    return docs.join(kept_ids, id_col, "left_semi")
+    return docs.join(kept_ids, "doc_id", "left_semi")
 

@@ -166,10 +166,9 @@ def constraint_py(first_1: str, first_2: str, last_1: str, last_2: str,
     return None
 
 
-def logistic_score_py(features: dict, weights: dict = DEFAULT_WEIGHTS) -> float:
-    z = weights["bias"] + sum(
-        weights[k] * features[k] for k in features if k in weights
-    )
+def logistic_score_py(features: dict) -> float:
+    w = DEFAULT_WEIGHTS
+    z = w["bias"] + sum(w[k] * features[k] for k in features if k in w)
     return 1.0 / (1.0 + math.exp(-z))
 
 
@@ -226,8 +225,9 @@ def extract_mention_py(doc: dict) -> dict:
     }
 
 
-def cluster_documents_py(documents: list[dict], tau: float = DEFAULT_TAU,
-                         weights: dict = DEFAULT_WEIGHTS) -> dict[str, str]:
+def cluster_documents_py(
+    documents: list[dict], tau: float = DEFAULT_TAU
+) -> dict[str, str]:
     """Full oracle pipeline: doc dicts (corpus.py shape) -> {doc_id:
     cluster_id} where cluster_id = min doc_id of the transitive cluster."""
     mentions = {d["doc_id"]: extract_mention_py(d) for d in documents}
@@ -251,7 +251,7 @@ def cluster_documents_py(documents: list[dict], tau: float = DEFAULT_TAU,
                 feats = name_features_py(m1["first"], m2["first"],
                                          m1["middle"], m2["middle"],
                                          m1["affil"], m2["affil"])
-                if logistic_score_py(feats, weights) >= tau:
+                if logistic_score_py(feats) >= tau:
                     uf.union(ids[i], ids[j])
     return {doc_id: uf.find(doc_id) for doc_id in mentions}
 

@@ -23,7 +23,7 @@ equi-join unless a block exceeds ``salt_threshold``, then the salted
 self-join with the census's hot keys broadcast — and is the lineage
 table, so neither the pair plan nor the lineage write aggregates the
 census again or re-extracts mentions. Its pair count bounds the edges:
-at or below CC's ``finish_edge_threshold`` (5M) the edge plan runs once,
+at or below ``cc.FINISH_EDGE_THRESHOLD`` (5M) the edge plan runs once,
 as a ``toArrow()`` collect into the driver-side union-find, and the
 assignments come back as local data — no edge checkpoint, no ``distinct``
 shuffle, and no Python task in the clusters write. Only a job whose
@@ -198,8 +198,8 @@ def run_pipeline(
 
     clusters: (doc_id, cluster_id, spans) — spans are the SOURCE column,
               selected not rebuilt (span-sequence equality by construction).
-              CC is eager: when the census pair count is at or below CC's
-              ``finish_edge_threshold`` the edges are collected and solved
+              CC is eager: when the census pair count is at or below
+              ``cc.FINISH_EDGE_THRESHOLD`` the edges are collected and solved
               on the driver and the assignments are local data, so the
               clusters plan is the docs joined to them (no Python node)
               and ``checkpoint_dir`` is left untouched; otherwise CC

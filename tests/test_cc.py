@@ -8,6 +8,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from ent_res_feedback_spark.operators import cc
 from ent_res_feedback_spark.operators.cc import (
     CheckpointStore,
     components_with_singletons,
@@ -49,27 +50,24 @@ def _assert_matches_union_find(spark, seed, n, m, **cc_kwargs):
 
 @pytest.mark.parametrize("seed,n,m", [(1, 50, 40), (2, 200, 150), (3, 120, 300)])
 @pytest.mark.parametrize("threshold", [None, 5_000_000, 60])
-def test_cc_matches_union_find(spark, seed, n, m, threshold):
+def test_cc_matches_union_find(spark, monkeypatch, seed, n, m, threshold):
     """All three cost regimes must agree with the union-find oracle:
     threshold=None (pure star loop), 5M (immediate driver finish), and
     60 (star rounds first, early finish once the survivor set shrinks
     below 60 mid-loop) — the early-finish switch point must never change
     the assignment."""
-    _assert_matches_union_find(
-        spark, seed, n, m, finish_edge_threshold=threshold
-    )
+    monkeypatch.setattr(cc, "FINISH_EDGE_THRESHOLD", threshold)
+    _assert_matches_union_find(spark, seed, n, m)
 
 
 @pytest.mark.parametrize("seed,n,m", [(1, 50, 40), (2, 200, 150), (3, 120, 300)])
 @pytest.mark.parametrize("slack", [0, 1000])
-def test_cc_bounded_matches_union_find(spark, seed, n, m, slack):
+def test_cc_bounded_matches_union_find(spark, monkeypatch, seed, n, m, slack):
     """An ``edge_bound`` at or below the threshold finishes on the driver
     without materializing the input; the bound may be loose (``slack``)
     or exact, and the threshold may equal it."""
-    _assert_matches_union_find(
-        spark, seed, n, m, edge_bound=m + slack,
-        finish_edge_threshold=m + slack,
-    )
+    monkeypatch.setattr(cc, "FINISH_EDGE_THRESHOLD", m + slack)
+    _assert_matches_union_find(spark, seed, n, m, edge_bound=m + slack)
 
 
 def test_cc_string_ids(spark):
@@ -79,7 +77,7 @@ def test_cc_string_ids(spark):
     assert got == {"d1": "d1", "d2": "d1", "d3": "d1", "d8": "d8", "d9": "d8"}
 
 
-def test_cc_bounded_string_ids(spark):
+def test_cc_bounded_string_ids(spark, monkeypatch):
     """String ids finish on the driver with the star loop's min-id labels,
     i.e. Spark's string order (bytewise: "Z" < "a" < "z" < "é")."""
     edges = [("d3", "d1"), ("d1", "d2"), ("d9", "d8"), ("é", "z"), ("a", "Z")]
@@ -87,7 +85,8 @@ def test_cc_bounded_string_ids(spark):
     out = connected_components(edf, edge_bound=len(edges))
     assert out.schema["component"].dataType.simpleString() == "string"
     got = {r["id"]: r["component"] for r in out.collect()}
-    star = connected_components(edf, finish_edge_threshold=None)
+    monkeypatch.setattr(cc, "FINISH_EDGE_THRESHOLD", None)
+    star = connected_components(edf)
     assert got == {r["id"]: r["component"] for r in star.collect()}
     assert got == {
         "d1": "d1", "d2": "d1", "d3": "d1", "d8": "d8", "d9": "d8",
@@ -132,7 +131,7 @@ def test_singletons(spark):
     assert got == {"a": "a", "b": "a", "z": "z"}
 
 
-def test_checkpoint_resume_identical(spark, tmp_path):
+def test_checkpoint_resume_identical(spark, tmp_path, monkeypatch):
     """Kill-and-resume: run once with checkpointing, then simulate a crash
     by truncating the manifest to an early iteration and re-running — the
     resumed run must produce identical clusters (exact resume)."""
@@ -141,20 +140,17 @@ def test_checkpoint_resume_identical(spark, tmp_path):
     edf = spark.createDataFrame(edges, "src long, dst long").where("src != dst")
 
     full_dir = str(tmp_path / "full")
-    # finish_edge_threshold=None: exercise the iterative store path (the
+    # FINISH_EDGE_THRESHOLD=None: exercise the iterative store path (the
     # default early-finishes small graphs before any iteration lands)
+    monkeypatch.setattr(cc, "FINISH_EDGE_THRESHOLD", None)
     full = {
         r["id"]: r["component"]
-        for r in connected_components(
-            edf, checkpoint_dir=full_dir, finish_edge_threshold=None
-        ).collect()
+        for r in connected_components(edf, checkpoint_dir=full_dir).collect()
     }
 
     # fresh run, interrupted after iteration 0: keep iter=-1 and iter=0 only
     crash_dir = str(tmp_path / "crash")
-    connected_components(
-        edf, checkpoint_dir=crash_dir, finish_edge_threshold=None
-    )
+    connected_components(edf, checkpoint_dir=crash_dir)
     store = CheckpointStore(spark, crash_dir)
     manifest = store._read_manifest()
     manifest["iterations"] = [it for it in manifest["iterations"] if it["iter"] <= 0]
@@ -165,11 +161,10 @@ def test_checkpoint_resume_identical(spark, tmp_path):
 
     resumed = {
         r["id"]: r["component"]
-        for r in connected_components(
-            edf, checkpoint_dir=crash_dir, finish_edge_threshold=None
-        ).collect()
+        for r in connected_components(edf, checkpoint_dir=crash_dir).collect()
     }
     assert resumed == full
+    monkeypatch.undo()
 
     # and the default config must agree when resuming the same store
     # (early finish from the latest complete iteration)

@@ -1,6 +1,7 @@
 """Incremental assignment (I1): new docs of known entities join the
 existing cluster; docs of brand-new entities become new clusters;
-existing assignments never change, also when known docs are re-delivered."""
+existing assignments never change, also when known docs are re-delivered;
+a new doc averages its distance over the whole cluster."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -84,3 +85,47 @@ def test_redelivered_docs_keep_one_row_and_their_cluster(spark, split):
     assert len(rows) == len(ids)
     for r in rows:
         assert r["cluster_id"] == base_map[r["doc_id"]]
+
+
+def _doc(doc_id, name, affil):
+    return {
+        "doc_id": doc_id,
+        "spans": [
+            ("text", name, None, 0),
+            ("text", affil, None, 1),
+        ],
+    }
+
+
+AFFIL_X = "institute of alpha computing"
+AFFIL_Y = "department of beta physics"
+
+
+@pytest.fixture()
+def claimed(spark):
+    """Claimed cluster C = {'a smith'@X x2, 'alan smith'@Y} — the engine
+    would split it (initial-only vs full first, disjoint affiliations),
+    like the reference's A/Alan claimed profile."""
+    old_docs = [
+        _doc("c0", "a smith", AFFIL_X),
+        _doc("c1", "a smith", AFFIL_X),
+        _doc("c2", "alan smith", AFFIL_Y),
+    ]
+    old_df = corpus_to_spark(spark, old_docs)
+    clusters = spark.createDataFrame(
+        [("c0", "C"), ("c1", "C"), ("c2", "C")], "doc_id string, cluster_id string"
+    )
+    return old_df, clusters
+
+
+def test_unaltered_path_unchanged(spark, claimed):
+    # assignment works directly against the claimed clusters (I1):
+    # 'alan smith'@Y averages its distances over ALL of C (incl. the two
+    # disjoint-affiliation 'a smith'@X members), so the average misses
+    # eps and the doc forms a new cluster.
+    old_df, clusters = claimed
+    new = corpus_to_spark(spark, [_doc("n2", "alan smith", AFFIL_Y)])
+    out = assign_incremental(new, old_df, clusters, ERConfig())
+    got = {r["doc_id"]: r["cluster_id"] for r in out.collect()}
+    assert got["c1"] == "C" and got["c2"] == "C"
+    assert got["n2"] != "C"

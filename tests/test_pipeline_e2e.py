@@ -67,20 +67,22 @@ def test_quality_vs_gold(spark, corpus, spark_result):
     assert b3m["f1"] >= 0.95, b3m
 
 
-def test_census_bounded_cc_matches_star_loop(spark_result):
+def test_census_bounded_cc_matches_star_loop(spark_result, monkeypatch):
     """run_pipeline finishes CC on the driver under its census bound; the
     clusters equal the star loop's (no bound, no early finish) over the
     same edges."""
+    from ent_res_feedback_spark.operators import cc
     from ent_res_feedback_spark.operators.cc import (
         components_with_singletons,
         connected_components,
     )
     from ent_res_feedback_spark.pipeline import tau_edges
 
+    monkeypatch.setattr(cc, "FINISH_EDGE_THRESHOLD", None)
     edges = tau_edges(spark_result["scored"], ERConfig().tau)
     clusters = spark_result["clusters"].select("doc_id", "cluster_id")
     star = components_with_singletons(
-        connected_components(edges, finish_edge_threshold=None),
+        connected_components(edges),
         clusters.select("doc_id"),
         "doc_id",
     )

@@ -2,9 +2,10 @@
 reached by a job, a query or a CLI.
 
 Code that only tests call is dead code that still costs reading, review
-and test time. Both walks (no Spark) start from the entry points — the
-spark-submit jobs, the tools, the benchmark, the driver's queries and
-every module with a ``__main__`` block.
+and test time, and so is an option that only tests set. The three walks
+(no Spark) start from the entry points — the spark-submit jobs, the
+tools, the benchmark, the driver's queries and every module with a
+``__main__`` block.
 
 The module walk follows module imports (top-level and function-local)
 and fails on any package module it does not reach.
@@ -19,6 +20,16 @@ refers by name to a definition it flags. The plan audit
 (``plans/explain_audit.py``) is left out of the function walk: it is a
 check on the plans of the product path, like the tests, not a product
 path itself, so what only it builds is not reached.
+
+The option walk takes each defaulted parameter of each top-level
+package function (plan audit left out, as above) and fails on any that
+no call in the entry points, in ``bench.py --scaling``'s child source
+(``_SCALING_CHILD``, run with ``python -c``) or in package code passes —
+by keyword, by reaching its position, or through ``*``/``**``. A call
+counts when its callee's name equals the function's name. A function
+whose name is used other than as a callee (an alias, a value passed on,
+a memo) may be called with anything, so all its parameters count as
+set. An option never set has one value in use: it is a constant.
 """
 
 import ast
@@ -27,10 +38,7 @@ import os
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "ent_res_feedback_spark"
 
-#: modules allowed to be unreached, with the reason
-EXCEPTIONS = set()
-
-#: the module the function walk neither starts from nor checks
+#: the module the function and option walks neither start from nor check
 AUDIT = "ent_res_feedback_spark.plans.explain_audit"
 
 
@@ -128,10 +136,7 @@ def test_every_package_module_is_reached():
     mods = _package_modules()
     packages = {n for n, p in mods.items() if p.endswith("__init__.py")}
     unreached = set(mods) - packages - _reached(mods)
-    # equality, not subset: an exception that becomes reachable is stale
-    assert unreached == EXCEPTIONS, (
-        f"unreached: {sorted(unreached)}; exceptions: {sorted(EXCEPTIONS)}"
-    )
+    assert unreached == set(), f"unreached: {sorted(unreached)}"
 
 
 def _names(node: ast.AST) -> set[str]:
@@ -178,3 +183,79 @@ def _unreached_defs(mods: dict[str, str]) -> set[tuple[str, str]]:
 def test_every_package_definition_is_reached():
     unreached = _unreached_defs(_package_modules())
     assert unreached == set(), f"unreached: {sorted(unreached)}"
+
+
+def _root_trees(mods: dict[str, str]) -> list[ast.Module]:
+    """The entry points' code outside the package, with the source of
+    ``bench.py --scaling``'s child (``_SCALING_CHILD``, run with
+    ``python -c``)."""
+    trees = [_parse(path) for name, path in _roots(mods) if name not in mods]
+    for node in ast.walk(_parse(os.path.join(REPO, "bench.py"))):
+        if (
+            isinstance(node, ast.Assign)
+            and getattr(node.targets[0], "id", None) == "_SCALING_CHILD"
+        ):
+            trees.append(ast.parse(node.value.value))
+    return trees
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[str, int | None]]:
+    """(name, position or None if keyword-only) of each defaulted
+    parameter."""
+    pos = fn.args.posonlyargs + fn.args.args
+    first = len(pos) - len(fn.args.defaults)
+    out = [(a.arg, i) for i, a in enumerate(pos) if i >= first]
+    out += [
+        (a.arg, None)
+        for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
+        if d is not None
+    ]
+    return out
+
+
+def _unset_options(mods: dict[str, str]) -> set[tuple[str, str, str]]:
+    trees = _root_trees(mods)
+    fns = []
+    for name, path in mods.items():
+        if name == AUDIT:
+            continue
+        tree = _parse(path)
+        trees.append(tree)
+        fns += [(name, n) for n in tree.body if isinstance(n, ast.FunctionDef)]
+    calls: dict[str, list[ast.Call]] = {}
+    callees = set()
+    named = set()
+    for tree in trees:
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                callees.add(id(n.func))
+                callee = getattr(n.func, "id", getattr(n.func, "attr", None))
+                calls.setdefault(callee, []).append(n)
+        named |= {
+            getattr(n, "id", getattr(n, "attr", None))
+            for n in ast.walk(tree)
+            if isinstance(n, (ast.Name, ast.Attribute)) and id(n) not in callees
+        }
+    unset = set()
+    for mod, fn in fns:
+        # a function that is aliased, passed on or stored may be called
+        # with anything
+        if fn.name in named:
+            continue
+        for param, pos in _defaulted(fn):
+            if not any(
+                any(isinstance(a, ast.Starred) for a in call.args)
+                or any(k.arg in (None, param) for k in call.keywords)
+                or (pos is not None and pos < len(call.args))
+                for call in calls.get(fn.name, [])
+            ):
+                unset.add((mod, fn.name, param))
+    return unset
+
+
+def test_every_package_option_is_set():
+    """Every defaulted parameter of a top-level package function is passed
+    by some entry point or package code; one that never is has one value
+    in use and is a constant."""
+    unset = _unset_options(_package_modules())
+    assert unset == set(), f"never set: {sorted(unset)}"
